@@ -26,9 +26,10 @@ uses ``iceberg``; the sandbox has no Iceberg jar, so tests drive the SAME
 code path through Spark's built-in ``spark_catalog`` with parquet managed
 tables (identical writeTo/create/overwritePartitions/read.table calls).
 
-Checkpointing ALSO truncates lineage: iterative DataFrame plans grow per
-superstep and re-reading the materialized state resets the logical plan
-(the engine's analog of ``sc.checkpoint``, but resumable across processes).
+``write_state`` returns the re-read state, whose plan starts fresh. The
+engine's superstep loops do not use it: their eager localCheckpoint has
+already truncated the plan, so they keep their in-memory state and the
+store write is for durability and resume only.
 """
 
 from __future__ import annotations

@@ -46,6 +46,22 @@ from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop
 from credigraph_spark.graph.adjacency import clean_edges, undirected_simple, vertices_from_edges
 from credigraph_spark.graph.pregel import aggregate_messages
 
+# Join side of the per-round vid/label maps (group-min and pointer jump).
+# Graphs up to this many vertices (Leiden refinement parts, sampled
+# incidence graphs) broadcast the maps outright — one small driver collect
+# per round beats any shuffle stage, and the shuffle_hash hint would
+# SUPPRESS that broadcast (A/B: leiden_two_level 12.4-12.7 hinted vs
+# 10.7-11.3 without; at |V|=85k per-round broadcasts measured WORSE than
+# the hinted shuffle — cc_converge 5.2-5.8 vs 3.3-4.4 — so the cut sits at
+# a map that collects in a few tens of ms). Above it the maps take a
+# shuffle_hash hint: the state tables derive from cached joins whose size
+# ESTIMATES are Catalyst products (not data), so the planner would reject
+# shuffled-hash and fall back to SortMergeJoin — a full sort of the
+# |V|-row state EVERY round. The map sides have unique keys (one row per
+# label / vid), so the per-partition hash build is bounded by
+# rows/partition.
+MAP_BROADCAST_MAX_VERTICES = 10_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -129,6 +145,10 @@ def connected_components(
     # the exact bound |V| = every vertex its own label.
     ncomp_est = n
     jump_strategies: list[str] = []
+
+    def _map_side(m):
+        return F.broadcast(m) if n <= MAP_BROADCAST_MAX_VERTICES else m.hint("shuffle_hash")
+
     with loop_tuning(spark, shuffle_n):
         while it < max_iter and not converged:
             t0 = time.time()
@@ -188,23 +208,6 @@ def connected_components(
             # round saved. The fixpoint is unchanged: prev-groups lie
             # inside components and every op is a monotone min, so the
             # converged labels are bit-identical.
-            # shuffle_hash hints below: the state tables derive from cached
-            # joins whose size ESTIMATES are Catalyst products (not data),
-            # so the planner rejects shuffled-hash and falls back to
-            # SortMergeJoin — a full sort of the |V|-row state EVERY round.
-            # The map sides have unique keys (one row per label / vid), so
-            # the per-partition hash build is bounded by rows/partition.
-            # tiny graphs (Leiden refinement parts, sampled incidence
-            # graphs): broadcast the maps outright — one small driver
-            # collect per round beats any shuffle stage, and the
-            # shuffle_hash hint would SUPPRESS that broadcast (A/B:
-            # leiden_two_level 12.4-12.7 hinted vs 10.7-11.3 without;
-            # at |V|=85k per-round broadcasts measured WORSE than the
-            # hinted shuffle — cc_converge 5.2-5.8 vs 3.3-4.4 — so the
-            # cut sits at a map that collects in a few tens of ms)
-            tiny = n <= 10_000
-            def _map_side(m):
-                return F.broadcast(m) if tiny else m.hint("shuffle_hash")
             if it > 0:
                 gm = stepped.groupBy("prev").agg(
                     F.min("component").alias("_gm"))
@@ -277,7 +280,9 @@ def connected_components(
             info["iterations"] = it
 
             if ckpt is not None and (converged or it % checkpoint_every == 0 or it >= max_iter):
-                labels = ckpt.write_state(labels, it - 1)
+                # durability only: the in-memory labels stay (their plan is
+                # already truncated by the eager localCheckpoint)
+                ckpt.write_state(labels, it - 1)
                 ckpt.append_metrics(
                     it - 1,
                     {"algo": "cc", "changed": changed, "rows": n,

@@ -178,7 +178,9 @@ def label_propagation(
             info["iterations"] = it
 
             if ckpt is not None and (converged or it % checkpoint_every == 0 or it >= max_iter):
-                labels = ckpt.write_state(labels, it - 1)
+                # durability only: the in-memory labels stay (their plan is
+                # already truncated by the eager localCheckpoint)
+                ckpt.write_state(labels, it - 1)
                 ckpt.append_metrics(
                     it - 1,
                     {"algo": "lpa", "changed": changed, "rows": n,

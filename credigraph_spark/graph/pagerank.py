@@ -16,6 +16,15 @@ Reference algorithm (pandas, single-threaded): tgrag/algorithms/pagerank.py
 
 Spark-first physical design (NOT a port of the per-node Python loop):
 
+* ONE-ACTION SETUP: a single ``groupBy(vid)`` over the union of src rows
+  (vid, out_weight, 0), dst rows (vid, null, 1) and any user vertex rows
+  (vid, null, 0) yields the vertex table (vid, out_deg, in_deg). One
+  eager localCheckpoint materializes it, and an ``Observation`` on that
+  same job counts the edges, receivers, non-receivers and both dangling
+  populations. Receivers, non-receivers, the per-edge src degree and the
+  dst flags are all filters over that one table. The loop's partition
+  count is sized from the observed edge count before any edge layout is
+  built, and the rest of the setup runs under the loop's tuning;
 * SPARSE state: only vertices with in-edges ("receivers") carry a rank
   row; every non-receiver has the identical analytic rank
   ``base + d*dangling/N``, so that population is one scalar + a count;
@@ -41,8 +50,12 @@ Spark-first physical design (NOT a port of the per-node Python loop):
     (ZERO shuffled rows per superstep) and the L1 join is co-partitioned.
   ``mode="auto"`` picks broadcast when the receiver count is small.
 * per-superstep checkpoints (full vid,rank table) to the CheckpointStore:
-  durable resume + metrics + converged marker (resuming a converged run
-  short-circuits instead of burning an extra superstep).
+  durable resume + metrics + converged marker. Resuming a converged run
+  short-circuits right after the vertex table, before any edge layout
+  is built. The store write is for durability only: the loop keeps its
+  in-memory state, whose plan the eager localCheckpoint has already
+  truncated (a parquet round trip of doubles is exact, so a re-read
+  would change nothing).
 """
 
 from __future__ import annotations
@@ -52,9 +65,8 @@ import time
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.session import (adaptive_partitions, aqe_paused,
-                                      eager_checkpoint, loop_tuning)
-from credigraph_spark.graph.adjacency import clean_edges, out_degrees
+from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning
+from credigraph_spark.graph.adjacency import clean_edges
 
 # ``auto`` mode broadcasts the rank state below this receiver count.
 # Every broadcast relation is materialized ON THE DRIVER each superstep —
@@ -101,10 +113,10 @@ def pagerank(
     unweighted keep-first dedup); null/NaN/non-positive weights are
     dropped. Everything else — dangling handling (uniform 1/N restart),
     sparse state, modes, salting, Observations, checkpoints — is shared
-    with the unweighted path, whose plan is untouched.
+    with the unweighted path: only the vertex table's out_deg (a weight
+    sum instead of a successor count) and the per-edge coefficient differ.
     """
     spark = edges.sparkSession
-    shuffle_n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     if weight_col is not None:
         w = F.col(weight_col).cast("double")
@@ -117,135 +129,66 @@ def pagerank(
         )
         # out_deg carries the TOTAL outgoing weight (the contribution
         # divisor), not the successor count
-        deg = e.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("out_deg"))
+        out_w, no_w = F.col("w"), F.lit(None).cast("double")
     else:
         e = clean_edges(edges)
-        deg = out_degrees(e)
+        out_w, no_w = F.lit(1), F.lit(None).cast("int")
 
-    # receivers (have in-edges) carry sparse state, flagged with
-    # dangling = no out-edges; both sets are static across supersteps.
-    # deg is persisted for the setup's lifetime: it feeds recv_flags,
-    # nonrecv AND the edges_deg join — uncached, each of those re-ran the
-    # full |E|-row degree aggregation (measured ~1 s per extra scan at
-    # bench scale).
-    deg = deg.persist()
-    receivers = e.select(F.col("dst").alias("vid")).distinct()
-    # localCheckpoint (not persist): materialized once, plan truncated, and
-    # the blocks are GC-tied to this function's lifetime — no cached blocks
-    # leak across repeated calls in a long-lived session.
-    recv_flags = (
-        receivers.join(deg, "vid", "left")
-        .select("vid", F.col("out_deg").isNull().alias("dangling"))
-        .repartition(shuffle_n, "vid")
-        .transform(eager_checkpoint)
-    )
-    stats = recv_flags.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("dangling"), 1).otherwise(0)).alias("d"),
-    ).collect()[0]
-    n_recv, n_recv_dangling = stats["n"], stats["d"] or 0
+    # THE vertex table (vid, out_deg, in_deg): out_deg is null for a vertex
+    # without out-edges (dangling), in_deg is 0 for a non-receiver. One
+    # groupBy over src, dst and user-vertex rows; its checkpoint job also
+    # fills every count the setup needs. localCheckpoint (not persist):
+    # the blocks are GC-tied to this call, so nothing leaks across calls
+    # in a long-lived session.
+    rows = (e.select(F.col("src").alias("vid"), out_w.alias("w"), F.lit(0).alias("d"))
+            .unionByName(e.select(F.col("dst").alias("vid"), no_w.alias("w"),
+                                  F.lit(1).alias("d"))))
+    if vertices is not None:
+        rows = rows.unionByName(vertices.select(
+            F.col(vertices.columns[0]).alias("vid"), no_w.alias("w"), F.lit(0).alias("d")))
+    recv, dangling = F.col("in_deg") > 0, F.col("out_deg").isNull()
+    setup_obs = Observation("pr_setup")
+    vt = eager_checkpoint(
+        rows.groupBy("vid").agg(F.sum("w").alias("out_deg"), F.sum("d").alias("in_deg"))
+        .observe(setup_obs,
+                 F.sum("in_deg").alias("n_edges"),
+                 F.count(F.when(recv, 1)).alias("n_recv"),
+                 F.count(F.when(recv & dangling, 1)).alias("n_recv_dangling"),
+                 F.count(F.when(~recv, 1)).alias("m"),
+                 F.count(F.when(~recv & dangling, 1)).alias("m_dangling")))
+    stats = setup_obs.get
+    n_recv, n_recv_dangling = stats["n_recv"], stats["n_recv_dangling"]
+    # every non-receiver from the edge list contributes (has out-edges), so
+    # only user-supplied isolated vertices are non-receiver AND dangling.
+    m, m_dangling = stats["m"], stats["m_dangling"]
 
     if mode == "auto":
         mode = "broadcast" if n_recv <= AUTO_BROADCAST_MAX_RECEIVERS else "shuffle"
     if mode not in ("shuffle", "broadcast"):
         raise ValueError(f"unknown mode: {mode}")
 
-    # non-receivers = contributors (deg keys) and user-supplied extras not
-    # in the receiver set (NOTE: avoids a union+distinct over 2x|E| endpoint
-    # rows — contributors are already the distinct src set). The receiver
-    # side reads the checkpointed recv_flags, not the raw |E|-row distinct.
-    recv_vids = recv_flags.select("vid")
-    nonrecv = deg.select("vid").join(recv_vids, "vid", "left_anti")
-    extra_isolated = None
-    if vertices is not None:
-        extra = vertices.select(F.col(vertices.columns[0]).alias("vid")).distinct()
-        extra_nonrecv = extra.join(recv_vids, "vid", "left_anti")
-        nonrecv = nonrecv.unionByName(extra_nonrecv).distinct()
-        extra_isolated = extra_nonrecv.join(deg.select("vid"), "vid", "left_anti")
-    nonrecv = nonrecv.transform(eager_checkpoint)
-    m = nonrecv.count()
-    # every non-receiver from the edge list contributes (has out-edges), so
-    # only user-supplied isolated vertices are non-receiver AND dangling.
-    m_dangling = extra_isolated.count() if extra_isolated is not None else 0
-
     n = n_recv + m
     info: dict = {
         "n_vertices": n, "n_receivers": n_recv, "n_nonreceivers": m,
-        "n_dangling": n_recv_dangling + m_dangling, "mode": mode,
-        "iterations": 0, "converged": n <= 0, "l1_history": [],
+        "n_dangling": n_recv_dangling + m_dangling, "n_edges": stats["n_edges"] or 0,
+        "mode": mode, "iterations": 0, "converged": n <= 0, "l1_history": [],
     }
     if n == 0:
-        return recv_flags.select("vid", F.lit(0.0).alias("rank")), info
+        return vt.select("vid", F.lit(0.0).alias("rank")), info
+    if ckpt is not None and resume:
+        done = ckpt.converged_iteration()
+        if done is not None:
+            # already-converged run: return the converged state verbatim —
+            # an extra superstep would drift the result by < tol — before
+            # any edge layout is built.
+            info.update(iterations=done + 1, converged=True, resumed_from=done)
+            return ckpt.read_state(spark, done), info
 
-    # static per-edge flags: contribution sink is a dangling receiver
-    # (feeds the observed dangling-mass sum), and - in shuffle mode -
-    # whether the dst is HOT (gets a real salt).
-    dang_dsts = recv_flags.where("dangling").select(F.col("vid").alias("dst"))
-    edges_deg = (
-        e.join(deg.withColumnRenamed("vid", "src"), "src")
-        .join(F.broadcast(dang_dsts.withColumn("dst_dangling", F.lit(True))), "dst", "left")
-        .withColumn("dst_dangling", F.coalesce("dst_dangling", F.lit(False)))
-    )
-    if mode == "shuffle" and salt_buckets > 0:
-        hot = (
-            e.groupBy("dst").agg(F.count("*").alias("in_deg"))
-            .where(F.col("in_deg") > hot_threshold)
-            .select("dst", F.lit(True).alias("is_hot"))
-        )
-        edges_deg = edges_deg.join(F.broadcast(hot), "dst", "left").withColumn(
-            "is_hot", F.coalesce("is_hot", F.lit(False))
-        )
-    # broadcast mode partitions edges by dst so the contribution
-    # aggregation is partition-local (no shuffle at all per superstep).
-    part_key = "dst" if mode == "broadcast" else "src"
-    # measure the edge count first, then size the loop partitioning from
-    # it (scale-adaptive) unless the caller pinned num_partitions
-    edges_deg0 = edges_deg.persist()
-    info["n_edges"] = edges_deg0.count()
-    if num_partitions is None:
-        shuffle_n = adaptive_partitions(info["n_edges"])
-    edges_deg = edges_deg0.repartition(shuffle_n, part_key).persist()
-    edges_deg.count()
-    edges_deg0.unpersist()
-    deg.unpersist()
+    shuffle_n = num_partitions or adaptive_partitions(info["n_edges"])
     base = (1.0 - damping) / n
-
-    # STATIC/DYNAMIC SPLIT: a source that is not a receiver never gets
-    # mass, so its rank is the scalar ``default`` in EVERY superstep and
-    # its per-edge contribution is default x a STATIC coefficient. Those
-    # edges are pre-aggregated ONCE into a per-dst coefficient vector
-    # (|receivers| rows) + one dangling scalar, and the superstep scans
-    # only receiver-sourced edges — at bench scale 590k -> 30k rows per
-    # iteration, and at web scale the never-linked-to fringe drops out of
-    # every round. Float effect: the static addends are re-grouped
-    # (default*sum(coef) vs sum(default*coef)), ~1e-16 relative — the
-    # same pair-sum order noise the 8dp output rounding already absorbs
-    # (see q_pagerank_timedecay note).
-    dyn, sv, sd_static = edges_deg, None, 0.0
-    if m > 0:
-        recv_src = recv_flags.select(F.col("vid").alias("src"))
-        if mode == "broadcast":
-            recv_src = F.broadcast(recv_src)
-        else:
-            recv_src = recv_src.hint("shuffle_hash")
-        coef_expr = (F.col("w") / F.col("out_deg")) if weight_col is not None \
-            else (F.lit(1.0) / F.col("out_deg"))
-        # the static dangling scalar rides the sv checkpoint's own job as
-        # an Observation — no separate aggregate action
-        sv_obs = Observation("pr_static_dangling")
-        sv = eager_checkpoint(
-            edges_deg.join(recv_src, "src", "anti")
-            .groupBy("dst")
-            .agg(F.sum(coef_expr).alias("coef"),
-                 F.max("dst_dangling").alias("dst_dangling"))
-            .repartition(shuffle_n, "dst")
-            .observe(sv_obs,
-                     F.sum(F.when(F.col("dst_dangling"), F.col("coef"))
-                           .otherwise(0.0)).alias("sd")))
-        sd_static = sv_obs.get["sd"] or 0.0
-        dyn = edges_deg.join(recv_src, "src", "semi").persist()
-        dyn.count()
-        edges_deg.unpersist()
+    salted = mode == "shuffle" and salt_buckets > 0
+    recv_vids = vt.where(recv).select("vid")
+    nonrecv = vt.where(~recv).select("vid")
 
     def full_rank(sparse: DataFrame, default: float) -> DataFrame:
         out = sparse.select("vid", "rank")
@@ -253,184 +196,223 @@ def pagerank(
             out = out.unionByName(nonrecv.select("vid", F.lit(default).alias("rank")))
         return out
 
-    # -- initial / resumed state ------------------------------------------
-    start_iter = 0
-    sparse = None
-    default = 1.0 / n
-    dangling_sum = info["n_dangling"] * (1.0 / n)  # analytic under uniform init
-    if ckpt is not None and resume:
-        done = ckpt.converged_iteration()
-        if done is not None:
-            # already-converged run: return the converged state verbatim —
-            # an extra superstep would drift the result by < tol.
-            dyn.unpersist()
-            info.update(iterations=done + 1, converged=True, resumed_from=done)
-            return ckpt.read_state(spark, done), info
-        last = ckpt.latest_iteration()
+    with loop_tuning(spark, shuffle_n):
+        # static per-edge columns: the src's out_deg and whether the src is
+        # a receiver (the static/dynamic split below), whether the dst is a
+        # dangling receiver (feeds the observed dangling-mass sum) and -
+        # when salted - whether the dst is HOT (gets a real salt).
+        hot = (F.col("in_deg") > hot_threshold) if salted else F.lit(False)
+        src_side = vt.where(~dangling).select(
+            F.col("vid").alias("src"), "out_deg", recv.alias("src_recv"))
+        dst_flags = vt.where(recv & (dangling | hot)).select(
+            F.col("vid").alias("dst"), dangling.alias("dst_dangling"), hot.alias("is_hot"))
+        # broadcast mode partitions edges by dst so the contribution
+        # aggregation is partition-local (no shuffle at all per superstep).
+        part_key = "dst" if mode == "broadcast" else "src"
+        edges_deg = (
+            e.join(src_side, "src")
+            .join(F.broadcast(dst_flags), "dst", "left")
+            .select(*e.columns, "out_deg", "src_recv",
+                    F.coalesce("dst_dangling", F.lit(False)).alias("dst_dangling"),
+                    F.coalesce("is_hot", F.lit(False)).alias("is_hot"))
+            .repartition(shuffle_n, part_key)
+            .persist()
+        )
+
+        # STATIC/DYNAMIC SPLIT: a source that is not a receiver never gets
+        # mass, so its rank is the scalar ``default`` in EVERY superstep and
+        # its per-edge contribution is default x a STATIC coefficient. Those
+        # edges are pre-aggregated ONCE into a per-dst coefficient vector
+        # (|receivers| rows) + one dangling scalar, and the superstep scans
+        # only receiver-sourced edges — at bench scale 590k -> 30k rows per
+        # iteration, and at web scale the never-linked-to fringe drops out of
+        # every round. Both halves are filters over the one cached layout, so
+        # ``dyn`` keeps its ``part_key`` partitioning. Float effect: the
+        # static addends are re-grouped (default*sum(coef) vs
+        # sum(default*coef)), ~1e-16 relative — the same pair-sum order noise
+        # the 8dp output rounding already absorbs (see q_pagerank_timedecay
+        # note).
+        dyn, sv, sd_static = edges_deg, None, 0.0
+        if m > 0:
+            coef_expr = (F.col("w") / F.col("out_deg")) if weight_col is not None \
+                else (F.lit(1.0) / F.col("out_deg"))
+            # the static dangling scalar rides the sv checkpoint's own job
+            # (which also fills the edges_deg cache) as an Observation
+            sv_obs = Observation("pr_static_dangling")
+            sv = eager_checkpoint(
+                edges_deg.where(~F.col("src_recv"))
+                .groupBy("dst")
+                .agg(F.sum(coef_expr).alias("coef"),
+                     F.max("dst_dangling").alias("dst_dangling"))
+                .repartition(shuffle_n, "dst")
+                .observe(sv_obs,
+                         F.sum(F.when(F.col("dst_dangling"), F.col("coef"))
+                               .otherwise(0.0)).alias("sd")))
+            sd_static = sv_obs.get["sd"] or 0.0
+            dyn = edges_deg.where(F.col("src_recv"))
+
+        # -- initial / resumed state --------------------------------------
+        start_iter = 0
+        sparse = None
+        default = 1.0 / n
+        dangling_sum = info["n_dangling"] * (1.0 / n)  # analytic under uniform init
+        last = ckpt.latest_iteration() if ckpt is not None and resume else None
         if last is not None:
             full = ckpt.read_state(spark, last)
+            # one aggregation: the non-receivers' (shared) rank and the
+            # dangling receivers' rank sum
+            sums = full.join(vt, "vid").agg(
+                F.max(F.when(~recv, F.col("rank"))).alias("default"),
+                F.sum(F.when(recv & dangling, F.col("rank"))).alias("dang"),
+            ).collect()[0]
+            if m > 0:
+                default = sums["default"]
+            dangling_sum = (sums["dang"] or 0.0) + m_dangling * default
+            sparse = (full.join(recv_vids, "vid", "left_semi")
+                      .repartition(shuffle_n, "vid").persist())
+            start_iter = last + 1
+            info["resumed_from"] = last
+        if sparse is None and init_ranks is not None:
+            # warm start: previous ranks where known, 1/N for new receivers.
+            # The seeded state MUST be renormalized to total mass 1: a mass
+            # error has no graph structure to mix it away and decays at
+            # exactly the damping rate (0.85/superstep) — slower than most
+            # graphs' natural convergence, i.e. an unnormalized warm start is
+            # WORSE than cold. One seeding shuffle + one aggregate (the
+            # aggregate also yields the dangling sum, as in resume).
+            # duplicate vids in a user-supplied warm start would duplicate
+            # receiver state rows and double-count mass (ADVICE r3) — collapse
+            # deterministically (max) before the seeding join.
+            init_dedup = init_ranks.groupBy("vid").agg(F.max("rank").alias("rank"))
+            seeded = (
+                vt.where(recv).select("vid", dangling.alias("dangling"))
+                .join(init_dedup, "vid", "left")
+                .select("vid", "dangling",
+                        F.coalesce("rank", F.lit(1.0 / n)).alias("rank"))
+            )
+            sums = seeded.agg(
+                F.sum("rank").alias("total"),
+                F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dang"),
+            ).collect()[0]
+            scale = 1.0 / (sums["total"] + m * default)
             sparse = (
-                full.join(recv_flags.select("vid"), "vid", "left_semi")
+                seeded.select("vid", (F.col("rank") * scale).alias("rank"))
                 .repartition(shuffle_n, "vid")
                 .persist()
             )
-            if m > 0:
-                default = full.join(nonrecv, "vid", "left_semi").select("rank").first()["rank"]
-            recv_dang = (
-                full.join(recv_flags.where("dangling"), "vid", "left_semi")
-                .agg(F.sum("rank")).collect()[0][0] or 0.0
-            )
-            dangling_sum = recv_dang + m_dangling * default
-            start_iter = last + 1
-            info["resumed_from"] = last
-    if sparse is None and init_ranks is not None:
-        # warm start: previous ranks where known, 1/N for new receivers.
-        # The seeded state MUST be renormalized to total mass 1: a mass
-        # error has no graph structure to mix it away and decays at
-        # exactly the damping rate (0.85/superstep) — slower than most
-        # graphs' natural convergence, i.e. an unnormalized warm start is
-        # WORSE than cold. One seeding shuffle + one aggregate (the
-        # aggregate also yields the dangling sum, as in resume).
-        # duplicate vids in a user-supplied warm start would duplicate
-        # receiver state rows and double-count mass (ADVICE r3) — collapse
-        # deterministically (max) before the seeding join.
-        init_dedup = init_ranks.groupBy("vid").agg(F.max("rank").alias("rank"))
-        seeded = (
-            recv_flags.select("vid", "dangling")
-            .join(init_dedup, "vid", "left")
-            .select("vid", "dangling",
-                    F.coalesce("rank", F.lit(1.0 / n)).alias("rank"))
-        )
-        sums = seeded.agg(
-            F.sum("rank").alias("total"),
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dang"),
-        ).collect()[0]
-        scale = 1.0 / (sums["total"] + m * default)
-        sparse = (
-            seeded.select("vid", (F.col("rank") * scale).alias("rank"))
-            .repartition(shuffle_n, "vid")
-            .persist()
-        )
-        default *= scale
-        dangling_sum = sums["dang"] * scale + m_dangling * default
-        info["warm_start"] = True
-    if sparse is None:
-        sparse = recv_flags.select("vid", F.lit(1.0 / n).alias("rank")).persist()
+            default *= scale
+            dangling_sum = sums["dang"] * scale + m_dangling * default
+            info["warm_start"] = True
+        if sparse is None:
+            sparse = (recv_vids.select("vid", F.lit(1.0 / n).alias("rank"))
+                      .repartition(shuffle_n, "vid").persist())
 
-    converged = info["converged"]
-    it = start_iter
-    with loop_tuning(spark, shuffle_n):
+        converged = info["converged"]
+        it = start_iter
         while it < max_iter and not converged:
-            t0 = time.time()
-            rank_by_src = sparse.select(F.col("vid").alias("src"), "rank")
-            if mode == "broadcast":
-                joined = dyn.join(F.broadcast(rank_by_src), "src", "left")
-            else:
-                joined = dyn.join(rank_by_src, "src", "left")
-            if weight_col is not None:
-                c = (F.coalesce(F.col("rank"), F.lit(default))
-                     * F.col("w") / F.col("out_deg")).alias("c")
-            else:
-                c = (F.coalesce(F.col("rank"), F.lit(default)) / F.col("out_deg")).alias("c")
+                t0 = time.time()
+                rank_by_src = sparse.select(F.col("vid").alias("src"), "rank")
+                if mode == "broadcast":
+                    joined = dyn.join(F.broadcast(rank_by_src), "src", "left")
+                else:
+                    joined = dyn.join(rank_by_src, "src", "left")
+                if weight_col is not None:
+                    c = (F.coalesce(F.col("rank"), F.lit(default))
+                         * F.col("w") / F.col("out_deg")).alias("c")
+                else:
+                    c = (F.coalesce(F.col("rank"), F.lit(default)) / F.col("out_deg")).alias("c")
 
-            # the dangling-receiver contribution sum rides along as an
-            # observation on rows the superstep scans anyway — no extra join.
-            obs = Observation(f"pr_dangling_{it}")
-            if mode == "shuffle" and salt_buckets > 0:
-                stream = joined.select(
-                    "dst", c, "dst_dangling",
-                    F.when(F.col("is_hot"), F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
-                    .otherwise(F.lit(0)).alias("_salt"),
-                ).observe(obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
-                                     .otherwise(0.0)).alias("dc"))
-                contribs = (
-                    stream.groupBy("dst", "_salt").agg(F.sum("c").alias("c"))
-                    .groupBy("dst").agg(F.sum("c").alias("contrib"))
-                )
-            else:
-                stream = joined.select("dst", c, "dst_dangling").observe(
-                    obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
-                               .otherwise(0.0)).alias("dc"))
-                contribs = stream.groupBy("dst").agg(F.sum("c").alias("contrib"))
-            if sv is not None:
-                # add the static coefficient vector (dsts fed only by
-                # non-receiver sources appear via the full outer side);
-                # both sides are hash(dst)-partitioned at shuffle_n, so
-                # the join adds no exchange
-                contribs = (
-                    contribs.join(sv.select("dst", "coef")
-                                  .hint("shuffle_hash"), "dst", "full_outer")
-                    .select("dst",
-                            (F.coalesce("contrib", F.lit(0.0))
-                             + F.lit(default) * F.coalesce("coef", F.lit(0.0))
-                             ).alias("contrib"))
-                )
+                # the dangling-receiver contribution sum rides along as an
+                # observation on rows the superstep scans anyway — no extra join.
+                obs = Observation(f"pr_dangling_{it}")
+                if mode == "shuffle" and salt_buckets > 0:
+                    stream = joined.select(
+                        "dst", c, "dst_dangling",
+                        F.when(F.col("is_hot"), F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
+                        .otherwise(F.lit(0)).alias("_salt"),
+                    ).observe(obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
+                                         .otherwise(0.0)).alias("dc"))
+                    contribs = (
+                        stream.groupBy("dst", "_salt").agg(F.sum("c").alias("c"))
+                        .groupBy("dst").agg(F.sum("c").alias("contrib"))
+                    )
+                else:
+                    stream = joined.select("dst", c, "dst_dangling").observe(
+                        obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
+                                   .otherwise(0.0)).alias("dc"))
+                    contribs = stream.groupBy("dst").agg(F.sum("c").alias("contrib"))
+                if sv is not None:
+                    # add the static coefficient vector (dsts fed only by
+                    # non-receiver sources appear via the full outer side);
+                    # both sides are hash(dst)-partitioned at shuffle_n, so
+                    # the join adds no exchange
+                    contribs = (
+                        contribs.join(sv.select("dst", "coef")
+                                      .hint("shuffle_hash"), "dst", "full_outer")
+                        .select("dst",
+                                (F.coalesce("contrib", F.lit(0.0))
+                                 + F.lit(default) * F.coalesce("coef", F.lit(0.0))
+                                 ).alias("contrib"))
+                    )
 
-            default_new = base + damping * (dangling_sum / n)
-            # ONE driver action: the eager localCheckpoint materializes the new
-            # sparse state, truncates the plan (no growth across supersteps),
-            # and fills BOTH observations — the dangling-contribution sum on
-            # the contribution stream and the sparse L1 on the old⋈new join
-            # (receiver sets are identical across supersteps, so the inner
-            # join drops nothing).
-            obs_l1 = Observation(f"pr_l1_{it}")
-            new_sparse = (
-                contribs.select(
-                    F.col("dst").alias("vid"),
-                    (F.lit(base) + F.lit(damping) * (
-                        F.col("contrib") + F.lit(dangling_sum / n)
-                    )).alias("rank"),
+                default_new = base + damping * (dangling_sum / n)
+                # ONE driver action: the eager localCheckpoint materializes the new
+                # sparse state, truncates the plan (no growth across supersteps),
+                # and fills BOTH observations — the dangling-contribution sum on
+                # the contribution stream and the sparse L1 on the old⋈new join
+                # (receiver sets are identical across supersteps, so the inner
+                # join drops nothing).
+                obs_l1 = Observation(f"pr_l1_{it}")
+                new_sparse = (
+                    contribs.select(
+                        F.col("dst").alias("vid"),
+                        (F.lit(base) + F.lit(damping) * (
+                            F.col("contrib") + F.lit(dangling_sum / n)
+                        )).alias("rank"),
+                    )
+                    .join(sparse.select("vid", F.col("rank").alias("prev")), "vid")
+                    .observe(obs_l1, F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"))
+                    .select("vid", "rank")
+                    .transform(eager_checkpoint)
                 )
-                .join(sparse.select("vid", F.col("rank").alias("prev")), "vid")
-                .observe(obs_l1, F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"))
-                .select("vid", "rank")
-                .transform(eager_checkpoint)
-            )
-            l1_sparse = obs_l1.get["l1"] or 0.0
-            dang_contrib = (obs.get["dc"] or 0.0) + default * sd_static
-            l1 = l1_sparse + m * abs(default_new - default)
-            # Σ_{v∈DR} rank_new(v) = |DR|·default_new + d·Σ_{e→DR} c(e)
-            next_dangling = (
-                n_recv_dangling * default_new
-                + damping * dang_contrib
-                + m_dangling * default_new
-            )
-            sparse.unpersist()
-            sparse = new_sparse
-            default = default_new
-            converged = l1 < tol
-            it += 1
-            info["iterations"] = it
-            info["l1_history"].append(l1)
-
-            if ckpt is not None and (converged or it % checkpoint_every == 0 or it >= max_iter):
-                full = ckpt.write_state(full_rank(sparse, default), it - 1)
-                ckpt.append_metrics(
-                    it - 1,
-                    {"algo": "pagerank", "l1_diff": l1, "dangling_mass": dangling_sum,
-                     "wall_ms": (time.time() - t0) * 1e3, "rows": n,
-                     "converged": converged},
+                l1_sparse = obs_l1.get["l1"] or 0.0
+                dang_contrib = (obs.get["dc"] or 0.0) + default * sd_static
+                l1 = l1_sparse + m * abs(default_new - default)
+                # Σ_{v∈DR} rank_new(v) = |DR|·default_new + d·Σ_{e→DR} c(e)
+                next_dangling = (
+                    n_recv_dangling * default_new
+                    + damping * dang_contrib
+                    + m_dangling * default_new
                 )
-                if converged:
-                    ckpt.mark_converged(it - 1)
-                # release the just-localCheckpointed blocks before swapping
-                # in the truncated re-read (else they accumulate until GC)
                 sparse.unpersist()
-                sparse = (
-                    full.join(recv_flags.select("vid"), "vid", "left_semi")
-                    .repartition(shuffle_n, "vid").persist()
-                )
-            dangling_sum = next_dangling
+                sparse = new_sparse
+                default = default_new
+                converged = l1 < tol
+                it += 1
+                info["iterations"] = it
+                info["l1_history"].append(l1)
 
-    info["converged"] = converged
-    # materialize before releasing the caches: full_rank reads the
-    # sparse state cache AND re-derives the non-receiver table from
-    # edges_deg, so the caller's first action would re-run both after
-    # the unpersist (and `sparse` previously leaked its persist)
-    result = full_rank(sparse, default).transform(eager_checkpoint)
-    if sparse is not None:
+                if ckpt is not None and (converged or it % checkpoint_every == 0
+                                         or it >= max_iter):
+                    # durability only: the in-memory state stays, its plan
+                    # already truncated by the eager localCheckpoint
+                    ckpt.write_state(full_rank(sparse, default), it - 1)
+                    ckpt.append_metrics(
+                        it - 1,
+                        {"algo": "pagerank", "l1_diff": l1, "dangling_mass": dangling_sum,
+                         "wall_ms": (time.time() - t0) * 1e3, "rows": n,
+                         "converged": converged},
+                    )
+                    if converged:
+                        ckpt.mark_converged(it - 1)
+                dangling_sum = next_dangling
+
+        info["converged"] = converged
+        # materialize before releasing the caches: the sparse state may
+        # still be the persisted initial/resumed table
+        result = full_rank(sparse, default).transform(eager_checkpoint)
         sparse.unpersist()
-    dyn.unpersist()
+        edges_deg.unpersist()
     return result, info
 
 

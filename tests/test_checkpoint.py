@@ -5,7 +5,8 @@ from __future__ import annotations
 import numpy as np
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.graph import connected_components, pagerank
+from credigraph_spark.graph import connected_components, label_propagation, pagerank
+from credigraph_spark.oracles import pagerank_oracle
 
 from tests.conftest import edges_df
 
@@ -43,6 +44,19 @@ def test_cc_resume(spark, tmp_path):
     assert got == full
 
 
+def test_lpa_resume(spark, tmp_path):
+    full_labels, _ = label_propagation(edges_df(spark, EDGES), max_iter=5)
+    full = {r["vid"]: r["label"] for r in full_labels.collect()}
+
+    ck = CheckpointStore(str(tmp_path / "lpa"), "run1")
+    label_propagation(edges_df(spark, EDGES), max_iter=2, ckpt=ck, checkpoint_every=1)
+    labels2, info2 = label_propagation(edges_df(spark, EDGES), max_iter=5, ckpt=ck,
+                                       checkpoint_every=1)
+    assert info2["resumed_from"] == 1
+    got = {r["vid"]: r["label"] for r in labels2.collect()}
+    assert got == full
+
+
 def test_resume_after_convergence_short_circuits(spark, tmp_path):
     """Resuming a run whose checkpointed state already converged must not
     burn an extra superstep — result identical, zero new checkpoints."""
@@ -59,12 +73,23 @@ def test_resume_after_convergence_short_circuits(spark, tmp_path):
     got2 = {r["vid"]: r["component"] for r in labels2.collect()}
     assert got1 == got2
 
-    # pagerank: same contract
-    ckp = CheckpointStore(str(tmp_path / "pr_conv"), "run1")
-    r1, i1 = pagerank(edges_df(spark, EDGES), max_iter=50, ckpt=ckp)
+
+def test_pagerank_resume_after_convergence_short_circuits(spark, tmp_path):
+    """A converged PageRank resume returns the committed state before any
+    edge layout is built: identical ranks, no new committed iteration, and
+    at most one new cached RDD (the vertex table's checkpoint)."""
+    ck = CheckpointStore(str(tmp_path / "pr_conv"), "run1")
+    r1, i1 = pagerank(edges_df(spark, EDGES), max_iter=50, ckpt=ck)
     assert i1["converged"]
-    r2, i2 = pagerank(edges_df(spark, EDGES), max_iter=50, ckpt=ckp)
-    assert i2["converged"] and "resumed_from" in i2
+    n_states = len(ck.committed_iterations())
+    assert ck.converged_iteration() == i1["iterations"] - 1
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    r2, i2 = pagerank(edges_df(spark, EDGES), max_iter=50, ckpt=ck)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted + 1
+    assert i2["converged"] and i2["resumed_from"] == ck.converged_iteration()
+    assert i2["iterations"] == i1["iterations"] and i2["n_vertices"] == 9
+    assert len(ck.committed_iterations()) == n_states  # no new superstep ran
     g1 = {r["vid"]: r["rank"] for r in r1.collect()}
     g2 = {r["vid"]: r["rank"] for r in r2.collect()}
     assert g1 == g2  # bit-identical: the state is re-read, not recomputed
@@ -184,3 +209,22 @@ def test_lineage_and_metrics_recorded(spark, tmp_path):
     assert recs and all("partitions" in r for r in recs)
     # per-partition rows sum to vertex count
     assert sum(recs[-1]["partitions"].values()) == 9
+
+
+def test_pagerank_long_loop_checkpointed_every_superstep(spark, tmp_path):
+    """50 supersteps, each committed to the store: the in-memory state is
+    kept across writes, so nothing but the eager localCheckpoint bounds the
+    plan and its size estimates; the answer must still match the oracle."""
+    ck = CheckpointStore(str(tmp_path / "pr_long"), "run1")
+    ranks, info = pagerank(edges_df(spark, EDGES), tol=0.0, max_iter=50, ckpt=ck,
+                           checkpoint_every=1)
+    assert info["iterations"] == 50 and not info["converged"]
+    assert ck.committed_iterations() == list(range(50))
+    want, _, _ = pagerank_oracle(EDGES, tol=0.0, max_iter=50)
+    got = {r["vid"]: r["rank"] for r in ranks.collect()}
+    assert got.keys() == want.keys()
+    vids = sorted(want)
+    np.testing.assert_allclose([got[v] for v in vids], [want[v] for v in vids],
+                               atol=1e-6, rtol=0)
+    last = {r["vid"]: r["rank"] for r in ck.read_state(spark, 49).collect()}
+    assert last == got

@@ -179,3 +179,35 @@ def test_warm_start_duplicate_vids_not_double_counted(spark):
     want = {r["vid"]: r["rank"] for r in cold.collect()}
     assert all(abs(r["rank"] - want[r["vid"]]) < 1e-9 for r in rows)
     assert abs(sum(r["rank"] for r in rows) - 1.0) < 1e-9
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_setup_counts_match_python(spark, weighted):
+    """The one-pass vertex-table setup reports the same vertex, receiver,
+    non-receiver, dangling and edge counts as a pure-Python count — over raw
+    duplicates, self-loops, extra vids that are isolated and extra vids that
+    are already edge endpoints (and, weighted, non-positive weights, which
+    drop their edges)."""
+    rng = random.Random(7)
+    edges = [(rng.randrange(20), rng.randrange(20)) for _ in range(120)]
+    edges += edges[:10] + [(i, i) for i in range(5)]
+    extra = list(range(15, 25))  # 20..24 isolated, 15..19 mostly endpoints
+    vdf = spark.createDataFrame([(v,) for v in extra], ["vid"])
+    if weighted:
+        rows = [(s, t, float(rng.choice([-1, 0, 1, 2, 3]))) for s, t in edges]
+        df = spark.createDataFrame(rows, "src long, dst long, w double")
+        kept = {(s, t) for s, t, x in rows if s != t and x > 0}
+    else:
+        df = edges_df(spark, edges)
+        kept = {(s, t) for s, t in edges if s != t}
+    _, info = pagerank(df, vertices=vdf, max_iter=1,
+                       weight_col="w" if weighted else None)
+
+    srcs, dsts = {s for s, _ in kept}, {t for _, t in kept}
+    verts = srcs | dsts | set(extra)
+    assert set(extra) & (srcs | dsts) and set(extra) - (srcs | dsts)
+    assert info["n_edges"] == len(kept)
+    assert info["n_vertices"] == len(verts)
+    assert info["n_receivers"] == len(dsts)
+    assert info["n_nonreceivers"] == len(verts - dsts)
+    assert info["n_dangling"] == len(verts - srcs)
