@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges, degrees
 
-from credigraph_spark.session import eager_checkpoint
+from credigraph_spark.session import eager_checkpoint, join_side
 
 
 def degree_table(edges: DataFrame) -> DataFrame:
@@ -121,23 +121,19 @@ def weighted_modularity(edges: DataFrame, labels: DataFrame,
     )
     lab = labels.select(F.col(labels.columns[0]).alias("vid"),
                         F.col(label_col).alias("c")).persist()
-    # measured-broadcast the label map (the dcsbm_loglik pattern)
     n_lab = lab.count()
-    def _lab_side(df):
-        return F.broadcast(df) if n_lab <= 2_000_000 \
-            else df.hint("shuffle_hash")
     strength = (
         e.select(F.col("a").alias("vid"), "w")
         .unionByName(e.select(F.col("b").alias("vid"), "w"))
         .groupBy("vid").agg(F.sum("w").alias("s"))
     )
-    s_c = (strength.join(_lab_side(lab), "vid")
+    s_c = (strength.join(join_side(lab, n_lab), "vid")
            .groupBy("c").agg(F.sum("s").alias("sc")))
     w_c = (
-        e.join(_lab_side(lab.withColumnRenamed("vid", "a")
-                         .withColumnRenamed("c", "ca")), "a")
-        .join(_lab_side(lab.withColumnRenamed("vid", "b")
-                        .withColumnRenamed("c", "cb")), "b")
+        e.join(join_side(lab.withColumnRenamed("vid", "a")
+                         .withColumnRenamed("c", "ca"), n_lab), "a")
+        .join(join_side(lab.withColumnRenamed("vid", "b")
+                        .withColumnRenamed("c", "cb"), n_lab), "b")
         .where(F.col("ca") == F.col("cb"))
         .groupBy(F.col("ca").alias("c")).agg(F.sum("w").alias("wc"))
     )
@@ -392,25 +388,21 @@ def modularity(edges: DataFrame, labels: DataFrame,
     )
     lab = labels.select(F.col(labels.columns[0]).alias("vid"),
                         F.col(label_col).alias("c")).persist()
-    # broadcast the measured-small label map into the |E|-row joins
-    # (its checkpoint-carried estimate never auto-broadcasts — the
-    # dcsbm_loglik pattern, same 2M cap)
+    # counted: the label map's checkpoint-carried estimate never
+    # auto-broadcasts
     n_lab = lab.count()
-    def _lab_side(df):
-        return F.broadcast(df) if n_lab <= 2_000_000 \
-            else df.hint("shuffle_hash")
     deg = (
         und.select(F.col("a").alias("vid"))
         .unionByName(und.select(F.col("b").alias("vid")))
         .groupBy("vid").agg(F.count("*").alias("deg"))
     )
-    d_c = (deg.join(_lab_side(lab), "vid")
+    d_c = (deg.join(join_side(lab, n_lab), "vid")
            .groupBy("c").agg(F.sum("deg").alias("dc")))
     e_c = (
-        und.join(_lab_side(lab.withColumnRenamed("vid", "a")
-                           .withColumnRenamed("c", "ca")), "a")
-        .join(_lab_side(lab.withColumnRenamed("vid", "b")
-                        .withColumnRenamed("c", "cb")), "b")
+        und.join(join_side(lab.withColumnRenamed("vid", "a")
+                           .withColumnRenamed("c", "ca"), n_lab), "a")
+        .join(join_side(lab.withColumnRenamed("vid", "b")
+                        .withColumnRenamed("c", "cb"), n_lab), "b")
         .where(F.col("ca") == F.col("cb"))
         .groupBy(F.col("ca").alias("c")).agg(F.count("*").alias("ec"))
     )
@@ -476,19 +468,12 @@ def dcsbm_loglik(edges: DataFrame, labels: DataFrame,
     )
     lab = labels.select(F.col(labels.columns[0]).alias("vid"),
                         F.col(label_col).alias("c")).persist()
-    # broadcast the label map when it is measurably small (same 2M-row
-    # cap as CC's bcast_components): both |E|-row label joins then stream
-    # the edge table with NO exchange; past the cap fall back to
-    # shuffled-hash joins (the Catalyst estimate of a checkpointed label
-    # table is unusable, so hint explicitly rather than let it pick
-    # sort-merge and re-sort the edge stream twice)
+    # join_side: while the label map is broadcast both |E|-row label
+    # joins stream the edge table with NO exchange; past the cap they are
+    # shuffled-hash joins, never a sort-merge re-sorting the edges twice
     n_lab = lab.count()
-    la = lab.select(F.col("vid").alias("a"), F.col("c").alias("ca"))
-    lb = lab.select(F.col("vid").alias("b"), F.col("c").alias("cb"))
-    if n_lab <= 2_000_000:
-        la, lb = F.broadcast(la), F.broadcast(lb)
-    else:
-        la, lb = la.hint("shuffle_hash"), lb.hint("shuffle_hash")
+    la = join_side(lab.select(F.col("vid").alias("a"), F.col("c").alias("ca")), n_lab)
+    lb = join_side(lab.select(F.col("vid").alias("b"), F.col("c").alias("cb")), n_lab)
     pairs = (
         und.join(la, "a")
         .join(lb, "b")
@@ -554,8 +539,8 @@ def community_conductance(edges: DataFrame, labels: DataFrame,
     Physical shape mirrors ``modularity``: one canonical-edge dedup, one
     degree agg, two label joins onto edges, one community agg, a 1-row
     crossJoin for m — exact integer counters, a single rounded double."""
-    # one dedup (canonical subsumes the directed one) + measured
-    # broadcast of the label map — the dcsbm_loglik/modularity pattern
+    # one dedup (canonical subsumes the directed one) + the measured
+    # label map on the join_side policy — the modularity pattern
     und = (
         edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
@@ -568,22 +553,19 @@ def community_conductance(edges: DataFrame, labels: DataFrame,
     lab = labels.select(F.col(labels.columns[0]).alias("vid"),
                         F.col(label_col).alias("c")).persist()
     n_lab = lab.count()
-    def _lab_side(df):
-        return F.broadcast(df) if n_lab <= 2_000_000 \
-            else df.hint("shuffle_hash")
     deg = (
         und.select(F.col("a").alias("vid"))
         .unionByName(und.select(F.col("b").alias("vid")))
         .groupBy("vid").agg(F.count("*").alias("deg"))
     )
-    per_c = (deg.join(_lab_side(lab), "vid")
+    per_c = (deg.join(join_side(lab, n_lab), "vid")
              .groupBy("c").agg(F.count("*").cast("long").alias("n_members"),
                                F.sum("deg").cast("long").alias("volume")))
     sided = (
-        und.join(_lab_side(lab.withColumnRenamed("vid", "a")
-                           .withColumnRenamed("c", "ca")), "a")
-        .join(_lab_side(lab.withColumnRenamed("vid", "b")
-                        .withColumnRenamed("c", "cb")), "b")
+        und.join(join_side(lab.withColumnRenamed("vid", "a")
+                           .withColumnRenamed("c", "ca"), n_lab), "a")
+        .join(join_side(lab.withColumnRenamed("vid", "b")
+                        .withColumnRenamed("c", "cb"), n_lab), "b")
         .where(F.col("ca") != F.col("cb"))
     )
     cut = (sided.select(F.col("ca").alias("c"))

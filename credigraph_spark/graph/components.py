@@ -42,7 +42,8 @@ import time
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning
+from credigraph_spark.session import (BROADCAST_MAX_ROWS, adaptive_partitions,
+                                      eager_checkpoint, join_side, loop_tuning)
 from credigraph_spark.graph.adjacency import clean_edges, undirected_simple, vertices_from_edges
 from credigraph_spark.graph.pregel import aggregate_messages
 
@@ -72,9 +73,8 @@ def connected_components(
     resume: bool = True,
     num_partitions: int | None = None,
     # broadcast relations materialize on the driver each superstep (serial
-    # floor); cap where broadcast stops beating a shuffle join, same
-    # evidence as pagerank.AUTO_BROADCAST_MAX_RECEIVERS (BENCH.md)
-    bcast_components: int = 2_000_000,
+    # floor): the session's join-side cap
+    bcast_components: int = BROADCAST_MAX_ROWS,
     jump_salt: int = 8,
     # skew handling costs a fixed ~3 extra plan nodes + a distinct per
     # superstep; that only amortizes when the jump join is big (A/B:
@@ -146,9 +146,6 @@ def connected_components(
     ncomp_est = n
     jump_strategies: list[str] = []
 
-    def _map_side(m):
-        return F.broadcast(m) if n <= MAP_BROADCAST_MAX_VERTICES else m.hint("shuffle_hash")
-
     with loop_tuning(spark, shuffle_n):
         while it < max_iter and not converged:
             t0 = time.time()
@@ -212,7 +209,7 @@ def connected_components(
                 gm = stepped.groupBy("prev").agg(
                     F.min("component").alias("_gm"))
                 merged = (
-                    stepped.join(_map_side(gm), "prev", "left")
+                    stepped.join(join_side(gm, n, MAP_BROADCAST_MAX_VERTICES), "prev", "left")
                     .select("vid", "prev",
                             F.least("component",
                                     F.coalesce("_gm", "component")
@@ -227,7 +224,7 @@ def connected_components(
             jump = merged.select(F.col("vid").alias("component"), F.col("component").alias("_jump"))
             if n < skew_min_vertices:
                 strategy = "plain"
-                joined = merged.join(_map_side(jump), "component", "left")
+                joined = merged.join(join_side(jump, n, MAP_BROADCAST_MAX_VERTICES), "component", "left")
             elif ncomp_est <= bcast_components and ncomp_est <= n // 2:
                 strategy = "broadcast"
                 cur = merged.select("component").distinct()

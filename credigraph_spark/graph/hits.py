@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from credigraph_spark.graph.adjacency import clean_edges
 
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning)
+                                      loop_tuning, release)
 
 
 def _run(edges: DataFrame, max_iter: int, tol: float | None):
@@ -103,7 +103,7 @@ def _run(edges: DataFrame, max_iter: int, tol: float | None):
             d_h = _delta(new_hub, hub) if tol is not None else None
             hub = new_hub
             for f in live:
-                f.unpersist()
+                release(f)
             live = [araw, hraw]
             info["iterations"] = i + 1
             if tol is not None:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from credigraph_spark.graph.adjacency import clean_edges
 
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning)
+                                      loop_tuning, release)
 
 
 def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
@@ -128,6 +128,7 @@ def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
                 .select("vid", "x")
                 .transform(eager_checkpoint)
             )
+            release(state)
             state = new_state
             info["iterations"] += 1
             l1 = obs.get["l1"] or 0.0

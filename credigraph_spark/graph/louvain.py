@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, functions as F
 from credigraph_spark.graph.adjacency import undirected_simple
 
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning)
+                                      join_side, loop_tuning)
 
 
 def _local_move_rounds(und: DataFrame, two_m: float,
@@ -274,16 +274,14 @@ def louvain_two_level(edges: DataFrame, rounds: int = 2,
     und, two_m, nparts = _partitioned_und(edges)
     s1 = _local_move_rounds(und, two_m, rounds,
                             nparts).select("vid", "community")
-    # same measured-broadcast gating as leiden_two_level: the label
-    # table's checkpoint-carried estimate never auto-broadcasts
+    # counted: the label table's checkpoint-carried estimate never
+    # auto-broadcasts
     n_v = s1.count()
-    def _maybe_bcast(df):
-        return F.broadcast(df) if n_v <= 2_000_000 else df.hint("shuffle_hash")
     ce = (
-        und.join(_maybe_bcast(s1.select(F.col("vid").alias("src"),
-                                        F.col("community").alias("cu"))), "src")
-        .join(_maybe_bcast(s1.select(F.col("vid").alias("dst"),
-                                     F.col("community").alias("cv"))), "dst")
+        und.join(join_side(s1.select(F.col("vid").alias("src"),
+                                     F.col("community").alias("cu")), n_v), "src")
+        .join(join_side(s1.select(F.col("vid").alias("dst"),
+                                  F.col("community").alias("cv")), n_v), "dst")
         .groupBy(F.col("cu").alias("src"), F.col("cv").alias("dst"))
         .agg(F.count("*").alias("w"))
         .transform(eager_checkpoint)
@@ -382,18 +380,16 @@ def leiden_two_level(edges: DataFrame, rounds: int = 2,
     # the label tables are |V| rows; a checkpointed table's carried
     # Catalyst estimate is a join product, so the planner never
     # auto-broadcasts it — count once (cheap scan of the checkpoint) and
-    # broadcast explicitly while it fits (CC's bcast_components cap),
-    # keeping both 2|E|-row label joins below exchange-free
+    # let join_side broadcast it while it fits, keeping both 2|E|-row
+    # label joins below exchange-free
     n_v = s1.count()
-    def _maybe_bcast(df):
-        return F.broadcast(df) if n_v <= 2_000_000 else df.hint("shuffle_hash")
 
     # refinement: connected parts within each phase-1 community
     intra = (
-        und.join(_maybe_bcast(s1.select(F.col("vid").alias("src"),
-                                        F.col("community").alias("_cs"))), "src")
-        .join(_maybe_bcast(s1.select(F.col("vid").alias("dst"),
-                                     F.col("community").alias("_cd"))), "dst")
+        und.join(join_side(s1.select(F.col("vid").alias("src"),
+                                     F.col("community").alias("_cs")), n_v), "src")
+        .join(join_side(s1.select(F.col("vid").alias("dst"),
+                                  F.col("community").alias("_cd")), n_v), "dst")
         .where((F.col("_cs") == F.col("_cd"))
                & (F.col("src") < F.col("dst")))
         .select("src", "dst")
@@ -410,10 +406,10 @@ def leiden_two_level(edges: DataFrame, rounds: int = 2,
 
     # contraction on refined parts
     ce = (
-        und.join(_maybe_bcast(pm.select(F.col("vid").alias("src"),
-                                        F.col("part").alias("pu"))), "src")
-        .join(_maybe_bcast(pm.select(F.col("vid").alias("dst"),
-                                     F.col("part").alias("pv"))), "dst")
+        und.join(join_side(pm.select(F.col("vid").alias("src"),
+                                     F.col("part").alias("pu")), n_v), "src")
+        .join(join_side(pm.select(F.col("vid").alias("dst"),
+                                  F.col("part").alias("pv")), n_v), "dst")
         .groupBy(F.col("pu").alias("src"), F.col("pv").alias("dst"))
         .agg(F.count("*").alias("w"))
         .transform(eager_checkpoint)
@@ -421,14 +417,14 @@ def leiden_two_level(edges: DataFrame, rounds: int = 2,
     und.unpersist()
 
     # Leiden constraint: only same-original-community parts may merge
-    # (pc is ≤ |V| rows — same measured-broadcast gating as the label
-    # joins above)
+    # (pc is ≤ |V| rows — same join_side policy as the label joins
+    # above)
     pc = pm.select("part", "community").distinct()
     cand = (
-        ce.join(_maybe_bcast(pc.select(F.col("part").alias("src"),
-                                       F.col("community").alias("_ou"))), "src")
-        .join(_maybe_bcast(pc.select(F.col("part").alias("dst"),
-                                     F.col("community").alias("_ov"))), "dst")
+        ce.join(join_side(pc.select(F.col("part").alias("src"),
+                                    F.col("community").alias("_ou")), n_v), "src")
+        .join(join_side(pc.select(F.col("part").alias("dst"),
+                                  F.col("community").alias("_ov")), n_v), "dst")
         .where(F.col("_ou") == F.col("_ov"))
         .select("src", "dst", "w"))
 

@@ -29,7 +29,7 @@ import time
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning
+from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning, release
 from credigraph_spark.graph.adjacency import undirected_simple, vertices_from_edges
 from credigraph_spark.graph.pregel import messages
 
@@ -171,7 +171,7 @@ def label_propagation(
                 .transform(eager_checkpoint)
             )
             changed = obs.get["changed"] or 0
-            labels.unpersist()
+            release(labels)
             labels = new_labels
             converged = changed == 0
             it += 1

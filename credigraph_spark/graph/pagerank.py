@@ -48,7 +48,8 @@ Spark-first physical design (NOT a port of the per-node Python loop):
     web graphs): edges cached hash-partitioned by ``dst``; the rank
     state is broadcast, the contribution aggregation is partition-local
     (ZERO shuffled rows per superstep) and the L1 join is co-partitioned.
-  ``mode="auto"`` picks broadcast when the receiver count is small.
+  ``mode="auto"`` picks broadcast while the receiver count is at most
+  ``session.BROADCAST_MAX_ROWS``.
 * per-superstep checkpoints (full vid,rank table) to the CheckpointStore:
   durable resume + metrics + converged marker. Resuming a converged run
   short-circuits right after the vertex table, before any edge layout
@@ -65,17 +66,9 @@ import time
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning
+from credigraph_spark.session import (BROADCAST_MAX_ROWS, adaptive_partitions,
+                                      eager_checkpoint, loop_tuning)
 from credigraph_spark.graph.adjacency import clean_edges
-
-# ``auto`` mode broadcasts the rank state below this receiver count.
-# Every broadcast relation is materialized ON THE DRIVER each superstep —
-# a serial floor that does not shrink with executors — so the cap is set
-# where broadcast stops winning, measured on a standalone cluster
-# (BENCH.md "mode choice"): at 1M receivers broadcast beats shuffle at
-# both 2 and 8 executors; at 5M it loses at both, and shuffle scales
-# 2->8 executors at 0.92 efficiency vs broadcast's 0.50.
-AUTO_BROADCAST_MAX_RECEIVERS = 2_000_000
 
 
 def pagerank(
@@ -163,7 +156,7 @@ def pagerank(
     m, m_dangling = stats["m"], stats["m_dangling"]
 
     if mode == "auto":
-        mode = "broadcast" if n_recv <= AUTO_BROADCAST_MAX_RECEIVERS else "shuffle"
+        mode = "broadcast" if n_recv <= BROADCAST_MAX_ROWS else "shuffle"
     if mode not in ("shuffle", "broadcast"):
         raise ValueError(f"unknown mode: {mode}")
 

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges, out_degrees
-from credigraph_spark.session import aqe_paused, eager_checkpoint
+from credigraph_spark.session import eager_checkpoint, loop_tuning
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
@@ -99,7 +99,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
 
     state = seed_rows.select("vid", F.lit(p).alias("rank")).transform(eager_checkpoint)
     dangling_sum = p * n_dang_seeds  # analytic at t=0 (uniform seed mass)
-    with aqe_paused(spark):
+    with loop_tuning(spark):
         for it in range(max_iter):
             teleport = (1.0 - damping) * p + damping * dangling_sum * p
             fwd = F.lit(damping) * F.col("rank") / F.col("out_deg")

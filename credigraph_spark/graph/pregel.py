@@ -28,8 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 def triplets(edges: DataFrame, vertices: DataFrame, vid_col: str = "vid",
              broadcast_vertices: bool = False,
              attach: tuple[str, ...] = ("src", "dst"),
-             how: str = "left",
-             vertex_join_hint: str | None = None) -> DataFrame:
+             how: str = "left") -> DataFrame:
     """The triplet view: one row per edge with the requested endpoints'
     vertex attributes attached (``src_*`` / ``dst_*``).
 
@@ -39,24 +38,13 @@ def triplets(edges: DataFrame, vertices: DataFrame, vid_col: str = "vid",
     reads ``src_*`` should pass ``attach=("src",)`` — one join per
     superstep instead of two. ``how="inner"`` is the cheaper plan when
     the vertex table is known to cover every endpoint (the engine's
-    iterative algorithms guarantee this).
-
-    ``vertex_join_hint``: optional join-strategy hint applied to the
-    VERTEX side (e.g. ``"shuffle_hash"``). Available for algorithms whose
-    state-side estimates mislead the planner; NOTE the engine's own
-    superstep loops measured FASTER without forcing it (an alternating
-    A/B at sf0.1 showed +0.2-0.6 s per query with the hint — the
-    planner's round-3 choice of building the cached edge side is served
-    entirely from the in-memory columnar cache and beats forcing an
-    exchange-and-build of the state side)."""
+    iterative algorithms guarantee this)."""
     out = edges
     for side in attach:
         v = vertices.select(
             *[F.col(c).alias(f"{side}_{c}") for c in vertices.columns])
         if broadcast_vertices:
             v = F.broadcast(v)
-        elif vertex_join_hint:
-            v = v.hint(vertex_join_hint)
         out = out.join(v, out[side] == v[f"{side}_{vid_col}"], how) \
                  .drop(f"{side}_{vid_col}")
     return out
@@ -71,7 +59,6 @@ def messages(
     broadcast_vertices: bool = False,
     attach: tuple[str, ...] = ("src", "dst"),
     how: str = "left",
-    vertex_join_hint: str | None = None,
 ) -> DataFrame:
     """The raw gather stream: one (vid, msg) row per delivered message,
     before any aggregation — the building block for aggregations that
@@ -79,8 +66,7 @@ def messages(
     counts group by (vid, msg))."""
     if to_dst is None and to_src is None:
         raise ValueError("provide to_dst and/or to_src")
-    t = triplets(edges, vertices, vid_col, broadcast_vertices, attach, how,
-                 vertex_join_hint)
+    t = triplets(edges, vertices, vid_col, broadcast_vertices, attach, how)
     parts = []
     if to_dst is not None:
         parts.append(t.select(F.col("dst").alias(vid_col), to_dst.alias("msg")))
@@ -102,7 +88,6 @@ def aggregate_messages(
     broadcast_vertices: bool = False,
     attach: tuple[str, ...] = ("src", "dst"),
     how: str = "left",
-    vertex_join_hint: str | None = None,
 ) -> DataFrame:
     """Evaluate message expressions over the triplet view and aggregate
     them per receiving vertex.
@@ -121,7 +106,7 @@ def aggregate_messages(
                            agg={"nbr_avg": F.avg})
     """
     msgs = messages(edges, vertices, to_dst, to_src, vid_col,
-                    broadcast_vertices, attach, how, vertex_join_hint)
+                    broadcast_vertices, attach, how)
     return msgs.groupBy(vid_col).agg(
         *[fn(F.col("msg")).alias(name) for name, fn in agg.items()]
     )

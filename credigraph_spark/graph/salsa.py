@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from credigraph_spark.graph.adjacency import clean_edges, vertices_from_edges
 
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning)
+                                      loop_tuning, release)
 
 
 def salsa(edges: DataFrame, max_iter: int = 3,
@@ -68,7 +68,10 @@ def salsa(edges: DataFrame, max_iter: int = 3,
     hub = verts.select("vid", F.lit(1.0 / n).alias("score"))
     auth = None
     with loop_tuning(edges.sparkSession, nparts):
-        for _ in range(max_iter):
+        for i in range(max_iter):
+            # the previous round's checkpoints (round 0's hub is a
+            # projection of the verts cache, which stays)
+            superseded = (auth, hub) if i else ()
             auth = (
                 fwd.join(hub.select(F.col("vid").alias("src"), "score"), "src")
                 .groupBy(F.col("dst").alias("vid"))
@@ -81,6 +84,8 @@ def salsa(edges: DataFrame, max_iter: int = 3,
                 .agg(F.sum(F.col("score") * F.col("w_bwd")).alias("score"))
                 .transform(eager_checkpoint)
             )
+            for df in superseded:
+                release(df)
     out = (
         verts
         .join(hub.select("vid", F.col("score").alias("h")), "vid", "left")

@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning, measured_repartition)
+                                      loop_tuning, measured_repartition,
+                                      release)
 
 
 def label_spreading(edges: DataFrame, seeds: DataFrame,
@@ -77,11 +78,13 @@ def label_spreading(edges: DataFrame, seeds: DataFrame,
                     .agg(F.sum(F.col("f") * F.col("w")).alias("s")))
             # msgs comes out hash(vid)×nparts from the groupBy — aligned
             # with dsy, so no repartition before the checkpoint
-            state = (dsy.join(msgs, "vid", "left")
-                     .select("vid",
-                             F.coalesce(
-                                 "y", F.col("s") / F.col("deg")).alias("f"))
-                     .transform(eager_checkpoint))
+            new_state = (dsy.join(msgs, "vid", "left")
+                         .select("vid",
+                                 F.coalesce(
+                                     "y", F.col("s") / F.col("deg")).alias("f"))
+                         .transform(eager_checkpoint))
+            release(state)
+            state = new_state
     out = (state.join(dsy.select("vid", "y"), "vid", "left")
            .select("vid",
                    (F.round("f", round_digits) if round_digits is not None
@@ -113,8 +116,10 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 3,
     le, _, nparts = measured_repartition(und, "src")
     verts = (le.select(F.col("dst").alias("vid")).distinct()
              .repartition(nparts, "vid").persist())
-    state = (verts.select("vid", F.lit(1.0).alias("x"))
-             .transform(eager_checkpoint))
+    # ck: the checkpoint the current state projects (released once the
+    # next round's msgs are materialized)
+    state = ck = (verts.select("vid", F.lit(1.0).alias("x"))
+                  .transform(eager_checkpoint))
     with loop_tuning(edges.sparkSession, nparts):
         for _ in range(max_iter):
             # msgs feeds TWO subplans (norm scalar + next state) — eager
@@ -124,6 +129,8 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 3,
                     .groupBy(F.col("dst").alias("vid"))
                     .agg(F.sum("x").alias("s"))
                     .transform(eager_checkpoint))
+            release(ck)
+            ck = msgs
             nrm = msgs.agg(F.sqrt(F.sum(F.col("s") * F.col("s")))
                            .alias("n")).collect()[0].n
             state = msgs.select("vid",
@@ -194,16 +201,18 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
     x0 = vert.select("vid", "rs", "v1",
                      (frac * 2.0 - 1.0).alias("x"))
     with loop_tuning(edges.sparkSession, nparts):
-        state = x0.transform(eager_checkpoint)
+        x0 = x0.transform(eager_checkpoint)
         # deflate-normalize the init with the same one-agg trick
-        s = state.agg(F.sum(F.col("x") * F.col("v1")).alias("c"),
-                      F.sum(F.col("x") * F.col("x")).alias("s2")).collect()[0]
+        s = x0.agg(F.sum(F.col("x") * F.col("v1")).alias("c"),
+                   F.sum(F.col("x") * F.col("x")).alias("s2")).collect()[0]
         nrm = math.sqrt(s.s2 - s.c * s.c)
-        state = (state.select(
+        # ck: the checkpoint the current state projects
+        state = ck = (x0.select(
             "vid", "rs", "v1",
             ((F.col("x") - F.lit(float(s.c)) * F.col("v1"))
              / F.lit(float(nrm))).alias("x"))
             .transform(eager_checkpoint))
+        release(x0)
         for _ in range(max_iter):
             msgs = (state.select(F.col("vid").alias("src"), "x")
                     .join(lez, "src")
@@ -213,6 +222,8 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
                  .select("vid", "rs", "v1",
                          (F.col("x") + F.col("rs") * F.col("m")).alias("y"))
                  .transform(eager_checkpoint))
+            release(ck)
+            ck = y
             s = y.agg(F.sum(F.col("y") * F.col("v1")).alias("c"),
                       F.sum(F.col("y") * F.col("y")).alias("s2")).collect()[0]
             nrm = math.sqrt(s.s2 - s.c * s.c)
@@ -225,6 +236,7 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
         (F.round("x", round_digits) if round_digits is not None
          else F.col("x")).alias("f"))
     lez.unpersist()
+    und.unpersist()
     return out
 
 
@@ -247,14 +259,18 @@ def eigenvector_centrality_weighted(edges: DataFrame, weight_col: str,
     le, _, nparts = measured_repartition(und, "src")
     verts = (le.select(F.col("dst").alias("vid")).distinct()
              .repartition(nparts, "vid").persist())
-    state = (verts.select("vid", F.lit(1.0).alias("x"))
-             .transform(eager_checkpoint))
+    # ck: the checkpoint the current state projects (released once the
+    # next round's msgs are materialized)
+    state = ck = (verts.select("vid", F.lit(1.0).alias("x"))
+                  .transform(eager_checkpoint))
     with loop_tuning(edges.sparkSession, nparts):
         for _ in range(max_iter):
             msgs = (state.join(le.withColumnRenamed("src", "vid"), "vid")
                     .groupBy(F.col("dst").alias("vid"))
                     .agg(F.sum(F.col("x") * F.col("w")).alias("s"))
                     .transform(eager_checkpoint))
+            release(ck)
+            ck = msgs
             nrm = msgs.agg(F.sqrt(F.sum(F.col("s") * F.col("s")))
                            .alias("n")).collect()[0].n
             state = msgs.select("vid",

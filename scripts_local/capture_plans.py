@@ -586,7 +586,7 @@ def main():
   localCheckpoint materializes the state and fills the Observations
   (PageRank: dangling mass + L1; CC/LPA: changed count) — see the
   CollectMetrics node above riding the superstep plan.
-* AQE is PAUSED inside superstep loops (session.aqe_paused): static stage
+* AQE is PAUSED inside superstep loops (session.loop_tuning): static stage
   shapes gain nothing from runtime re-planning and its per-job latency
   (~0.5 s/superstep measured) dominates the serial floor.
 * lineage: localCheckpoint per superstep truncates the plan (CC/LPA plans
