@@ -27,9 +27,11 @@ code path through Spark's built-in ``spark_catalog`` with parquet managed
 tables (identical writeTo/create/overwritePartitions/read.table calls).
 
 ``write_state`` returns the re-read state, whose plan starts fresh. The
-engine's superstep loops do not use it: their eager localCheckpoint has
-already truncated the plan, so they keep their in-memory state and the
-store write is for durability and resume only.
+engine's superstep loops reach the store only through the superstep
+driver (``graph/loop.py``), which owns the converged short-circuit, the
+latest-iteration resume and the end-of-round write/metrics/converged
+cadence. It discards the re-read: its loops keep their in-memory state,
+and the store write is for durability and resume only.
 """
 
 from __future__ import annotations

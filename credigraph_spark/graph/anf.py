@@ -26,18 +26,19 @@ Design — Flajolet-Martin union sketches as Spark supersteps:
 
 Masks use ``pow(2, tz)`` with tz capped ≤ ``cap`` (default 40) so every
 mask and mask+1 stays far inside int64 and the pow/log2 round-trips are
-exact in ANY IEEE engine. One driver action per hop (Observation on the
-eager localCheckpoint), state never exceeds |V| × num_registers longs —
+exact in ANY IEEE engine. One driver action per hop (the superstep
+driver's checkpoint, ``graph/loop.py``, with its Observation), state never exceeds |V| × num_registers longs —
 at 10^11 vertices and 8 registers that is the same order as the PageRank
 rank vector.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from credigraph_spark.session import eager_checkpoint, loop_tuning, measured_repartition
+from credigraph_spark.session import measured_repartition
 from credigraph_spark.graph.adjacency import clean_edges, vertices_from_edges
+from credigraph_spark.graph.loop import SuperstepLoop
 
 FM_PHI = 0.77351  # Flajolet-Martin bias correction constant
 
@@ -46,6 +47,31 @@ def _tz(col):
     """Trailing-zero count of a positive long: position of the lowest set
     bit via round(log2(x & -x)) — exact for powers of two in IEEE."""
     return F.round(F.log2(col.bitwiseAND(-col))).cast("long")
+
+
+def _init_mask(j: int, seed: int, cap: int):
+    """Register ``r{j}``'s initial mask 2^rho, rho the capped trailing-zero
+    count of the md5-derived 32-bit hash of (seed, j, vid)."""
+    h32 = F.conv(
+        F.substring(
+            F.md5(F.concat_ws(
+                ":", F.lit(str(seed)), F.lit(str(j)),
+                F.col("vid").cast("string"))),
+            1, 8),
+        16, 10,
+    ).cast("long")
+    rho = F.when(h32 == 0, F.lit(32)).otherwise(_tz(h32))
+    return F.pow(F.lit(2.0), F.least(rho, F.lit(cap)).cast("double")) \
+            .cast("long").alias(f"r{j}")
+
+
+def _rho_sum(regs: list[str]):
+    """Per-row Σ_r rho over the CURRENT masks (an exact long)."""
+    parts = [_tz(F.col(r) + 1) for r in regs]
+    total = parts[0]
+    for p in parts[1:]:
+        total = total + p
+    return total
 
 
 def anf_sketch(
@@ -69,58 +95,33 @@ def anf_sketch(
     e, _, shuffle_n = measured_repartition(clean_edges(edges), "dst")
     verts = vertices_from_edges(e)
 
-    def _init_mask(j: int):
-        h32 = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(
-                    ":", F.lit(str(seed)), F.lit(str(j)),
-                    F.col("vid").cast("string"))),
-                1, 8),
-            16, 10,
-        ).cast("long")
-        rho = F.when(h32 == 0, F.lit(32)).otherwise(_tz(h32))
-        return F.pow(F.lit(2.0), F.least(rho, F.lit(cap)).cast("double")) \
-                .cast("long").alias(f"r{j}")
-
-    state = verts.select("vid", *[_init_mask(j) for j in range(num_registers)])
-    state = state.repartition(shuffle_n, "vid").transform(eager_checkpoint)
+    loop = SuperstepLoop(spark, "anf", shuffle_n, max_hops)
+    state, _ = loop.commit(
+        verts.select("vid", *[_init_mask(j, seed, cap) for j in range(num_registers)])
+        .repartition(shuffle_n, "vid"))
     n = state.count()
-
-    # per-row rho readouts over the CURRENT masks
-    def _rho_sum_expr():
-        parts = [_tz(F.col(r) + 1) for r in regs]
-        total = parts[0]
-        for p in parts[1:]:
-            total = total + p
-        return total
 
     info: dict = {"n_vertices": n, "estimates": {0: float(n)},
                   "sum_rho": {}, "hops": 0}
     per_hop_rows = []
-    with loop_tuning(spark, shuffle_n):
-        for h in range(1, max_hops + 1):
+    with loop:
+        for it in loop:
+            h = it + 1
             inc = (
                 e.join(state.withColumnRenamed("vid", "dst"), "dst")
                 .select(F.col("src").alias("vid"), *regs)
             )
-            obs = Observation(f"anf_{h}")
-            rho_total = _rho_sum_expr()
-            new_state = (
+            rho_total = _rho_sum(regs)
+            state, m = loop.commit(loop.observe(
                 state.select("vid", *regs).unionByName(inc)
                 .groupBy("vid")
-                .agg(*[F.bit_or(r).alias(r) for r in regs])
-                .observe(
-                    obs,
-                    F.sum(rho_total).alias("sum_rho"),
-                    F.sum(
-                        F.pow(F.lit(2.0),
-                              rho_total.cast("double") / num_registers)
-                    ).alias("est_raw"),
-                )
-                .transform(eager_checkpoint)
-            )
-            m = obs.get
-            state = new_state
+                .agg(*[F.bit_or(r).alias(r) for r in regs]),
+                F.sum(rho_total).alias("sum_rho"),
+                F.sum(
+                    F.pow(F.lit(2.0),
+                          rho_total.cast("double") / num_registers)
+                ).alias("est_raw"),
+            ))
             sum_rho = int(m["sum_rho"] or 0)
             info["sum_rho"][h] = sum_rho
             info["estimates"][h] = float(m["est_raw"] or 0.0) / FM_PHI
@@ -220,36 +221,18 @@ def hyperball_harmonic(edges: DataFrame, max_hops: int = 3,
     e, _, shuffle_n = measured_repartition(clean_edges(edges), "dst")
     verts = vertices_from_edges(e)
 
-    def _init_mask(j: int):
-        h32 = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(
-                    ":", F.lit(str(seed)), F.lit(str(j)),
-                    F.col("vid").cast("string"))),
-                1, 8),
-            16, 10,
-        ).cast("long")
-        rho = F.when(h32 == 0, F.lit(32)).otherwise(_tz(h32))
-        return F.pow(F.lit(2.0), F.least(rho, F.lit(cap)).cast("double")) \
-                .cast("long").alias(f"r{j}")
-
-    def _rho_sum():
-        parts = [_tz(F.col(r) + 1) for r in regs]
-        total = parts[0]
-        for p in parts[1:]:
-            total = total + p
-        return total.cast("long")
-
-    state = verts.select("vid", *[_init_mask(j) for j in range(num_registers)])
-    state = state.select("vid", *regs, _rho_sum().alias("s_0"))
-    state = state.repartition(shuffle_n, "vid").transform(eager_checkpoint)
+    loop = SuperstepLoop(spark, "hyperball", shuffle_n, max_hops)
+    state = verts.select("vid", *[_init_mask(j, seed, cap) for j in range(num_registers)])
+    state, _ = loop.commit(state.select("vid", *regs, _rho_sum(regs).alias("s_0"))
+                           .repartition(shuffle_n, "vid"))
     # per-hop rho sums ride INSIDE the state frame (s_0..s_H columns):
     # the union fills them with nulls on the message side and max()
     # recovers the single non-null per vid — no end-stage join chain
     # (an earlier snapshot-join formulation anti-scaled on the
     # standalone cluster; this shape is one groupBy per hop, period)
-    with loop_tuning(spark, shuffle_n):
-        for h in range(1, max_hops + 1):
+    with loop:
+        for it in loop:
+            h = it + 1
             s_cols = [f"s_{i}" for i in range(h)]
             inc = (
                 e.join(state.select(
@@ -264,9 +247,8 @@ def hyperball_harmonic(edges: DataFrame, max_hops: int = 3,
                 .agg(*[F.bit_or(r).alias(r) for r in regs],
                      *[F.max(c).alias(c) for c in s_cols])
             )
-            state = (state.select("vid", *regs, *s_cols,
-                                  _rho_sum().alias(f"s_{h}"))
-                     .transform(eager_checkpoint))
+            state, _ = loop.commit(state.select("vid", *regs, *s_cols,
+                                                _rho_sum(regs).alias(f"s_{h}")))
     e.unpersist()
     snaps = state
 

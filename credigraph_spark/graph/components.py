@@ -26,25 +26,20 @@ semi-reduced label→jump map (late rounds; the map is ≤ #distinct-labels
 rows and shrinks monotonically). ``info['jump_strategies']`` records the
 per-round choice.
 
-EXACTLY ONE driver action per superstep: the changed-label count rides as
-an ``Observation`` on the same eager ``localCheckpoint`` job that
-materializes the new state (the previous label is carried through the
-plan as a ``prev`` column, so no separate compare-join/count job runs).
-The localCheckpoint itself is required anyway — the pointer-jump
-self-join references the state twice, so without per-step plan truncation
-the logical plan doubles every round.
+The loop runs on the superstep driver (``graph/loop.py``): the
+changed-label count rides its one action per superstep (the previous
+label is carried through the plan as a ``prev`` column).
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
 from credigraph_spark.session import (BROADCAST_MAX_ROWS, adaptive_partitions,
-                                      eager_checkpoint, join_side, loop_tuning)
+                                      eager_checkpoint, join_side)
 from credigraph_spark.graph.adjacency import clean_edges, undirected_simple, vertices_from_edges
+from credigraph_spark.graph.loop import SuperstepLoop
 from credigraph_spark.graph.pregel import aggregate_messages
 
 # Join side of the per-round vid/label maps (group-min and pointer jump).
@@ -115,30 +110,18 @@ def connected_components(
     if und0 is not None:
         und0.unpersist()
     info: dict = {"n_vertices": n, "iterations": 0, "converged": n == 0}
-
-    start_iter = 0
-    labels = None
-    if ckpt is not None and resume:
-        done = ckpt.converged_iteration()
-        if done is not None:
-            # resume of an already-converged run: return the converged state
-            # verbatim — re-running a superstep would drift by < tol and
-            # burn a full pass.
-            und.unpersist()
-            verts.unpersist()
-            info.update(iterations=done + 1, converged=True, resumed_from=done)
-            return ckpt.read_state(spark, done), info
-        last = ckpt.latest_iteration()
-        if last is not None:
-            labels = ckpt.read_state(spark, last)
-            start_iter = last + 1
-            info["resumed_from"] = last
+    loop = SuperstepLoop(spark, "cc", shuffle_n, max_iter, ckpt=ckpt,
+                         checkpoint_every=checkpoint_every, resume=resume, info=info)
+    done = loop.converged_state()
+    if done is not None:
+        und.unpersist()
+        verts.unpersist()
+        return done, info
+    labels = loop.resumed_state()
     if labels is None:
         labels = verts.select("vid", F.col("vid").alias("component"))
-    labels = labels.persist()
+    labels = loop.cache(labels)
 
-    it = start_iter
-    converged = info["converged"]
     # Distinct-label estimate drives NEXT round's pointer-jump join strategy
     # (it rides the same observation as the changed count, so choosing the
     # strategy costs zero extra driver actions). Round 1 / resume start with
@@ -146,9 +129,8 @@ def connected_components(
     ncomp_est = n
     jump_strategies: list[str] = []
 
-    with loop_tuning(spark, shuffle_n):
-        while it < max_iter and not converged:
-            t0 = time.time()
+    with loop:
+        for it in loop:
             # neighbor minima: message component(src) -> dst (the pregel
             # gather primitive; attach=src only, inner join — labels cover
             # every endpoint by construction)
@@ -156,14 +138,13 @@ def connected_components(
                 und, labels, to_dst=F.col("src_component"),
                 agg={"nbr_min": F.min}, attach=("src",), how="inner",
             )
-            stepped = (
+            stepped = loop.cache(  # referenced by direct + jump (+ distinct) branches
                 labels.select("vid", F.col("component").alias("prev"))
                 .join(msgs, "vid", "left")
                 .select(
                     "vid", "prev",
                     F.least(F.col("prev"), F.coalesce("nbr_min", F.col("prev"))).alias("component"),
                 )
-                .persist()  # referenced by direct + jump (+ distinct) branches
             )
             # pointer jumping: also adopt the label OF my current label vertex
             # (component values are always vids, so the self-join hits). This
@@ -208,13 +189,12 @@ def connected_components(
             if it > 0:
                 gm = stepped.groupBy("prev").agg(
                     F.min("component").alias("_gm"))
-                merged = (
+                merged = loop.cache(  # referenced by jump-map + probe (+ distinct)
                     stepped.join(join_side(gm, n, MAP_BROADCAST_MAX_VERTICES), "prev", "left")
                     .select("vid", "prev",
                             F.least("component",
                                     F.coalesce("_gm", "component")
                                     ).alias("component"))
-                    .persist()  # referenced by jump-map + probe (+ distinct)
                 )
             else:
                 # round 0: every prev-group is a singleton (labels start as
@@ -246,49 +226,20 @@ def connected_components(
                 strategy = "plain"
                 joined = merged.join(jump.hint("shuffle_hash"), "component", "left")
             jump_strategies.append(strategy)
-            # ONE driver action: the eager localCheckpoint both truncates the
-            # doubled plan AND fills the changed-count + distinct-label
-            # observations (prev label is carried in the plan — no separate
-            # compare-join/count job runs).
-            obs = Observation(f"cc_changed_{it}")
-            new_labels = eager_checkpoint(
-                joined
-                .select("vid", "prev",
-                        F.least("component", F.coalesce("_jump", "component")).alias("component"))
-                .observe(
-                    obs,
-                    F.sum((F.col("component") != F.col("prev")).cast("long")).alias("changed"),
-                    F.approx_count_distinct("component").alias("ncomp"),
-                )
-                .select("vid", "component")
-            )
-            stepped.unpersist()
-            if merged is not stepped:
-                merged.unpersist()
-            metrics = obs.get
+            # the driver's one action also fills the changed-count and
+            # distinct-label observations (prev label is carried in the plan)
+            labels, metrics = loop.commit(loop.observe(
+                joined.select("vid", "prev",
+                              F.least("component", F.coalesce("_jump", "component")).alias("component")),
+                F.sum((F.col("component") != F.col("prev")).cast("long")).alias("changed"),
+                F.approx_count_distinct("component").alias("ncomp"),
+            ).select("vid", "component"))
             changed = metrics["changed"] or 0
             # HLL ±~2.3%: pad so a slight underestimate can't flip us into
             # broadcasting a map that misses the executor memory budget.
             ncomp_est = int((metrics["ncomp"] or 0) * 1.05) + 1
-            labels.unpersist()
-            labels = new_labels
-            converged = changed == 0
-            it += 1
-            info["iterations"] = it
+            loop.end_round(changed == 0, changed=changed, rows=n)
 
-            if ckpt is not None and (converged or it % checkpoint_every == 0 or it >= max_iter):
-                # durability only: the in-memory labels stay (their plan is
-                # already truncated by the eager localCheckpoint)
-                ckpt.write_state(labels, it - 1)
-                ckpt.append_metrics(
-                    it - 1,
-                    {"algo": "cc", "changed": changed, "rows": n,
-                     "wall_ms": (time.time() - t0) * 1e3, "converged": converged},
-                )
-                if converged:
-                    ckpt.mark_converged(it - 1)
-
-    info["converged"] = converged
     info["jump_strategies"] = jump_strategies
     und.unpersist()
     verts.unpersist()

@@ -25,19 +25,18 @@ Spark-first design — the sparse-state trick specialized to Katz:
   hash-partitioned by src so only the small state moves), then
   groupBy(dst).sum — partial-aggregatable, hub skew combines map-side.
 * the merge with base is a left join on the static localCheckpointed
-  base table; one driver action per superstep (the eager
-  localCheckpoint) carries an Observation L1 delta for the optional
-  tol mode with zero extra jobs — same pattern as pagerank.py:241-254.
+  base table; the superstep driver's (``graph/loop.py``) one action per
+  superstep carries an Observation L1 delta for the optional tol mode
+  with zero extra jobs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges
-
-from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning, release)
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import adaptive_partitions, eager_checkpoint
 
 
 def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
@@ -97,16 +96,14 @@ def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
         .repartition(nparts, "vid")
         .transform(eager_checkpoint)
     )
-    state = (receivers.select("vid", F.lit(float(beta)).alias("x"))
-             .repartition(nparts, "vid").transform(eager_checkpoint))
+    info: dict = {"iterations": 0, "converged": False, "l1": []}
+    loop = SuperstepLoop(e.sparkSession, "katz", nparts, max_iter, info=info)
+    state, _ = loop.commit(receivers.select("vid", F.lit(float(beta)).alias("x"))
+                           .repartition(nparts, "vid"))
     e.unpersist()
 
-    info: dict = {"iterations": 0, "converged": False, "l1": []}
-    # pause AQE and size every superstep exchange to the measured loop
-    # (session.loop_tuning): the loop's stage shapes are static, so the
-    # per-round re-planning latency buys nothing
-    with loop_tuning(e.sparkSession, nparts):
-        for _ in range(max_iter):
+    with loop:
+        for _ in loop:
             contrib = (
                 state.join(le.withColumnRenamed("src", "vid"), "vid")
                 .select(F.col("dst").alias("vid"),
@@ -114,36 +111,24 @@ def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
                 .groupBy("vid")
                 .agg(F.sum("c").alias("c"))
             )
-            obs = Observation()
-            new_state = (
+            state, m = loop.commit(loop.observe(
                 base.join(contrib, "vid", "left")
                 .select("vid",
                         (F.col("base") + F.lit(float(alpha))
                          * F.coalesce("c", F.lit(0.0))).alias("x"))
-                .join(state.withColumnRenamed("x", "x_old"), "vid", "left")
-                .observe(obs, F.sum(F.abs(F.col("x")
-                                          - F.coalesce("x_old",
-                                                       F.lit(0.0))))
-                         .alias("l1"))
-                .select("vid", "x")
-                .transform(eager_checkpoint)
-            )
-            release(state)
-            state = new_state
-            info["iterations"] += 1
-            l1 = obs.get["l1"] or 0.0
+                .join(state.withColumnRenamed("x", "x_old"), "vid", "left"),
+                F.sum(F.abs(F.col("x") - F.coalesce("x_old", F.lit(0.0)))).alias("l1"),
+            ).select("vid", "x"))
+            l1 = m["l1"] or 0.0
             info["l1"].append(float(l1))
-            if tol is not None and l1 < tol:
-                info["converged"] = True
-                break
+            loop.end_round(tol is not None and l1 < tol)
 
-    out = state.unionByName(
-        e.select(F.col("src").alias("vid")).distinct()
-        .join(receivers, "vid", "left_anti")
-        .select("vid", F.lit(float(beta)).alias("x")))
     # materialize before releasing the caches: the returned lazy plan
     # reads them, and the caller's first action would otherwise re-run
     # the full pipeline against uncached inputs
-    out = out.transform(eager_checkpoint)
+    out = loop.finish(state.unionByName(
+        e.select(F.col("src").alias("vid")).distinct()
+        .join(receivers, "vid", "left_anti")
+        .select("vid", F.lit(float(beta)).alias("x"))))
     le.unpersist()
     return out, info

@@ -1,0 +1,188 @@
+"""The superstep driver: one protocol for every single-state iterative loop.
+
+An operator keeps its setup and its step plan; ``SuperstepLoop`` owns the
+rest, so the rules below hold in one place instead of one copy per loop:
+
+* **tuning**: ``with loop:`` runs the loop under ``session.loop_tuning``
+  at the loop's partition count (AQE paused, every superstep exchange
+  sized to the measured data). The operator enters it where its loop
+  setup begins; what runs before stays on the session's settings.
+* **exactly ONE driver action per superstep**: ``commit(plan)`` eager-
+  localCheckpoints the step's plan. Every per-round scalar the loop needs
+  (changed count, L1 delta, dangling mass, frontier size) rides an
+  ``Observation`` that ``observe`` attaches anywhere inside that plan, so
+  the checkpoint job fills them and no separate compare-join/count job
+  runs; ``commit`` returns them. The checkpoint also truncates the plan,
+  so lineage never grows across supersteps: a step that reads its state
+  twice (a self-join, a keep-own fallback) would otherwise double its
+  plan every round.
+* **release**: once the new state is materialized, ``commit`` frees the
+  superseded state and the scratch caches registered with ``cache``
+  through ``session.release`` (a plain ``unpersist`` never frees a local
+  checkpoint). A loop therefore holds one state whatever its iteration
+  count. ``finish`` materializes the operator's result from the final
+  state and frees the rest.
+* **the CheckpointStore protocol**: ``converged_state`` is the resume
+  short-circuit (a run already marked converged returns its converged
+  state verbatim; an extra superstep would drift the result by < tol and
+  burn a full pass), ``resumed_state`` restarts from the latest committed
+  iteration, and ``end_round`` writes the state on the
+  ``checkpoint_every`` cadence (and on convergence and the last round),
+  appends the round's metrics and marks convergence. The write is for
+  durability and resume only: the loop keeps its in-memory state, whose
+  plan the eager checkpoint has already truncated (a parquet round trip
+  changes no value, so a re-read would change nothing).
+
+Shape of a loop::
+
+    loop = SuperstepLoop(spark, "cc", shuffle_n, max_iter, ckpt=ckpt, info=info)
+    with loop:
+        for it in loop:
+            plan = ...  # the step, reading the current state
+            state, m = loop.commit(loop.observe(plan, changed_expr))
+            loop.end_round(m["changed"] == 0, changed=m["changed"])
+"""
+
+from __future__ import annotations
+
+import time
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+
+from credigraph_spark.checkpoint import CheckpointStore
+from credigraph_spark.session import eager_checkpoint, loop_tuning, release
+
+
+class SuperstepLoop:
+    """Drives rounds ``0 .. max_iter-1`` (or from a resumed iteration on)
+    until ``end_round`` reports convergence.
+
+    ``partitions``: the loop's shuffle-partition count (None keeps the
+    session's). ``info``: the operator's info dict; the driver keeps its
+    ``iterations``, ``converged`` and ``resumed_from`` keys. ``algo`` names
+    the loop's observations and its store metrics."""
+
+    def __init__(self, spark: SparkSession, algo: str, partitions: int | None,
+                 max_iter: int, ckpt: CheckpointStore | None = None,
+                 checkpoint_every: int = 5, resume: bool = True,
+                 info: dict | None = None):
+        self.spark = spark
+        self.algo = algo
+        self.partitions = partitions
+        self.max_iter = max_iter
+        self.ckpt = ckpt
+        self.checkpoint_every = checkpoint_every
+        self.resume = resume and ckpt is not None
+        self.info = info if info is not None else {}
+        self.it = 0
+        self.converged = bool(self.info.get("converged", False))
+        self.state: DataFrame | None = None
+        self._held: list[DataFrame] = []     # the current state
+        self._next: list[DataFrame] = []     # parts of the next state
+        self._scratch: list[DataFrame] = []  # caches freed at the next commit
+        self._obs: list[Observation] = []
+        self._tuning = None
+        self._t0 = 0.0
+
+    # -- the store protocol before the first round --------------------------
+    def converged_state(self) -> DataFrame | None:
+        """The stored converged state when resuming a run already marked
+        converged (``info`` updated as if it had just run), else None."""
+        if not self.resume:
+            return None
+        done = self.ckpt.converged_iteration()
+        if done is None:
+            return None
+        self.info.update(iterations=done + 1, converged=True, resumed_from=done)
+        return self.ckpt.read_state(self.spark, done)
+
+    def resumed_state(self) -> DataFrame | None:
+        """The latest committed state, the loop then continuing after its
+        iteration; None on a fresh run."""
+        last = self.ckpt.latest_iteration() if self.resume else None
+        if last is None:
+            return None
+        self.it = last + 1
+        self.info["resumed_from"] = last
+        return self.ckpt.read_state(self.spark, last)
+
+    # -- the loop ----------------------------------------------------------
+    def __enter__(self) -> SuperstepLoop:
+        self._tuning = loop_tuning(self.spark, self.partitions)
+        self._tuning.__enter__()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._tuning.__exit__(*exc)
+
+    def __iter__(self):
+        while self.it < self.max_iter and not self.converged:
+            self._t0 = time.time()
+            yield self.it
+            self.it += 1
+            self.info["iterations"] = self.it
+        self.info["converged"] = self.converged
+
+    def observe(self, df: DataFrame, *exprs) -> DataFrame:
+        """``df`` observing ``exprs``; their values come back from the
+        next ``commit``."""
+        obs = Observation(f"{self.algo}_{self.it}_{len(self._obs)}")
+        self._obs.append(obs)
+        return df.observe(obs, *exprs)
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted until the next ``commit`` has materialized its
+        state: a round's scratch, or a not-yet-checkpointed first state."""
+        out = df.persist()
+        self._scratch.append(out)
+        return out
+
+    def checkpoint(self, plan: DataFrame) -> DataFrame:
+        """Materialize a part of the NEXT state that the round's ``commit``
+        plan reads together with the current state; it is released with
+        the state it belongs to, one commit later."""
+        out = eager_checkpoint(plan)
+        self._next.append(out)
+        return out
+
+    def commit(self, plan: DataFrame) -> tuple[DataFrame, dict]:
+        """The round's one action: materialize the new state, then release
+        the superseded state and the scratch caches. Returns the new state
+        and every value observed since the last commit."""
+        new = eager_checkpoint(plan)
+        metrics: dict = {}
+        for obs in self._obs:
+            metrics.update(obs.get)
+        for df in self._held + self._scratch:
+            release(df)
+        self._held, self._next, self._scratch, self._obs = self._next + [new], [], [], []
+        self.state = new
+        return new, metrics
+
+    def end_round(self, converged: bool, write: DataFrame | None = None,
+                  **metrics) -> None:
+        """Close the round: the loop stops after it when ``converged``. On
+        the store's cadence, and on convergence and the last round, write
+        ``write`` (default: the state) with ``metrics`` and mark
+        convergence."""
+        self.converged = bool(converged)
+        done = self.it + 1
+        if self.ckpt is None or not (converged or done % self.checkpoint_every == 0
+                                     or done >= self.max_iter):
+            return
+        self.ckpt.write_state(self.state if write is None else write, self.it)
+        self.ckpt.append_metrics(
+            self.it, {"algo": self.algo, **metrics,
+                      "wall_ms": (time.time() - self._t0) * 1e3,
+                      "converged": self.converged})
+        if self.converged:
+            self.ckpt.mark_converged(self.it)
+
+    def finish(self, plan: DataFrame) -> DataFrame:
+        """Materialize the operator's result from the final state, then
+        release everything the loop still holds."""
+        out = eager_checkpoint(plan)
+        for df in self._held + self._next + self._scratch:
+            release(df)
+        self._held, self._next, self._scratch = [], [], []
+        return out

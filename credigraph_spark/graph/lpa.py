@@ -16,21 +16,19 @@ so one hot vertex never serializes a whole window partition).
 Tie-break (count desc, label asc) is encoded by maxing the struct
 (count, -label).
 
-EXACTLY ONE driver action per superstep: the changed-label count rides as
-an ``Observation`` on the same eager ``localCheckpoint`` job that
-materializes the new state (the previous label is carried through the
-plan, so no separate compare-join/count job runs).
+The loop runs on the superstep driver (``graph/loop.py``): the
+changed-label count rides its one action per superstep (the previous
+label is carried through the plan).
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning, release
+from credigraph_spark.session import adaptive_partitions
 from credigraph_spark.graph.adjacency import undirected_simple, vertices_from_edges
+from credigraph_spark.graph.loop import SuperstepLoop
 from credigraph_spark.graph.pregel import messages
 
 
@@ -94,21 +92,14 @@ def label_propagation(
     n = verts.count()
     und.count()
     info: dict = {"n_vertices": n, "iterations": 0, "converged": n == 0}
-
-    start_iter = 0
-    labels = None
-    if ckpt is not None and resume:
-        done = ckpt.converged_iteration()
-        if done is not None:
-            und.unpersist()
-            verts.unpersist()
-            info.update(iterations=done + 1, converged=True, resumed_from=done)
-            return ckpt.read_state(spark, done), info
-        last = ckpt.latest_iteration()
-        if last is not None:
-            labels = ckpt.read_state(spark, last)
-            start_iter = last + 1
-            info["resumed_from"] = last
+    loop = SuperstepLoop(spark, "lpa", shuffle_n, max_iter, ckpt=ckpt,
+                         checkpoint_every=checkpoint_every, resume=resume, info=info)
+    done = loop.converged_state()
+    if done is not None:
+        und.unpersist()
+        verts.unpersist()
+        return done, info
+    labels = loop.resumed_state()
     if labels is None and init_labels is not None:
         il = init_labels.select(
             F.col(init_labels.columns[0]).alias("vid"),
@@ -118,13 +109,10 @@ def label_propagation(
                           .alias("label")))
     if labels is None:
         labels = verts.select("vid", F.col("vid").alias("label"))
-    labels = labels.persist()
+    labels = loop.cache(labels)
 
-    it = start_iter
-    converged = info["converged"]
-    with loop_tuning(spark, shuffle_n):
-        while it < max_iter and not converged:
-            t0 = time.time()
+    with loop:
+        for _ in loop:
             # gather via the pregel primitive (raw message stream: LPA needs
             # a per-(vid, label) count, i.e. a two-key groupBy over messages)
             # ONE hash(vid) exchange per round (the louvain local-move
@@ -157,39 +145,16 @@ def label_propagation(
                 F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
             ).select("vid", (-F.col("m.neg")).alias("new_label"))
 
-            # ONE driver action: the eager localCheckpoint (required anyway —
-            # the plan references the previous state in both the message join
-            # and the keep-own fallback, so it would double each round without
-            # truncation) also fills the changed-count observation.
-            obs = Observation(f"lpa_changed_{it}")
-            new_labels = (
+            # the changed count rides the driver's one action per round
+            labels, metrics = loop.commit(loop.observe(
                 labels.select("vid", F.col("label").alias("prev"))
                 .join(best, "vid", "left")
-                .select("vid", "prev", F.coalesce("new_label", F.col("prev")).alias("label"))
-                .observe(obs, F.sum((F.col("label") != F.col("prev")).cast("long")).alias("changed"))
-                .select("vid", "label")
-                .transform(eager_checkpoint)
-            )
-            changed = obs.get["changed"] or 0
-            release(labels)
-            labels = new_labels
-            converged = changed == 0
-            it += 1
-            info["iterations"] = it
+                .select("vid", "prev", F.coalesce("new_label", F.col("prev")).alias("label")),
+                F.sum((F.col("label") != F.col("prev")).cast("long")).alias("changed"),
+            ).select("vid", "label"))
+            changed = metrics["changed"] or 0
+            loop.end_round(changed == 0, changed=changed, rows=n)
 
-            if ckpt is not None and (converged or it % checkpoint_every == 0 or it >= max_iter):
-                # durability only: the in-memory labels stay (their plan is
-                # already truncated by the eager localCheckpoint)
-                ckpt.write_state(labels, it - 1)
-                ckpt.append_metrics(
-                    it - 1,
-                    {"algo": "lpa", "changed": changed, "rows": n,
-                     "wall_ms": (time.time() - t0) * 1e3, "converged": converged},
-                )
-                if converged:
-                    ckpt.mark_converged(it - 1)
-
-    info["converged"] = converged
     und.unpersist()
     verts.unpersist()
     return labels, info

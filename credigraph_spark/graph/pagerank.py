@@ -32,10 +32,9 @@ Spark-first physical design (NOT a port of the per-node Python loop):
   derived from an ``Observation`` over the contribution stream
   (Σ contrib into dangling receivers is a running aggregate of the same
   rows the superstep already scans), plus closed-form scalar terms;
-* exactly ONE driver action per superstep: the eager localCheckpoint of
-  the new state fills both observations (dangling mass on the
-  contribution stream, convergence L1 on the old⋈new join) and truncates
-  the plan, so lineage never grows across supersteps;
+* the superstep driver (``graph/loop.py``) runs the loop: its one action
+  per superstep fills both observations (dangling mass on the
+  contribution stream, convergence L1 on the old⋈new join);
 * two physical modes:
   - ``mode="shuffle"`` (default; state of any size): edges cached
     hash-partitioned by ``src``; per superstep the (small) rank state
@@ -50,25 +49,20 @@ Spark-first physical design (NOT a port of the per-node Python loop):
     (ZERO shuffled rows per superstep) and the L1 join is co-partitioned.
   ``mode="auto"`` picks broadcast while the receiver count is at most
   ``session.BROADCAST_MAX_ROWS``.
-* per-superstep checkpoints (full vid,rank table) to the CheckpointStore:
-  durable resume + metrics + converged marker. Resuming a converged run
-  short-circuits right after the vertex table, before any edge layout
-  is built. The store write is for durability only: the loop keeps its
-  in-memory state, whose plan the eager localCheckpoint has already
-  truncated (a parquet round trip of doubles is exact, so a re-read
-  would change nothing).
+* per-superstep checkpoints of the FULL (vid, rank) table to the
+  CheckpointStore. Resuming a converged run short-circuits right after
+  the vertex table, before any edge layout is built.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
 from credigraph_spark.session import (BROADCAST_MAX_ROWS, adaptive_partitions,
-                                      eager_checkpoint, loop_tuning)
+                                      eager_checkpoint)
 from credigraph_spark.graph.adjacency import clean_edges
+from credigraph_spark.graph.loop import SuperstepLoop
 
 
 def pagerank(
@@ -168,16 +162,13 @@ def pagerank(
     }
     if n == 0:
         return vt.select("vid", F.lit(0.0).alias("rank")), info
-    if ckpt is not None and resume:
-        done = ckpt.converged_iteration()
-        if done is not None:
-            # already-converged run: return the converged state verbatim —
-            # an extra superstep would drift the result by < tol — before
-            # any edge layout is built.
-            info.update(iterations=done + 1, converged=True, resumed_from=done)
-            return ckpt.read_state(spark, done), info
-
     shuffle_n = num_partitions or adaptive_partitions(info["n_edges"])
+    loop = SuperstepLoop(spark, "pagerank", shuffle_n, max_iter, ckpt=ckpt,
+                         checkpoint_every=checkpoint_every, resume=resume, info=info)
+    done = loop.converged_state()
+    if done is not None:
+        return done, info
+
     base = (1.0 - damping) / n
     salted = mode == "shuffle" and salt_buckets > 0
     recv_vids = vt.where(recv).select("vid")
@@ -189,7 +180,7 @@ def pagerank(
             out = out.unionByName(nonrecv.select("vid", F.lit(default).alias("rank")))
         return out
 
-    with loop_tuning(spark, shuffle_n):
+    with loop:
         # static per-edge columns: the src's out_deg and whether the src is
         # a receiver (the static/dynamic split below), whether the dst is a
         # dangling receiver (feeds the observed dangling-mass sum) and -
@@ -245,13 +236,10 @@ def pagerank(
             dyn = edges_deg.where(F.col("src_recv"))
 
         # -- initial / resumed state --------------------------------------
-        start_iter = 0
-        sparse = None
         default = 1.0 / n
         dangling_sum = info["n_dangling"] * (1.0 / n)  # analytic under uniform init
-        last = ckpt.latest_iteration() if ckpt is not None and resume else None
-        if last is not None:
-            full = ckpt.read_state(spark, last)
+        full = loop.resumed_state()
+        if full is not None:
             # one aggregation: the non-receivers' (shared) rank and the
             # dangling receivers' rank sum
             sums = full.join(vt, "vid").agg(
@@ -261,11 +249,8 @@ def pagerank(
             if m > 0:
                 default = sums["default"]
             dangling_sum = (sums["dang"] or 0.0) + m_dangling * default
-            sparse = (full.join(recv_vids, "vid", "left_semi")
-                      .repartition(shuffle_n, "vid").persist())
-            start_iter = last + 1
-            info["resumed_from"] = last
-        if sparse is None and init_ranks is not None:
+            sparse = full.join(recv_vids, "vid", "left_semi")
+        elif init_ranks is not None:
             # warm start: previous ranks where known, 1/N for new receivers.
             # The seeded state MUST be renormalized to total mass 1: a mass
             # error has no graph structure to mix it away and decays at
@@ -288,123 +273,84 @@ def pagerank(
                 F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dang"),
             ).collect()[0]
             scale = 1.0 / (sums["total"] + m * default)
-            sparse = (
-                seeded.select("vid", (F.col("rank") * scale).alias("rank"))
-                .repartition(shuffle_n, "vid")
-                .persist()
-            )
+            sparse = seeded.select("vid", (F.col("rank") * scale).alias("rank"))
             default *= scale
             dangling_sum = sums["dang"] * scale + m_dangling * default
             info["warm_start"] = True
-        if sparse is None:
-            sparse = (recv_vids.select("vid", F.lit(1.0 / n).alias("rank"))
-                      .repartition(shuffle_n, "vid").persist())
+        else:
+            sparse = recv_vids.select("vid", F.lit(1.0 / n).alias("rank"))
+        sparse = loop.cache(sparse.repartition(shuffle_n, "vid"))
 
-        converged = info["converged"]
-        it = start_iter
-        while it < max_iter and not converged:
-                t0 = time.time()
-                rank_by_src = sparse.select(F.col("vid").alias("src"), "rank")
-                if mode == "broadcast":
-                    joined = dyn.join(F.broadcast(rank_by_src), "src", "left")
-                else:
-                    joined = dyn.join(rank_by_src, "src", "left")
-                if weight_col is not None:
-                    c = (F.coalesce(F.col("rank"), F.lit(default))
-                         * F.col("w") / F.col("out_deg")).alias("c")
-                else:
-                    c = (F.coalesce(F.col("rank"), F.lit(default)) / F.col("out_deg")).alias("c")
+        for _ in loop:
+            rank_by_src = sparse.select(F.col("vid").alias("src"), "rank")
+            if mode == "broadcast":
+                joined = dyn.join(F.broadcast(rank_by_src), "src", "left")
+            else:
+                joined = dyn.join(rank_by_src, "src", "left")
+            if weight_col is not None:
+                c = (F.coalesce(F.col("rank"), F.lit(default))
+                     * F.col("w") / F.col("out_deg")).alias("c")
+            else:
+                c = (F.coalesce(F.col("rank"), F.lit(default)) / F.col("out_deg")).alias("c")
 
-                # the dangling-receiver contribution sum rides along as an
-                # observation on rows the superstep scans anyway — no extra join.
-                obs = Observation(f"pr_dangling_{it}")
-                if mode == "shuffle" and salt_buckets > 0:
-                    stream = joined.select(
-                        "dst", c, "dst_dangling",
-                        F.when(F.col("is_hot"), F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
-                        .otherwise(F.lit(0)).alias("_salt"),
-                    ).observe(obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
-                                         .otherwise(0.0)).alias("dc"))
-                    contribs = (
-                        stream.groupBy("dst", "_salt").agg(F.sum("c").alias("c"))
-                        .groupBy("dst").agg(F.sum("c").alias("contrib"))
-                    )
-                else:
-                    stream = joined.select("dst", c, "dst_dangling").observe(
-                        obs, F.sum(F.when(F.col("dst_dangling"), F.col("c"))
-                                   .otherwise(0.0)).alias("dc"))
-                    contribs = stream.groupBy("dst").agg(F.sum("c").alias("contrib"))
-                if sv is not None:
-                    # add the static coefficient vector (dsts fed only by
-                    # non-receiver sources appear via the full outer side);
-                    # both sides are hash(dst)-partitioned at shuffle_n, so
-                    # the join adds no exchange
-                    contribs = (
-                        contribs.join(sv.select("dst", "coef")
-                                      .hint("shuffle_hash"), "dst", "full_outer")
-                        .select("dst",
-                                (F.coalesce("contrib", F.lit(0.0))
-                                 + F.lit(default) * F.coalesce("coef", F.lit(0.0))
-                                 ).alias("contrib"))
-                    )
-
-                default_new = base + damping * (dangling_sum / n)
-                # ONE driver action: the eager localCheckpoint materializes the new
-                # sparse state, truncates the plan (no growth across supersteps),
-                # and fills BOTH observations — the dangling-contribution sum on
-                # the contribution stream and the sparse L1 on the old⋈new join
-                # (receiver sets are identical across supersteps, so the inner
-                # join drops nothing).
-                obs_l1 = Observation(f"pr_l1_{it}")
-                new_sparse = (
-                    contribs.select(
-                        F.col("dst").alias("vid"),
-                        (F.lit(base) + F.lit(damping) * (
-                            F.col("contrib") + F.lit(dangling_sum / n)
-                        )).alias("rank"),
-                    )
-                    .join(sparse.select("vid", F.col("rank").alias("prev")), "vid")
-                    .observe(obs_l1, F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"))
-                    .select("vid", "rank")
-                    .transform(eager_checkpoint)
+            # the dangling-receiver contribution sum rides along as an
+            # observation on rows the superstep scans anyway — no extra join.
+            cols = ["dst", c, "dst_dangling"]
+            if salted:
+                cols.append(F.when(F.col("is_hot"), F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
+                            .otherwise(F.lit(0)).alias("_salt"))
+            stream = loop.observe(joined.select(*cols),
+                                  F.sum(F.when(F.col("dst_dangling"), F.col("c"))
+                                        .otherwise(0.0)).alias("dc"))
+            if salted:
+                contribs = (
+                    stream.groupBy("dst", "_salt").agg(F.sum("c").alias("c"))
+                    .groupBy("dst").agg(F.sum("c").alias("contrib"))
                 )
-                l1_sparse = obs_l1.get["l1"] or 0.0
-                dang_contrib = (obs.get["dc"] or 0.0) + default * sd_static
-                l1 = l1_sparse + m * abs(default_new - default)
-                # Σ_{v∈DR} rank_new(v) = |DR|·default_new + d·Σ_{e→DR} c(e)
-                next_dangling = (
-                    n_recv_dangling * default_new
-                    + damping * dang_contrib
-                    + m_dangling * default_new
+            else:
+                contribs = stream.groupBy("dst").agg(F.sum("c").alias("contrib"))
+            if sv is not None:
+                # add the static coefficient vector (dsts fed only by
+                # non-receiver sources appear via the full outer side);
+                # both sides are hash(dst)-partitioned at shuffle_n, so
+                # the join adds no exchange
+                contribs = (
+                    contribs.join(sv.select("dst", "coef")
+                                  .hint("shuffle_hash"), "dst", "full_outer")
+                    .select("dst",
+                            (F.coalesce("contrib", F.lit(0.0))
+                             + F.lit(default) * F.coalesce("coef", F.lit(0.0))
+                             ).alias("contrib"))
                 )
-                sparse.unpersist()
-                sparse = new_sparse
-                default = default_new
-                converged = l1 < tol
-                it += 1
-                info["iterations"] = it
-                info["l1_history"].append(l1)
 
-                if ckpt is not None and (converged or it % checkpoint_every == 0
-                                         or it >= max_iter):
-                    # durability only: the in-memory state stays, its plan
-                    # already truncated by the eager localCheckpoint
-                    ckpt.write_state(full_rank(sparse, default), it - 1)
-                    ckpt.append_metrics(
-                        it - 1,
-                        {"algo": "pagerank", "l1_diff": l1, "dangling_mass": dangling_sum,
-                         "wall_ms": (time.time() - t0) * 1e3, "rows": n,
-                         "converged": converged},
-                    )
-                    if converged:
-                        ckpt.mark_converged(it - 1)
-                dangling_sum = next_dangling
+            default_new = base + damping * (dangling_sum / n)
+            # the sparse L1 rides the old⋈new join (receiver sets are
+            # identical across supersteps, so the inner join drops nothing)
+            sparse, obs = loop.commit(loop.observe(
+                contribs.select(
+                    F.col("dst").alias("vid"),
+                    (F.lit(base) + F.lit(damping) * (
+                        F.col("contrib") + F.lit(dangling_sum / n)
+                    )).alias("rank"),
+                )
+                .join(sparse.select("vid", F.col("rank").alias("prev")), "vid"),
+                F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
+            ).select("vid", "rank"))
+            dang_contrib = (obs["dc"] or 0.0) + default * sd_static
+            l1 = (obs["l1"] or 0.0) + m * abs(default_new - default)
+            # Σ_{v∈DR} rank_new(v) = |DR|·default_new + d·Σ_{e→DR} c(e)
+            next_dangling = (
+                n_recv_dangling * default_new
+                + damping * dang_contrib
+                + m_dangling * default_new
+            )
+            default = default_new
+            info["l1_history"].append(l1)
+            loop.end_round(l1 < tol, write=full_rank(sparse, default),
+                           l1_diff=l1, dangling_mass=dangling_sum, rows=n)
+            dangling_sum = next_dangling
 
-        info["converged"] = converged
-        # materialize before releasing the caches: the sparse state may
-        # still be the persisted initial/resumed table
-        result = full_rank(sparse, default).transform(eager_checkpoint)
-        sparse.unpersist()
+        result = loop.finish(full_rank(sparse, default))
         edges_deg.unpersist()
     return result, info
 

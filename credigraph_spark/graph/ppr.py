@@ -25,16 +25,17 @@ Scale shape (mirrors graph/pagerank.py's superstep discipline):
   same stream (rank_{t+1} restricted to dangling vids is, by linearity,
   the sum of the stream's flagged rows) — the former per-iteration
   scalar-aggregate job over the state is gone;
-* the eager localCheckpoint is the one action per iteration: it fills
-  the observation and truncates lineage.
+* the superstep driver's (``graph/loop.py``) one action per iteration
+  fills the observation and truncates lineage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges, out_degrees
-from credigraph_spark.session import eager_checkpoint, loop_tuning
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import eager_checkpoint
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
@@ -97,10 +98,11 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
         return s.select("vid", F.lit(0.0).alias("rank"))
     p = 1.0 / n_seeds
 
-    state = seed_rows.select("vid", F.lit(p).alias("rank")).transform(eager_checkpoint)
+    loop = SuperstepLoop(spark, "ppr", None, max_iter)
+    state, _ = loop.commit(seed_rows.select("vid", F.lit(p).alias("rank")))
     dangling_sum = p * n_dang_seeds  # analytic at t=0 (uniform seed mass)
-    with loop_tuning(spark):
-        for it in range(max_iter):
+    with loop:
+        for _ in loop:
             teleport = (1.0 - damping) * p + damping * dangling_sum * p
             fwd = F.lit(damping) * F.col("rank") / F.col("out_deg")
             if weight_col is not None:
@@ -119,18 +121,14 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                     F.col("seed_dangling").alias("dang"),
                 )
             )
-            obs = Observation(f"ppr_dang_{it}")
-            new_state = (
-                stream.observe(
-                    obs, F.sum(F.when(F.col("dang"), F.col("val"))
-                               .otherwise(0.0)).alias("nd"))
+            state, m = loop.commit(
+                loop.observe(stream, F.sum(F.when(F.col("dang"), F.col("val"))
+                                           .otherwise(0.0)).alias("nd"))
                 .groupBy("vid")
                 .agg(F.sum("val").alias("rank"))
-                .transform(eager_checkpoint)  # the ONE action this iteration
             )
             # Σ_{v dangling} rank_{t+1}(v), by linearity of the stream sum
-            dangling_sum = obs.get["nd"] or 0.0
-            state = new_state
+            dangling_sum = m["nd"] or 0.0
     ed.unpersist()
     return state
 

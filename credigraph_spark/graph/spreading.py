@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
+from credigraph_spark.graph.loop import SuperstepLoop
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning, measured_repartition,
-                                      release)
+                                      measured_repartition)
 
 
 def label_spreading(edges: DataFrame, seeds: DataFrame,
@@ -66,34 +66,29 @@ def label_spreading(edges: DataFrame, seeds: DataFrame,
     # partitioned by vid so each round's deg⋈msgs is exchange-free
     dsy = (deg.join(sd, "vid", "left")
            .repartition(nparts, "vid").persist())
-    state = (dsy.select("vid",
-                        F.coalesce("y", F.lit(float(init))).alias("f"))
-             .transform(eager_checkpoint))
-    # AQE's per-stage re-planning is a fixed serial cost every superstep
-    # pays (the pagerank loop precedent) — pause it for the loop
-    with loop_tuning(edges.sparkSession, nparts):
-        for _ in range(max_iter):
+    loop = SuperstepLoop(edges.sparkSession, "spread", nparts, max_iter)
+    state, _ = loop.commit(dsy.select("vid",
+                                      F.coalesce("y", F.lit(float(init))).alias("f")))
+    with loop:
+        for _ in loop:
             msgs = (state.join(le.withColumnRenamed("src", "vid"), "vid")
                     .groupBy(F.col("dst").alias("vid"))
                     .agg(F.sum(F.col("f") * F.col("w")).alias("s")))
             # msgs comes out hash(vid)×nparts from the groupBy — aligned
             # with dsy, so no repartition before the checkpoint
-            new_state = (dsy.join(msgs, "vid", "left")
-                         .select("vid",
-                                 F.coalesce(
-                                     "y", F.col("s") / F.col("deg")).alias("f"))
-                         .transform(eager_checkpoint))
-            release(state)
-            state = new_state
-    out = (state.join(dsy.select("vid", "y"), "vid", "left")
-           .select("vid",
-                   (F.round("f", round_digits) if round_digits is not None
-                    else F.col("f")).alias("score"),
-                   F.col("y").isNotNull().alias("is_seed")))
+            state, _ = loop.commit(
+                dsy.join(msgs, "vid", "left")
+                .select("vid",
+                        F.coalesce("y", F.col("s") / F.col("deg")).alias("f")))
     # materialize before releasing the caches: the returned lazy plan
     # reads them, and the caller's first action would otherwise re-run
     # the full pipeline against uncached inputs
-    out = out.transform(eager_checkpoint)
+    out = loop.finish(
+        state.join(dsy.select("vid", "y"), "vid", "left")
+        .select("vid",
+                (F.round("f", round_digits) if round_digits is not None
+                 else F.col("f")).alias("score"),
+                F.col("y").isNotNull().alias("is_seed")))
     le.unpersist()
     dsy.unpersist()
     return out
@@ -113,24 +108,27 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 3,
     appear (no edges → no centrality mass), matching the adjacency
     semantics of the rest of the engine."""
     und = undirected_simple(edges.select("src", "dst"))
+    return _power_iteration(und, F.col("x"), "eigenvector", max_iter, round_digits)
+
+
+def _power_iteration(und: DataFrame, term, algo: str, max_iter: int,
+                     round_digits: int | None) -> DataFrame:
+    """x ← Σ_{u→v} ``term`` from the all-ones start, L2-normalized each
+    round, over the symmetrized edge set ``und``."""
     le, _, nparts = measured_repartition(und, "src")
     verts = (le.select(F.col("dst").alias("vid")).distinct()
              .repartition(nparts, "vid").persist())
-    # ck: the checkpoint the current state projects (released once the
-    # next round's msgs are materialized)
-    state = ck = (verts.select("vid", F.lit(1.0).alias("x"))
-                  .transform(eager_checkpoint))
-    with loop_tuning(edges.sparkSession, nparts):
-        for _ in range(max_iter):
-            # msgs feeds TWO subplans (norm scalar + next state) — eager
-            # localCheckpoint first, or each round re-executes the join;
-            # the groupBy already leaves it hash(vid)×nparts
-            msgs = (state.join(le.withColumnRenamed("src", "vid"), "vid")
-                    .groupBy(F.col("dst").alias("vid"))
-                    .agg(F.sum("x").alias("s"))
-                    .transform(eager_checkpoint))
-            release(ck)
-            ck = msgs
+    loop = SuperstepLoop(und.sparkSession, algo, nparts, max_iter)
+    state, _ = loop.commit(verts.select("vid", F.lit(1.0).alias("x")))
+    with loop:
+        for _ in loop:
+            # msgs feeds TWO subplans (norm scalar + next state) — the
+            # driver checkpoints it first, or each round re-executes the
+            # join; the groupBy already leaves it hash(vid)×nparts. The
+            # state is a projection of that checkpoint.
+            msgs, _ = loop.commit(state.join(le.withColumnRenamed("src", "vid"), "vid")
+                                  .groupBy(F.col("dst").alias("vid"))
+                                  .agg(F.sum(term).alias("s")))
             nrm = msgs.agg(F.sqrt(F.sum(F.col("s") * F.col("s")))
                            .alias("n")).collect()[0].n
             state = msgs.select("vid",
@@ -200,30 +198,26 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
         1, 15), 16, 10).cast("double") / F.lit(float(16 ** 15)))
     x0 = vert.select("vid", "rs", "v1",
                      (frac * 2.0 - 1.0).alias("x"))
-    with loop_tuning(edges.sparkSession, nparts):
-        x0 = x0.transform(eager_checkpoint)
+    loop = SuperstepLoop(edges.sparkSession, "fiedler", nparts, max_iter)
+    with loop:
+        x0, _ = loop.commit(x0)
         # deflate-normalize the init with the same one-agg trick
         s = x0.agg(F.sum(F.col("x") * F.col("v1")).alias("c"),
                    F.sum(F.col("x") * F.col("x")).alias("s2")).collect()[0]
         nrm = math.sqrt(s.s2 - s.c * s.c)
-        # ck: the checkpoint the current state projects
-        state = ck = (x0.select(
+        state, _ = loop.commit(x0.select(
             "vid", "rs", "v1",
             ((F.col("x") - F.lit(float(s.c)) * F.col("v1"))
-             / F.lit(float(nrm))).alias("x"))
-            .transform(eager_checkpoint))
-        release(x0)
-        for _ in range(max_iter):
+             / F.lit(float(nrm))).alias("x")))
+        for _ in loop:
             msgs = (state.select(F.col("vid").alias("src"), "x")
                     .join(lez, "src")
                     .groupBy(F.col("dst").alias("vid"))
                     .agg(F.sum(F.col("x") * F.col("rs_u")).alias("m")))
-            y = (state.join(msgs, "vid")
-                 .select("vid", "rs", "v1",
-                         (F.col("x") + F.col("rs") * F.col("m")).alias("y"))
-                 .transform(eager_checkpoint))
-            release(ck)
-            ck = y
+            # the state is a projection of the checkpointed y
+            y, _ = loop.commit(state.join(msgs, "vid")
+                               .select("vid", "rs", "v1",
+                                       (F.col("x") + F.col("rs") * F.col("m")).alias("y")))
             s = y.agg(F.sum(F.col("y") * F.col("v1")).alias("c"),
                       F.sum(F.col("y") * F.col("y")).alias("s2")).collect()[0]
             nrm = math.sqrt(s.s2 - s.c * s.c)
@@ -256,32 +250,8 @@ def eigenvector_centrality_weighted(edges: DataFrame, weight_col: str,
     und = (ew.unionByName(ew.select(F.col("dst").alias("src"),
                                     F.col("src").alias("dst"), "w"))
            .groupBy("src", "dst").agg(F.sum("w").alias("w")))
-    le, _, nparts = measured_repartition(und, "src")
-    verts = (le.select(F.col("dst").alias("vid")).distinct()
-             .repartition(nparts, "vid").persist())
-    # ck: the checkpoint the current state projects (released once the
-    # next round's msgs are materialized)
-    state = ck = (verts.select("vid", F.lit(1.0).alias("x"))
-                  .transform(eager_checkpoint))
-    with loop_tuning(edges.sparkSession, nparts):
-        for _ in range(max_iter):
-            msgs = (state.join(le.withColumnRenamed("src", "vid"), "vid")
-                    .groupBy(F.col("dst").alias("vid"))
-                    .agg(F.sum(F.col("x") * F.col("w")).alias("s"))
-                    .transform(eager_checkpoint))
-            release(ck)
-            ck = msgs
-            nrm = msgs.agg(F.sqrt(F.sum(F.col("s") * F.col("s")))
-                           .alias("n")).collect()[0].n
-            state = msgs.select("vid",
-                                (F.col("s") / F.lit(float(nrm))).alias("x"))
-    out = state.select(
-        "vid",
-        (F.round("x", round_digits) if round_digits is not None
-         else F.col("x")).alias("x"))
-    le.unpersist()
-    verts.unpersist()
-    return out
+    return _power_iteration(und, F.col("x") * F.col("w"), "eigenvector_w",
+                            max_iter, round_digits)
 
 
 def spectral_sweep_cut(edges: DataFrame, max_iter: int = 3,

@@ -23,9 +23,11 @@ Design — Bellman-Ford as Spark supersteps with a delta frontier:
   verbatim, so the oracle is exact. Distances accumulate seed→vertex in
   path order in both engines; with integer-valued double weights the
   sums are bit-exact.
-* localCheckpoint per round truncates the growing plan; the frontier's
-  convergence probe rides an Observation on that same action, so each
-  round is exactly two jobs (merge + frontier) with no extra isEmpty.
+* the superstep driver (``graph/loop.py``) checkpoints the merged
+  distances and the frontier each round, truncating the growing plan;
+  the frontier's emptiness probe rides an Observation on its checkpoint,
+  so each round is exactly two jobs (merge + frontier) with no extra
+  isEmpty. Both are released once the next round has replaced them.
 * the edge table is cached hash-partitioned by src (measured,
   scale-adaptive partition count) so rounds only shuffle frontier rows.
 
@@ -36,10 +38,52 @@ which decays geometrically on real graphs once the wavefront passes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from credigraph_spark.session import (eager_checkpoint, loop_tuning,
-                                      measured_repartition)
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import measured_repartition
+
+
+def _relation(edges: DataFrame, value, name: str, directed: bool):
+    """(vid, dst, <name>) edge table keyed by source, reversed copies
+    added when undirected, cached hash-partitioned by vid at a measured,
+    scale-adaptive partition count. Returns (rel, nparts)."""
+    rel = edges.select(F.col("src"), F.col("dst"), value.alias(name))
+    if not directed:
+        rel = rel.unionByName(
+            rel.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
+                       name))
+    rel = rel.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    rel, _, nparts = measured_repartition(rel.withColumnRenamed("src", "vid"),
+                                          "vid")
+    return rel, nparts
+
+
+def _frontier_min(rel: DataFrame, nparts: int, init: DataFrame, keys: list[str],
+                  val: str, max_rounds: int, relax, algo: str) -> DataFrame:
+    """The delta-frontier min-combine loop: each round ``relax(frontier)``
+    yields candidate (keys, val) rows, the state keeps the min per key,
+    and the frontier is the keys whose value strictly improved (or is
+    new). Stops when the frontier is empty or after ``max_rounds``."""
+    loop = SuperstepLoop(rel.sparkSession, algo, nparts, max_rounds)
+    state, _ = loop.commit(init)
+    frontier = state
+    with loop:
+        for _ in loop:
+            merged = loop.checkpoint(
+                state.unionByName(relax(frontier))
+                .groupBy(*keys).agg(F.min(val).alias(val))
+            )
+            # improved = strictly better than previous state, or brand new
+            frontier, m = loop.commit(loop.observe(
+                merged.join(state.withColumnRenamed(val, "prev"), keys, "left")
+                .where(F.col("prev").isNull() | (F.col(val) < F.col("prev")))
+                .select(*keys, val),
+                F.count(F.lit(1)).alias("n")))
+            state = merged
+            loop.end_round((m["n"] or 0) == 0)
+    rel.unpersist()
+    return state
 
 
 def weighted_sssp(edges: DataFrame, seeds: DataFrame, max_rounds: int,
@@ -54,49 +98,16 @@ def weighted_sssp(edges: DataFrame, seeds: DataFrame, max_rounds: int,
     that layout and only the frontier side shuffles; the frontier's
     emptiness probe rides an Observation on its eager checkpoint instead
     of a separate isEmpty job (the greedy_matching idiom)."""
-    rel = edges.select(F.col("src"), F.col("dst"),
-                       F.col(weight_col).cast("double").alias("w"))
-    if not directed:
-        rel = rel.unionByName(
-            rel.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
-                       "w"))
-    rel = rel.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rel, _, nparts = measured_repartition(rel.withColumnRenamed("src", "vid"),
-                                          "vid")
-
-    state = (
+    rel, nparts = _relation(edges, F.col(weight_col).cast("double"), "w", directed)
+    return _frontier_min(
+        rel, nparts,
         seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct()
-        .select("vid", F.lit(0.0).alias("dist"))
-        .transform(eager_checkpoint)
-    )
-    frontier = state
-    with loop_tuning(edges.sparkSession, nparts):
-        for r in range(max_rounds):
-            cand = (
-                frontier.join(rel, "vid")
-                .select(F.col("dst").alias("vid"),
-                        (F.col("dist") + F.col("w")).alias("dist"))
-            )
-            merged = (
-                state.unionByName(cand)
-                .groupBy("vid").agg(F.min("dist").alias("dist"))
-                .transform(eager_checkpoint)
-            )
-            # improved = strictly better than previous state, or brand new
-            obs = Observation(f"sssp_frontier_{r}")
-            frontier = eager_checkpoint(
-                merged.join(state.withColumnRenamed("dist", "prev"),
-                            "vid", "left")
-                .where(F.col("prev").isNull()
-                       | (F.col("dist") < F.col("prev")))
-                .select("vid", "dist")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            state = merged
-            if (obs.get["n"] or 0) == 0:
-                break
-    rel.unpersist()
-    return state
+        .select("vid", F.lit(0.0).alias("dist")),
+        ["vid"], "dist", max_rounds,
+        lambda frontier: frontier.join(rel, "vid").select(
+            F.col("dst").alias("vid"), (F.col("dist") + F.col("w")).alias("dist")),
+        "sssp")
+
 
 def weighted_per_seed_distances(edges: DataFrame, seeds: DataFrame,
                                 max_rounds: int, weight_col: str = "w",
@@ -107,48 +118,15 @@ def weighted_per_seed_distances(edges: DataFrame, seeds: DataFrame,
     set). Same delta-frontier Bellman-Ford: only strictly-improved
     (seed, vid) pairs re-relax, state keyed (seed, vid) so all seeds
     share every edge scan. Seed rows appear with dist = 0."""
-    rel = edges.select(F.col("src"), F.col("dst"),
-                       F.col(weight_col).cast("double").alias("w"))
-    if not directed:
-        rel = rel.unionByName(
-            rel.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
-                       "w"))
-    rel = rel.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rel, _, nparts = measured_repartition(rel.withColumnRenamed("src", "vid"),
-                                          "vid")
-
-    state = (
+    rel, nparts = _relation(edges, F.col(weight_col).cast("double"), "w", directed)
+    return _frontier_min(
+        rel, nparts,
         seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
-        .select("seed", F.col("seed").alias("vid"), F.lit(0.0).alias("dist"))
-        .transform(eager_checkpoint)
-    )
-    frontier = state
-    with loop_tuning(edges.sparkSession, nparts):
-        for r in range(max_rounds):
-            cand = (
-                frontier.join(rel, "vid")
-                .select("seed", F.col("dst").alias("vid"),
-                        (F.col("dist") + F.col("w")).alias("dist"))
-            )
-            merged = (
-                state.unionByName(cand)
-                .groupBy("seed", "vid").agg(F.min("dist").alias("dist"))
-                .transform(eager_checkpoint)
-            )
-            obs = Observation(f"psd_frontier_{r}")
-            frontier = eager_checkpoint(
-                merged.join(state.withColumnRenamed("dist", "prev"),
-                            ["seed", "vid"], "left")
-                .where(F.col("prev").isNull()
-                       | (F.col("dist") < F.col("prev")))
-                .select("seed", "vid", "dist")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            state = merged
-            if (obs.get["n"] or 0) == 0:
-                break
-    rel.unpersist()
-    return state
+        .select("seed", F.col("seed").alias("vid"), F.lit(0.0).alias("dist")),
+        ["seed", "vid"], "dist", max_rounds,
+        lambda frontier: frontier.join(rel, "vid").select(
+            "seed", F.col("dst").alias("vid"), (F.col("dist") + F.col("w")).alias("dist")),
+        "psd")
 
 
 def weighted_harmonic_centrality(edges: DataFrame, seeds: DataFrame,
@@ -223,46 +201,13 @@ def earliest_arrival(edges: DataFrame, seeds: DataFrame, max_rounds: int,
     map-side before the exchange — with an eager localCheckpoint per
     round (lineage truncation + single materialization) and a delta
     frontier so settled vertices stop generating candidates."""
-    rel = edges.select(F.col("src"), F.col("dst"),
-                       F.col(ts_col).cast("long").alias("ts"))
-    if not directed:
-        rel = rel.unionByName(
-            rel.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
-                       "ts"))
-    rel = rel.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    rel, _, nparts = measured_repartition(rel.withColumnRenamed("src", "vid"),
-                                          "vid")
-
-    state = (
+    rel, nparts = _relation(edges, F.col(ts_col).cast("long"), "ts", directed)
+    return _frontier_min(
+        rel, nparts,
         seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct()
-        .select("vid", F.lit(int(start_ts)).cast("long").alias("t_arr"))
-        .transform(eager_checkpoint)
-    )
-    frontier = state
-    with loop_tuning(edges.sparkSession, nparts):
-        for r in range(max_rounds):
-            cand = (
-                frontier.join(rel, "vid")
-                .where(F.col("ts") >= F.col("t_arr"))
-                .select(F.col("dst").alias("vid"),
-                        F.col("ts").alias("t_arr"))
-            )
-            merged = (
-                state.unionByName(cand)
-                .groupBy("vid").agg(F.min("t_arr").alias("t_arr"))
-                .transform(eager_checkpoint)
-            )
-            obs = Observation(f"ea_frontier_{r}")
-            frontier = eager_checkpoint(
-                merged.join(state.withColumnRenamed("t_arr", "prev"),
-                            "vid", "left")
-                .where(F.col("prev").isNull()
-                       | (F.col("t_arr") < F.col("prev")))
-                .select("vid", "t_arr")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            state = merged
-            if (obs.get["n"] or 0) == 0:
-                break
-    rel.unpersist()
-    return state
+        .select("vid", F.lit(int(start_ts)).cast("long").alias("t_arr")),
+        ["vid"], "t_arr", max_rounds,
+        lambda frontier: frontier.join(rel, "vid")
+        .where(F.col("ts") >= F.col("t_arr"))
+        .select(F.col("dst").alias("vid"), F.col("ts").alias("t_arr")),
+        "ea")

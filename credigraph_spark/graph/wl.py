@@ -29,9 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
-
-from credigraph_spark.session import (eager_checkpoint, loop_tuning,
-                                      measured_repartition)
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import measured_repartition
 
 
 def _h60(col):
@@ -56,8 +55,9 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     colors = (und.groupBy(F.col("src").alias("vid"))
               .agg(F.count("*").alias("_d"))
               .select("vid", F.col("_d").cast("string").alias("color")))
-    with loop_tuning(spark, shuffle_n):
-        for _ in range(rounds):
+    loop = SuperstepLoop(spark, "wl", shuffle_n, rounds)
+    with loop:
+        for _ in loop:
             msgs = (und.join(colors.select(F.col("vid").alias("dst"),
                                            _h60(F.col("color")).alias("_nh")),
                              "dst")
@@ -65,18 +65,17 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
                     .agg(F.sum(F.col("_nh").cast("decimal(38,0)"))
                          .alias("_s"),
                          F.count("*").alias("_n")))
-            colors = (colors.join(msgs, "vid")
-                      .select("vid",
-                              F.substring(
-                                  F.md5(F.concat_ws(
-                                      ":", "color",
-                                      F.col("_s").cast("string"),
-                                      F.col("_n").cast("string"))), 1, 16)
-                              .alias("color"))
-                      .transform(eager_checkpoint))
+            colors, _ = loop.commit(
+                colors.join(msgs, "vid")
+                .select("vid",
+                        F.substring(
+                            F.md5(F.concat_ws(
+                                ":", "color",
+                                F.col("_s").cast("string"),
+                                F.col("_n").cast("string"))), 1, 16)
+                        .alias("color")))
     sizes = colors.groupBy("color").agg(F.count("*").alias("class_size"))
-    out = colors.join(sizes, "color").select("vid", "color", "class_size")
-    out = out.transform(eager_checkpoint)
+    out = loop.finish(colors.join(sizes, "color").select("vid", "color", "class_size"))
     und.unpersist()
     return out
 

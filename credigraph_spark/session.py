@@ -8,6 +8,7 @@ behavior. All knobs are overridable via ``extra`` or environment.
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
@@ -49,6 +50,10 @@ _DEFAULTS = {
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
+
+log = logging.getLogger("credigraph_spark")
+# set once eager_checkpoint has warned that its stats strip fell back
+_strip_warned = False
 
 
 # Row cap under which a measured join side (label/vertex map, rank
@@ -159,7 +164,12 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     product, not information: strip it by re-wrapping the checkpointed
     RDD in a fresh ``LogicalRDD`` with default (finite-bit) stats.
     Honest stats (≤ 127 bits) are kept, preserving the checkpoint's
-    output partitioning and broadcast eligibility."""
+    output partitioning and broadcast eligibility.
+
+    The strip goes through private Spark API. If that API fails, the
+    plain checkpoint is returned and ONE warning per process is logged
+    on the ``credigraph_spark`` logger: the compounded stats are then
+    back, and a long loop can livelock again."""
     ck = df.localCheckpoint(eager=True)
     try:
         lr = ck._jdf.queryExecution().logical()
@@ -181,7 +191,12 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
         ds = getattr(getattr(jvm.org.apache.spark.sql.classic, "Dataset$"),
                      "MODULE$")
         return DataFrame(ds.ofRows(spark._jsparkSession, new_lr), spark)
-    except Exception:  # pragma: no cover - private-API guard
+    except Exception as exc:  # private-API guard
+        global _strip_warned
+        if not _strip_warned:
+            _strip_warned = True
+            log.warning("eager_checkpoint: could not strip compounded size "
+                        "estimates; loop checkpoints keep them", exc_info=exc)
         return ck
 
 
