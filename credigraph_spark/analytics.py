@@ -59,24 +59,6 @@ def degree_stats(edges: DataFrame) -> DataFrame:
     )
 
 
-def rank_degree_correlation(ranks: DataFrame, edges: DataFrame) -> dict:
-    """The reference's PageRank sanity metrics (pagerank_utils.py:234-297):
-    Pearson corr(in_deg, rank) and top/bottom-decile mean ranks."""
-    in_deg = edges.groupBy(F.col("dst").alias("vid")).agg(F.count("*").alias("in_deg"))
-    joined = ranks.join(in_deg, "vid", "left").na.fill({"in_deg": 0})
-    corr = joined.agg(F.corr("in_deg", "rank")).collect()[0][0]
-    q10, q90 = joined.approxQuantile("rank", [0.1, 0.9], 1e-4)
-    deciles = joined.agg(
-        F.avg(F.when(F.col("rank") >= q90, F.col("rank"))).alias("top_mean"),
-        F.avg(F.when(F.col("rank") <= q10, F.col("rank"))).alias("bottom_mean"),
-    ).collect()[0]
-    return {
-        "corr_in_deg_rank": corr,
-        "top_decile_mean": deciles["top_mean"],
-        "bottom_decile_mean": deciles["bottom_mean"],
-    }
-
-
 def degree_filter(edges: DataFrame, min_degree: int) -> tuple[DataFrame, DataFrame]:
     """P8/J3: keep vertices with total degree > min_degree, then keep edges
     whose BOTH endpoints survive (process.py:18-59,180-200 two-pass filter

@@ -141,12 +141,6 @@ def sigmoid(col) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col(col) if isinstance(col, str) else -col))
 
 
-def edge_importance(pr_s, hc_s, pr_d, hc_d) -> Column:
-    """F12/A15: (|pr_s*hc_s| + |pr_d*hc_d|) / 2
-    (merge_dqr_ratings_trie_filter.py:195-207, prob.py:47-67)."""
-    return (F.abs(F.col(pr_s) * F.col(hc_s)) + F.abs(F.col(pr_d) * F.col(hc_d))) / F.lit(2.0)
-
-
 def iso_week_monday_yyyymmdd(ts_col) -> Column:
     """F11: timestamp -> `YYYYMMDD` of the ISO-week Monday
     (temporal_utils.py:6-24). date_trunc('week') is ISO-Monday in Spark."""

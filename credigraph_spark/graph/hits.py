@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges
 
-from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning, release)
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import adaptive_partitions
 
 
 def _run(edges: DataFrame, max_iter: int, tol: float | None):
@@ -53,26 +53,32 @@ def _run(edges: DataFrame, max_iter: int, tol: float | None):
     n = verts.count()  # one-time setup action, also materializes the caches
     info: dict = {"n_vertices": n, "iterations": 0, "converged": False,
                   "l1_history": []}
+    if n == 0:  # only self-loops/nulls: no vertex to score
+        e.unpersist()
+        verts.unpersist()
+        return spark.createDataFrame([], "vid long, hub double, auth double"), info
 
-    def _half_step(scores: DataFrame, edge_key: str, group_key: str, tag: str):
+    def _half_step(scores: DataFrame, edge_key: str, group_key: str,
+                   obs: Observation) -> DataFrame:
         """Gather (vid, score) over edges on the edge_key side, sum per
-        group_key vertex, L1-normalize. One job: the eager localCheckpoint
-        fills the Observation with the raw L1 sum, normalization divides by
-        it as a literal."""
+        group_key vertex: the raw scores, whose L1 sum ``obs`` observes on
+        the job that materializes them."""
         contrib = (
             e.join(scores.select(F.col("vid").alias(edge_key), "score"), edge_key)
             .groupBy(F.col(group_key).alias("vid"))
             .agg(F.sum("score").alias("raw"))
         )
-        obs = Observation(f"hits_{tag}")
-        raw = (
+        return (
             verts.join(contrib, "vid", "left")
             .select("vid", F.coalesce("raw", F.lit(0.0)).alias("raw"))
             .observe(obs, F.sum("raw").alias("s"))
-            .transform(eager_checkpoint)
         )
+
+    def _normalized(raw: DataFrame, obs: Observation) -> DataFrame:
+        # the observed L1 sum is a literal divisor: no scalar subquery
+        # re-executes the half-step
         s = obs.get["s"] or 1.0
-        return raw, raw.select("vid", (F.col("raw") / F.lit(s)).alias("score"))
+        return raw.select("vid", (F.col("raw") / F.lit(s)).alias("score"))
 
     def _delta(new: DataFrame, prev: DataFrame) -> float:
         # deliberately a SEPARATE tiny job over the two checkpointed
@@ -86,32 +92,29 @@ def _run(edges: DataFrame, max_iter: int, tol: float | None):
             .collect()[0][0] or 0.0
         )
 
-    hub0 = verts.select("vid", F.lit(1.0 / n).alias("score")).transform(eager_checkpoint)
-    hub = auth = hub0
-    # checkpointed blocks of superseded iterations are released explicitly
-    # (pagerank's discipline) so block-manager state stays flat across
-    # arbitrarily many iterations.
-    live: list[DataFrame] = [hub0]
-    with loop_tuning(spark, shuffle_n):
-        for i in range(max_iter):
+    # the superstep driver holds the round's two raw states (auth as a
+    # checkpointed part, hub as the commit) and releases them when the
+    # next round ends, after both deltas have read them
+    loop = SuperstepLoop(spark, "hits", shuffle_n, max_iter, info=info)
+    hub, _ = loop.commit(verts.select("vid", F.lit(1.0 / n).alias("score")))
+    auth = hub
+    with loop:
+        for i in loop:
             # auth'(v) = Σ_{(u,v)∈E} hub(u), normalized; then
             # hub'(v) = Σ_{(v,w)∈E} auth'(w), normalized
-            araw, new_auth = _half_step(hub, "src", "dst", f"auth_{i}")
+            obs_a, obs_h = Observation(f"hits_auth_{i}"), Observation(f"hits_hub_{i}")
+            new_auth = _normalized(
+                loop.checkpoint(_half_step(hub, "src", "dst", obs_a)), obs_a)
             d_a = _delta(new_auth, auth) if tol is not None else None
             auth = new_auth
-            hraw, new_hub = _half_step(auth, "dst", "src", f"hub_{i}")
+            hraw, _ = loop.commit(_half_step(auth, "dst", "src", obs_h))
+            new_hub = _normalized(hraw, obs_h)
             d_h = _delta(new_hub, hub) if tol is not None else None
             hub = new_hub
-            for f in live:
-                release(f)
-            live = [araw, hraw]
-            info["iterations"] = i + 1
             if tol is not None:
                 l1 = d_a + d_h
                 info["l1_history"].append(l1)
-                if l1 < tol:
-                    info["converged"] = True
-                    break
+            loop.end_round(tol is not None and l1 < tol)
 
     result = (
         hub.withColumnRenamed("score", "hub")

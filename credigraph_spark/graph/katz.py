@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges
 from credigraph_spark.graph.loop import SuperstepLoop
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint
+from credigraph_spark.session import adaptive_partitions
 
 
 def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
@@ -67,9 +67,12 @@ def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
     # splits and the static-base aggregation each scan it — uncached,
     # every consumer re-ran the |E|-row dedup (the pagerank setup
     # finding). receivers likewise: checkpointed once, read three times.
+    # receivers and base are the loop's setup tables, released by its
+    # finish; the loop is sized after them, from the loop-edge count.
+    info: dict = {"iterations": 0, "converged": False, "l1": []}
+    loop = SuperstepLoop(e.sparkSession, "katz", None, max_iter, info=info)
     e = e.persist()
-    receivers = (e.select(F.col("dst").alias("vid")).distinct()
-                 .transform(eager_checkpoint))
+    receivers = loop.setup(e.select(F.col("dst").alias("vid")).distinct())
 
     # loop edges: receiver-sourced only, cached partitioned by src at a
     # partition count derived from the MEASURED loop-edge count
@@ -77,7 +80,7 @@ def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
     le = (e.join(receivers.withColumnRenamed("vid", "src"), "src",
                  "left_semi").persist())
     n_le = le.count()
-    nparts = int(shuffle_partitions or adaptive_partitions(n_le))
+    nparts = loop.partitions = int(shuffle_partitions or adaptive_partitions(n_le))
     lp = le.repartition(nparts, "src").persist()
     lp.count()
     le.unpersist()
@@ -88,16 +91,13 @@ def katz_centrality(edges: DataFrame, alpha: float = 0.1, beta: float = 1.0,
         e.join(receivers.withColumnRenamed("vid", "src"), "src", "left_anti")
         .groupBy(F.col("dst").alias("vid")).agg(F.sum("w").alias("nw"))
     )
-    base = (
+    base = loop.setup(
         receivers.join(nonrecv_w, "vid", "left")
         .select("vid",
                 (F.lit(float(beta)) + F.lit(float(alpha * beta))
                  * F.coalesce("nw", F.lit(0.0))).alias("base"))
         .repartition(nparts, "vid")
-        .transform(eager_checkpoint)
     )
-    info: dict = {"iterations": 0, "converged": False, "l1": []}
-    loop = SuperstepLoop(e.sparkSession, "katz", nparts, max_iter, info=info)
     state, _ = loop.commit(receivers.select("vid", F.lit(float(beta)).alias("x"))
                            .repartition(nparts, "vid"))
     e.unpersist()

@@ -8,20 +8,68 @@ fixpoint is the k-core.
 
 Scale shape: each round is one map-side-combinable degree aggregation plus
 two left-semi joins, all keyed on the same vertex hash partitioning; the
-edge set only shrinks, so rounds get cheaper. One driver action per round
-(the surviving-edge count doubles as the convergence test). No collect of
-vertex data, no windows, no Python.
+edge set only shrinks, so rounds get cheaper. The rounds run on the
+superstep driver (``graph/loop.py``): one action per round, the commit,
+whose observed surviving-edge count doubles as the convergence test. No
+collect of vertex data, no windows, no Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import sys
+
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import adaptive_partitions
 
-from credigraph_spark.session import (adaptive_partitions,
-                                      eager_checkpoint,
-                                      loop_tuning)
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """The cleaned edge set with both directions, one row per pair."""
+    e = clean_edges(edges)
+    return (e.select("src", "dst")
+            .unionByName(e.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst")))
+            .dropDuplicates(["src", "dst"]))
+
+
+def _peel(loop: SuperstepLoop, und: DataFrame, n_edges: int, score: Column,
+          threshold) -> tuple[DataFrame, int]:
+    """Run ``loop``'s peel rounds on the symmetric edge rows ``und``: each
+    round keeps the rows whose both endpoints have ``score`` (an aggregate
+    over a vertex's rows) >= ``threshold`` in the current subgraph; the
+    fixpoint is a round that removes no row. The surviving-row count rides
+    the round's one action. Returns (surviving rows, their count); the
+    superstep driver holds the surviving rows as its state."""
+    with loop:
+        for _ in loop:
+            keep = (und.groupBy(F.col("src").alias("vid")).agg(score.alias("s"))
+                    .where(F.col("s") >= threshold).select("vid"))
+            und, m = loop.commit(loop.observe(
+                und.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
+                .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi"),
+                F.count(F.lit(1)).alias("n")))
+            n_next = m["n"] or 0
+            loop.end_round(n_next == n_edges)
+            n_edges = n_next
+    return und, n_edges
+
+
+def _core(und: DataFrame, score: Column, threshold, name: str,
+          max_rounds: int | None) -> tuple[DataFrame, int]:
+    """``k_core``/``s_core``: peel ``und`` to its fixpoint (or for
+    ``max_rounds`` rounds), then (vid, name) = each survivor's score."""
+    # the peel rounds' exchanges are sized to the measured symmetrized
+    # edge count; the fixpoint ends the loop when no bound is given
+    loop = SuperstepLoop(und.sparkSession, "kcore", None,
+                         sys.maxsize if max_rounds is None else max_rounds)
+    und = loop.cache(und)
+    n_edges = und.count()
+    loop.partitions = adaptive_partitions(n_edges)
+    und, _ = _peel(loop, und, n_edges, score, threshold)
+    return (loop.finish(und.groupBy(F.col("src").alias("vid"))
+                        .agg(score.alias(name))), loop.it)
 
 
 def k_core(
@@ -33,43 +81,7 @@ def k_core(
     Returns ((vid, deg) of the surviving subgraph's undirected degrees,
     rounds_run).
     """
-    e = clean_edges(edges)
-    und = (
-        e.select("src", "dst")
-        .unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-    n_edges = und.count()
-    rounds = 0
-    # size the peel rounds to the measured symmetrized edge count and
-    # pause AQE for the loop (the k-core rounds' stage shapes are static)
-    with loop_tuning(edges.sparkSession, adaptive_partitions(n_edges)):
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
-            deg = und.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
-            keep = deg.where(F.col("deg") >= k).select("vid")
-            nxt = (
-                und.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-                .select("src", "dst")
-                .persist()
-            )
-            n_next = nxt.count()
-            und.unpersist()
-            und = nxt
-            rounds += 1
-            if n_next == n_edges:
-                break
-            n_edges = n_next
-
-    # materialize before releasing the surviving-edge cache (previously
-    # the final persist LEAKED and the returned plan was lazy on it)
-    result = eager_checkpoint(
-        und.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg")))
-    und.unpersist()
-    return result, rounds
+    return _core(_symmetric(edges), F.count("*"), k, "deg", max_rounds)
 
 
 def s_core(
@@ -83,11 +95,10 @@ def s_core(
     graphs (the reference scores edges — txt_to_csv_sqlite.py:206-275 —
     so "core by total edge importance" is the user-facing ask).
 
-    Same scale shape as ``k_core``: per round ONE map-side-combinable
-    strength aggregation + two left-semi joins on the shrinking edge set,
-    one driver action per round. Parallel edges are summed during
-    symmetrization. With integer weights every strength is exact, so the
-    fixed-round form replays bit-identically in SQL.
+    The ``k_core`` peel loop with a strength sum in place of the degree
+    count. Parallel edges are summed during symmetrization. With integer
+    weights every strength is exact, so the fixed-round form replays
+    bit-identically in SQL.
 
     Returns ((vid, strength) of the surviving subgraph, rounds_run)."""
     e = (
@@ -99,38 +110,8 @@ def s_core(
         e.unionByName(e.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst"), "w"))
         .groupBy("src", "dst").agg(F.sum("w").alias("w"))
-        .persist()
     )
-    n_edges = und.count()
-    rounds = 0
-    with loop_tuning(edges.sparkSession, adaptive_partitions(n_edges)):
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
-            strength = und.groupBy(F.col("src").alias("vid")).agg(
-                F.sum("w").alias("strength"))
-            keep = strength.where(F.col("strength") >= s).select("vid")
-            nxt = (
-                und.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-                .select("src", "dst", "w")
-                .persist()
-            )
-            n_next = nxt.count()
-            und.unpersist()
-            und = nxt
-            rounds += 1
-            if n_next == n_edges:
-                break
-            n_edges = n_next
-
-    # materialize before releasing the surviving-edge cache (same
-    # leak/lazy-return shape as k_core)
-    result = eager_checkpoint(
-        und.groupBy(F.col("src").alias("vid")).agg(
-            F.sum("w").alias("strength")))
-    und.unpersist()
-    return result, rounds
+    return _core(und, F.sum("w"), s, "strength", max_rounds)
 
 
 def coreness(
@@ -145,11 +126,11 @@ def coreness(
     Batch peel: phases k = 2, 3, ... reuse the shrinking edge set — the
     (k-1)-core peel output IS the k-phase input, so total work is one
     monotone sweep, not |k| independent decompositions. Each phase runs
-    the same map-side-combinable degree agg + two left-semi joins as
-    ``k_core``; vertices dropped during phase k get core = k-1. The
-    accumulated assignment is localCheckpointed once per phase so lineage
-    stays flat across the ~degeneracy phases (a web graph's degeneracy is
-    a few hundred — a few hundred cheap, shrinking rounds at 100 TB).
+    the ``k_core`` peel loop; vertices dropped during phase k get
+    core = k-1. The accumulated assignment is the phase loop's state,
+    checkpointed once per phase so lineage stays flat across the
+    ~degeneracy phases (a web graph's degeneracy is a few hundred — a few
+    hundred cheap, shrinking rounds at 100 TB).
 
     ``k_max``: cap — survivors of phase k_max get core = k_max (needed
     for a deterministic fixed-size SQL oracle). ``rounds_per_k``: run
@@ -158,45 +139,34 @@ def coreness(
     (default) peels each phase to its fixpoint (the true core number).
     """
     spark = edges.sparkSession
-    e = clean_edges(edges)
-    und = (
-        e.select("src", "dst")
-        .unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-        .transform(eager_checkpoint)
-    )
-    n_edges = und.count()
+    phases = SuperstepLoop(spark, "coreness", None,
+                           sys.maxsize if k_max is None else k_max - 1)
+    und, m = phases.commit(phases.observe(_symmetric(edges),
+                                          F.count(F.lit(1)).alias("n")))
+    n_edges = m["n"] or 0
+    phases.partitions = adaptive_partitions(n_edges)
     cores = spark.createDataFrame([], "vid long, core long")
-    k = 2
-    while n_edges > 0 and (k_max is None or k <= k_max):
-        before = und.select(F.col("src").alias("vid")).distinct()
-        rounds = 0
-        while rounds_per_k is None or rounds < rounds_per_k:
-            deg = und.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
-            keep = deg.where(F.col("deg") >= k).select("vid")
-            nxt = (
-                und.join(keep.withColumnRenamed("vid", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-                .select("src", "dst")
-                .transform(eager_checkpoint)
-            )
-            n_next = nxt.count()
-            und = nxt
-            rounds += 1
-            if n_next == n_edges:
+    with phases:
+        for p in phases:
+            if n_edges == 0:
                 break
-            n_edges = n_next
-        removed = before.join(
-            und.select(F.col("src").alias("vid")).distinct(), "vid", "left_anti"
-        ).select("vid", F.lit(k - 1).alias("core"))
-        cores = cores.unionByName(removed).transform(eager_checkpoint)
-        k += 1
+            k = p + 2
+            before = und.select(F.col("src").alias("vid")).distinct()
+            peel = SuperstepLoop(spark, "coreness_peel", phases.partitions,
+                                 sys.maxsize if rounds_per_k is None else rounds_per_k)
+            und, n_edges = _peel(peel, und, n_edges, F.count("*"), k)
+            removed = before.join(
+                und.select(F.col("src").alias("vid")).distinct(), "vid", "left_anti"
+            ).select("vid", F.lit(k - 1).alias("core"))
+            cores, _ = phases.commit(cores.unionByName(removed))
+            # the survivors outlive their peel loop: the next phase reads them
+            und = phases.cache(und)
     if n_edges > 0:  # survivors at the cap
         cores = cores.unionByName(
             und.select(F.col("src").alias("vid")).distinct()
             .select("vid", F.lit(k_max).alias("core"))
         )
-    return cores
+    return phases.finish(cores)
 
 
 def densest_subgraph(edges: DataFrame, eps_tenths: int = 1,
@@ -222,58 +192,44 @@ def densest_subgraph(edges: DataFrame, eps_tenths: int = 1,
     is_best marks the densest round (ties to the earliest).
 
     Scale shape: per round ONE degree aggregation + two semi-joins
-    (the k_core peel shape, audited for scale there); the density
-    scalar is the round's one driver action.
+    (the k_core peel shape, audited for scale there). The degree table
+    is the round's commit, and the density scalars ride it as
+    Observations: one driver action per round.
     """
-    e = clean_edges(edges)
-    und = (e.select("src", "dst")
-           .unionByName(e.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
-           .dropDuplicates(["src", "dst"])
-           .persist())
+    spark = edges.sparkSession
+    loop = SuperstepLoop(spark, "densest", None, max_rounds + 1)
+    # the symmetrized edge set is a setup table: the first round's peeled
+    # set is a lazy cache over it, which the second round materializes.
+    # Its observed row count sizes the peel loop.
+    obs = Observation("densest_edges")
+    und = loop.setup(_symmetric(edges).observe(obs, F.count(F.lit(1)).alias("n")))
+    loop.partitions = adaptive_partitions(obs.get["n"] or 0)
     rows = []
     thr = 20 + 2 * eps_tenths
-    prev = None
-    # one extra action to size the peel loop from the measured
-    # symmetrized edge count, then AQE paused for the loop
-    n_und0 = und.count()
-    with loop_tuning(edges.sparkSession,
-                     adaptive_partitions(n_und0)):
-        for r in range(max_rounds + 1):
-            deg = und.groupBy(F.col("src").alias("vid")).agg(
-                F.count("*").alias("deg"))
-            # the round's ONE action — also materializes und's cache, so
-            # the previous round's cache can only be dropped AFTER it
-            stats = deg.agg(F.count("*").alias("nv"),
-                            F.sum("deg").alias("d2")).collect()
-            if prev is not None:
-                prev.unpersist()
-            nv = int(stats[0]["nv"] or 0)
-            ne = int(stats[0]["d2"] or 0) // 2
+    with loop:
+        for r in loop:
+            deg, m = loop.commit(loop.observe(
+                und.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg")),
+                F.count(F.lit(1)).alias("nv"), F.sum("deg").alias("d2")))
+            nv = int(m["nv"] or 0)
+            ne = int(m["d2"] or 0) // 2
             if nv == 0:
                 break
             rows.append((r, nv, ne, round(ne / nv, round_digits)))
             # 10 * deg * nv <= thr * ne  <=>  deg <= 2(1+eps) * ne/nv
             keep = deg.where(10 * F.col("deg") * nv > thr * ne).select("vid")
-            nxt = (und.join(keep.withColumnRenamed("vid", "src"), "src",
-                            "left_semi")
-                   .join(keep.withColumnRenamed("vid", "dst"), "dst",
-                         "left_semi")
-                   .select("src", "dst").persist())
-            prev = und
-            und = nxt
-    und.unpersist()
-    if prev is not None:
-        prev.unpersist()
-    if not rows:
-        # empty cleaned graph (e.g. only self-loops/nulls): no rounds —
-        # return the empty-schema frame instead of max() of nothing
-        return edges.sparkSession.createDataFrame(
-            [], "round LONG, n_vertices LONG, n_edges LONG, "
-                "density DOUBLE, is_best BOOLEAN")
-    best = max(range(len(rows)), key=lambda i: (rows[i][3], -i))
-    out = [(r, nv, ne, d, i == best)
-           for i, (r, nv, ne, d) in enumerate(rows)]
-    return edges.sparkSession.createDataFrame(
+            # cached after the commit: the next round's commit materializes
+            # it, the round after reads it once more
+            und = loop.cache(und.join(keep.withColumnRenamed("vid", "src"), "src",
+                                      "left_semi")
+                             .join(keep.withColumnRenamed("vid", "dst"), "dst",
+                                   "left_semi")
+                             .select("src", "dst"))
+    out = []
+    if rows:  # none on an empty cleaned graph (e.g. only self-loops/nulls)
+        best = max(range(len(rows)), key=lambda i: (rows[i][3], -i))
+        out = [(r, nv, ne, d, i == best)
+               for i, (r, nv, ne, d) in enumerate(rows)]
+    return loop.finish(spark.createDataFrame(
         out, "round LONG, n_vertices LONG, n_edges LONG, "
-             "density DOUBLE, is_best BOOLEAN")
+             "density DOUBLE, is_best BOOLEAN"))

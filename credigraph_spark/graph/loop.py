@@ -16,12 +16,29 @@ rest, so the rules below hold in one place instead of one copy per loop:
   so lineage never grows across supersteps: a step that reads its state
   twice (a self-join, a keep-own fallback) would otherwise double its
   plan every round.
-* **release**: once the new state is materialized, ``commit`` frees the
-  superseded state and the scratch caches registered with ``cache``
-  through ``session.release`` (a plain ``unpersist`` never frees a local
-  checkpoint). A loop therefore holds one state whatever its iteration
+* **release**: once the new state is materialized, ``commit`` marks the
+  superseded state and the scratch caches registered with ``cache``, and
+  the end of the round frees them through ``session.release`` (a plain
+  ``unpersist`` never frees a local checkpoint). A round may still read
+  them after its commit (hits compares each new state with the previous
+  one; scc restricts its edges to the phase's survivors after the phase's
+  commit). A loop therefore holds one state whatever its iteration
   count. ``finish`` materializes the operator's result from the final
   state and frees the rest.
+* **setup tables**: a table the rounds or the result read but no round
+  replaces (a vertex table, a static coefficient vector, seed rows) is
+  materialized with ``setup`` and released by ``finish``, after the
+  result that may read it is materialized. A result that IS a table the
+  loop holds (its state, or a part made with ``checkpoint``) is returned
+  as is: ``finish(loop.state)`` frees everything else and keeps the
+  state, so a result that is a projection of the state stays lazy.
+* **nesting**: one ``SuperstepLoop`` per fixpoint. An inner fixpoint
+  (scc's trim, coloring and backward floods inside its phase loop) is
+  its own loop; ``loop_tuning`` restores the settings it found, so the
+  inner ``with`` hands the outer loop its tuning back. A table an inner
+  loop makes that must outlive the inner loop is cached through the
+  outer loop's ``cache`` and released with the outer loop's round; the
+  inner loop still releases the superseded ones.
 * **the CheckpointStore protocol**: ``converged_state`` is the resume
   short-circuit (a run already marked converged returns its converged
   state verbatim; an extra superstep would drift the result by < tol and
@@ -60,7 +77,9 @@ class SuperstepLoop:
     ``partitions``: the loop's shuffle-partition count (None keeps the
     session's). ``info``: the operator's info dict; the driver keeps its
     ``iterations``, ``converged`` and ``resumed_from`` keys. ``algo`` names
-    the loop's observations and its store metrics."""
+    the loop's observations and its store metrics. ``partitions`` is read
+    on ``with loop:``, so an operator whose loop is sized by a count over
+    its own ``setup`` tables sets it once that count is known."""
 
     def __init__(self, spark: SparkSession, algo: str, partitions: int | None,
                  max_iter: int, ckpt: CheckpointStore | None = None,
@@ -79,7 +98,10 @@ class SuperstepLoop:
         self.state: DataFrame | None = None
         self._held: list[DataFrame] = []     # the current state
         self._next: list[DataFrame] = []     # parts of the next state
-        self._scratch: list[DataFrame] = []  # caches freed at the next commit
+        self._scratch: list[DataFrame] = []  # caches freed with the next commit
+        self._setup: list[DataFrame] = []    # tables freed by finish
+        self._done: list[DataFrame] = []     # superseded, freed at round end
+        self._committed = False              # this round has committed
         self._obs: list[Observation] = []
         self._tuning = None
         self._t0 = 0.0
@@ -118,7 +140,11 @@ class SuperstepLoop:
     def __iter__(self):
         while self.it < self.max_iter and not self.converged:
             self._t0 = time.time()
+            self._committed = False
             yield self.it
+            for df in self._done:
+                release(df)
+            self._done = []
             self.it += 1
             self.info["iterations"] = self.it
         self.info["converged"] = self.converged
@@ -131,10 +157,21 @@ class SuperstepLoop:
         return df.observe(obs, *exprs)
 
     def cache(self, df: DataFrame) -> DataFrame:
-        """``df`` persisted until the next ``commit`` has materialized its
-        state: a round's scratch, or a not-yet-checkpointed first state."""
+        """``df`` persisted until the state current when it is made is
+        superseded. Made before the round's ``commit`` (a round's scratch,
+        a not-yet-checkpointed first state), it is released when that
+        commit's round ends; made after it (a lazy table the next round's
+        commit reads, a table an inner loop hands to this one), it belongs
+        to the next state and is released one commit later."""
         out = df.persist()
-        self._scratch.append(out)
+        (self._next if self._committed else self._scratch).append(out)
+        return out
+
+    def setup(self, plan: DataFrame) -> DataFrame:
+        """Materialize a setup table that the rounds or the result read;
+        ``finish`` releases it."""
+        out = eager_checkpoint(plan)
+        self._setup.append(out)
         return out
 
     def checkpoint(self, plan: DataFrame) -> DataFrame:
@@ -146,16 +183,17 @@ class SuperstepLoop:
         return out
 
     def commit(self, plan: DataFrame) -> tuple[DataFrame, dict]:
-        """The round's one action: materialize the new state, then release
-        the superseded state and the scratch caches. Returns the new state
-        and every value observed since the last commit."""
+        """The round's one action: materialize the new state; the
+        superseded state and the scratch caches are released when the
+        round ends. Returns the new state and every value observed since
+        the last commit."""
         new = eager_checkpoint(plan)
         metrics: dict = {}
         for obs in self._obs:
             metrics.update(obs.get)
-        for df in self._held + self._scratch:
-            release(df)
+        self._done += self._held + self._scratch
         self._held, self._next, self._scratch, self._obs = self._next + [new], [], [], []
+        self._committed = True
         self.state = new
         return new, metrics
 
@@ -180,9 +218,13 @@ class SuperstepLoop:
 
     def finish(self, plan: DataFrame) -> DataFrame:
         """Materialize the operator's result from the final state, then
-        release everything the loop still holds."""
-        out = eager_checkpoint(plan)
-        for df in self._held + self._next + self._scratch:
-            release(df)
-        self._held, self._next, self._scratch = [], [], []
+        release everything the loop still holds, setup tables included.
+        A ``plan`` the loop already holds materialized is returned as is
+        and kept."""
+        held = self._held + self._next
+        out = plan if any(plan is df for df in held) else eager_checkpoint(plan)
+        for df in held + self._scratch + self._setup + self._done:
+            if df is not out:
+                release(df)
+        self._held, self._next, self._scratch, self._setup, self._done = [], [], [], [], []
         return out

@@ -42,9 +42,11 @@ measured 0.56 at 20M edges):
 * the gain product ``deg(u) · Σtot`` is computed in DOUBLE (exact to
   2⁵³; the decimal-moment trick of ``analytics.degree_assortativity``
   applies if a graph ever exceeds that);
-* per-round state is eager-localCheckpointed: it feeds three subplans
-  next round, which otherwise re-executes the previous round's whole
-  plan per reference — exponential in rounds.
+* per-round state is the commit of the superstep driver
+  (``graph/loop.py``), which releases the superseded one: it feeds three
+  subplans next round, which otherwise re-executes the previous round's
+  whole plan per reference — exponential in rounds. One loop body
+  serves the unweighted first level and the weighted coarse level.
 
 Reference scope: the reference repo (ekmpa/CrediGraph) has no community
 detection at all; this completes the engine's community family
@@ -57,82 +59,83 @@ from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
 
+from credigraph_spark.graph.loop import SuperstepLoop
 from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      join_side, loop_tuning)
+                                      join_side)
 
 
 def _local_move_rounds(und: DataFrame, two_m: float,
-                       rounds: int, nparts: int | None = None) -> DataFrame:
+                       rounds: int, nparts: int) -> DataFrame:
     """Core synchronous local-move loop over a persisted, dst-partitioned
     symmetric UNWEIGHTED edge set. Returns (vid, community, deg).
     ``nparts`` sizes the per-round candidate exchange (scale-adaptive:
     derived from the symmetrized edge count by the callers)."""
-    nparts = nparts or adaptive_partitions(two_m)
     deg = und.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").alias("deg"))
     state = deg.select("vid", F.col("vid").alias("community"), "deg")
-    return _local_move_body(und, state, two_m, rounds, nparts)
+    return _move_rounds(und, F.lit(1), state, two_m, rounds, nparts)
 
 
-def _local_move_body(und, state, two_m, rounds, nparts):
-    # pause AQE and size every round's exchange to the measured graph for
-    # the duration of the loop (each round materializes eagerly via its
-    # checkpoint, so the conf window covers all the loop's jobs)
-    with loop_tuning(und.sparkSession, nparts):
-        return _local_move_iters(und, state, two_m, rounds, nparts)
-
-
-def _local_move_iters(und, state, two_m, rounds, nparts):
-    for _ in range(rounds):
-        tot = state.groupBy("community").agg(F.sum("deg").alias("tot"))
-        st = state.join(tot, "community")
-        # neighbour candidates carry tot(c) from the dst side; the self
-        # row (w = 0) guarantees every vertex keeps its current
-        # community as a candidate
-        # shuffle_hash: without the hint the planner picks SortMergeJoin
-        # (checkpoint-derived estimates), re-SORTING the cached 2|E| edge
-        # stream every round even though it is already dst-partitioned
-        nbr = (
-            und.join(st.select(F.col("vid").alias("dst"),
-                               F.col("community").alias("c"), "tot")
-                     .hint("shuffle_hash"), "dst")
-            .select("src", "c", "tot", F.lit(1).alias("w"))
-        )
-        own = st.select(F.col("vid").alias("src"),
-                        F.col("community").alias("c"),
-                        "tot", F.lit(0).alias("w"))
-        cand = (
-            nbr.unionByName(own)
-            .repartition(nparts, F.col("src"))
-            .groupBy("src", "c")
-            .agg(F.sum("w").alias("w"), F.max("tot").alias("tot"))
-        )
-        scored = (
-            cand.join(state.select(F.col("vid").alias("src"),
-                                   "community", "deg"), "src")
-            .select(
-                "src", "c", "deg",
-                (F.col("w").cast("double")
-                 - F.col("deg").cast("double")
-                 * (F.col("tot") - F.when(F.col("c") == F.col("community"),
-                                          F.col("deg")).otherwise(F.lit(0)))
-                 .cast("double") / F.lit(two_m)).alias("score"),
+def _move_rounds(edges: DataFrame, w, state: DataFrame, two_m: float,
+                 rounds: int, nparts: int) -> DataFrame:
+    """``rounds`` synchronous local-move rounds from ``state`` (vid,
+    community, deg) over the dst-partitioned symmetric edge set ``edges``,
+    whose per-edge weight is ``w`` (its ``w`` column, or 1 unweighted).
+    Returns the final state, which the superstep driver holds (it
+    releases every superseded one)."""
+    # the driver pauses AQE and sizes every round's exchange to the
+    # measured graph for the duration of the loop
+    loop = SuperstepLoop(edges.sparkSession, "louvain", nparts, rounds)
+    with loop:
+        for _ in loop:
+            tot = state.groupBy("community").agg(F.sum("deg").alias("tot"))
+            st = state.join(tot, "community")
+            # neighbour candidates carry tot(c) from the dst side; the self
+            # row (w = 0) guarantees every vertex keeps its current
+            # community as a candidate
+            # shuffle_hash: without the hint the planner picks SortMergeJoin
+            # (checkpoint-derived estimates), re-SORTING the cached 2|E| edge
+            # stream every round even though it is already dst-partitioned
+            nbr = (
+                edges.join(st.select(F.col("vid").alias("dst"),
+                                     F.col("community").alias("c"), "tot")
+                           .hint("shuffle_hash"), "dst")
+                .select("src", "c", "tot", w.cast("long").alias("w"))
             )
-        )
-        state = (
-            scored.groupBy("src")
-            .agg(F.max(F.struct(F.col("score"), (-F.col("c")).alias("negc")))
-                 .alias("best"),
-                 F.max("deg").alias("deg"))
-            .select(F.col("src").alias("vid"),
-                    (-F.col("best.negc")).alias("community"), "deg")
-            # eager checkpoint: `state` feeds THREE subplans next round
-            # (tot, the dst join, the src join) — without it each round
-            # re-executes the previous round's whole plan per reference,
-            # exponential in rounds (measured 46x a PR superstep at 20M
-            # edges before this line)
-            .transform(eager_checkpoint)
-        )
+            own = st.select(F.col("vid").alias("src"),
+                            F.col("community").alias("c"),
+                            "tot", F.lit(0).cast("long").alias("w"))
+            cand = (
+                nbr.unionByName(own)
+                .repartition(nparts, F.col("src"))
+                .groupBy("src", "c")
+                .agg(F.sum("w").alias("w"), F.max("tot").alias("tot"))
+            )
+            scored = (
+                cand.join(state.select(F.col("vid").alias("src"),
+                                       "community", "deg"), "src")
+                .select(
+                    "src", "c", "deg",
+                    (F.col("w").cast("double")
+                     - F.col("deg").cast("double")
+                     * (F.col("tot") - F.when(F.col("c") == F.col("community"),
+                                              F.col("deg")).otherwise(F.lit(0)))
+                     .cast("double") / F.lit(two_m)).alias("score"),
+                )
+            )
+            # the commit's eager checkpoint: `state` feeds THREE subplans
+            # next round (tot, the dst join, the src join) — without it each
+            # round re-executes the previous round's whole plan per
+            # reference, exponential in rounds (measured 46x a PR superstep
+            # at 20M edges before the checkpoint)
+            state, _ = loop.commit(
+                scored.groupBy("src")
+                .agg(F.max(F.struct(F.col("score"), (-F.col("c")).alias("negc")))
+                     .alias("best"),
+                     F.max("deg").alias("deg"))
+                .select(F.col("src").alias("vid"),
+                        (-F.col("best.negc")).alias("community"), "deg")
+            )
     return state
 
 
@@ -168,6 +171,9 @@ def louvain_local_move(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """(vid, community) after ``rounds`` synchronous local-move rounds
     from singleton communities on the cleaned undirected graph."""
     und, two_m, nparts = _partitioned_und(edges)
+    if two_m == 0:  # only self-loops/nulls: no community to move
+        und.unpersist()
+        return edges.sparkSession.createDataFrame([], "vid long, community long")
     out = _local_move_rounds(und, two_m, rounds,
                              nparts).select("vid", "community")
     und.unpersist()
@@ -181,8 +187,9 @@ def _local_move_weighted(ce: DataFrame, rounds: int,
     already carry the doubled intra mass (the natural output of
     contracting a both-directions edge list): strength
     k(v) = Σ_all-rows w — so Σ k = 2m exactly as in the unweighted
-    case. Used by :func:`louvain_two_level` for the coarse level.
-    Same single-exchange round shape as :func:`_local_move_rounds`."""
+    case. Used by :func:`louvain_two_level` for the coarse level: the
+    same ``_move_rounds`` loop as the unweighted level, with the
+    contracted edge weights."""
     deg = ce.groupBy(F.col("src").alias("vid")).agg(F.sum("w").alias("deg"))
     two_m = float(deg.agg(F.sum("deg")).collect()[0][0])
     # candidate edges may be a CONSTRAINED subset (Leiden: only
@@ -202,59 +209,10 @@ def _local_move_weighted(ce: DataFrame, rounds: int,
     # materialization when more than one round amortizes it.
     if rounds > 1:
         nonself = nonself.repartition(nparts, F.col("dst")).persist()
-        out = _weighted_move_body(nonself, state, two_m, rounds, nparts)
-        nonself.unpersist()
-        return out
-    return _weighted_move_body(nonself, state, two_m, rounds, nparts)
-
-
-def _weighted_move_body(nonself, state, two_m, rounds, nparts):
-    with loop_tuning(nonself.sparkSession, nparts):
-        return _weighted_move_iters(nonself, state, two_m, rounds, nparts)
-
-
-def _weighted_move_iters(nonself, state, two_m, rounds, nparts):
-    for _ in range(rounds):
-        tot = state.groupBy("community").agg(F.sum("deg").alias("tot"))
-        st = state.join(tot, "community")
-        nbr = (
-            nonself.join(st.select(F.col("vid").alias("dst"),
-                                   F.col("community").alias("c"), "tot")
-                         .hint("shuffle_hash"),
-                         "dst")
-            .select("src", "c", "tot", "w")
-        )
-        own = st.select(F.col("vid").alias("src"),
-                        F.col("community").alias("c"),
-                        "tot", F.lit(0).cast("long").alias("w"))
-        cand = (
-            nbr.unionByName(own)
-            .repartition(nparts, F.col("src"))
-            .groupBy("src", "c")
-            .agg(F.sum("w").alias("w"), F.max("tot").alias("tot"))
-        )
-        scored = (
-            cand.join(state.select(F.col("vid").alias("src"),
-                                   "community", "deg"), "src")
-            .select(
-                "src", "c", "deg",
-                (F.col("w").cast("double")
-                 - F.col("deg").cast("double")
-                 * (F.col("tot") - F.when(F.col("c") == F.col("community"),
-                                          F.col("deg")).otherwise(F.lit(0)))
-                 .cast("double") / F.lit(two_m)).alias("score"),
-            )
-        )
-        state = (
-            scored.groupBy("src")
-            .agg(F.max(F.struct(F.col("score"), (-F.col("c")).alias("negc")))
-                 .alias("best"),
-                 F.max("deg").alias("deg"))
-            .select(F.col("src").alias("vid"),
-                    (-F.col("best.negc")).alias("community"), "deg")
-            .transform(eager_checkpoint)
-        )
-    return state.select("vid", "community")
+    out = _move_rounds(nonself, F.col("w"), state, two_m, rounds,
+                       nparts).select("vid", "community")
+    nonself.unpersist()
+    return out
 
 
 def louvain_two_level(edges: DataFrame, rounds: int = 2,
@@ -272,6 +230,9 @@ def louvain_two_level(edges: DataFrame, rounds: int = 2,
     (ADVICE r4: previously symmetrize(clean_edges()) ran twice) and
     unpersisted before returning."""
     und, two_m, nparts = _partitioned_und(edges)
+    if two_m == 0:  # only self-loops/nulls: no community to move
+        und.unpersist()
+        return edges.sparkSession.createDataFrame([], "vid long, community long")
     s1 = _local_move_rounds(und, two_m, rounds,
                             nparts).select("vid", "community")
     # counted: the label table's checkpoint-carried estimate never
@@ -374,6 +335,10 @@ def leiden_two_level(edges: DataFrame, rounds: int = 2,
     from credigraph_spark.graph.components import connected_components
 
     und, two_m, nparts = _partitioned_und(edges)
+    if two_m == 0:  # only self-loops/nulls: no community to move
+        und.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], "vid long, part long, community long")
     s1 = (_local_move_rounds(und, two_m, rounds, nparts)
           .select("vid", "community").transform(eager_checkpoint))
 

@@ -16,22 +16,20 @@ so a round-bounded run replays bit-identically in any SQL engine
 
 Scale shape: per round ONE groupBy(src).min aggregation over the live
 edge set + a self-join of the (vertex -> proposal) table on the mutual
-condition + two anti joins to retire matched endpoints. Live-edge and
-match state are localCheckpointed each round (lineage truncation — the
-Louvain lesson).
+condition + two anti joins to retire matched endpoints. The rounds run on
+the superstep driver (``graph/loop.py``): the live edge set is the loop's
+state (one checkpoint per round, the superseded one released), each
+round's matched pairs are setup tables that the result unions, held until
+``finish`` has materialized the result.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
-
-from credigraph_spark.session import (adaptive_partitions,
-                                      eager_checkpoint, loop_tuning)
-
-
-from pyspark.sql import Observation
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import adaptive_partitions
 
 
 def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
@@ -43,59 +41,50 @@ def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
     counts ride Observations on the eager checkpoints (previously each
     round paid two extra ``isEmpty`` jobs), and the live-edge layout is
     partitioned by the measured edge count (scale-adaptive)."""
-    obs0 = Observation("match_live_0")
-    live = eager_checkpoint(
-        undirected_simple(edges)
-        .observe(obs0, F.count(F.lit(1)).alias("n")))
-    n_live = obs0.get["n"] or 0
-    nparts = adaptive_partitions(n_live)
-    out = None
-    # pause AQE and run every round's exchange at the measured count
-    # (the loop_tuning discipline of the other iterative operators)
-    with loop_tuning(edges.sparkSession, nparts):
-        out = _matching_rounds(live, n_live, nparts, rounds, out)
-    if out is None:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "u LONG, v LONG")
-    return out
-
-
-def _matching_rounds(live, n_live, nparts, rounds, out):
-    for r in range(rounds):
-        if n_live == 0:
-            break
-        prop = (live.repartition(nparts, "src")
-                .groupBy("src").agg(F.min("dst").alias("prop")))
-        other = prop.select(F.col("src").alias("b_src"),
-                            F.col("prop").alias("b_prop"))
-        obs_m = Observation(f"match_matched_{r}")
-        matched = eager_checkpoint(
-            prop.join(other,
-                      (F.col("b_src") == F.col("prop"))
-                      & (F.col("b_prop") == F.col("src")))
-            .where(F.col("src") < F.col("prop"))
-            .select(F.col("src").alias("u"), F.col("prop").alias("v"))
-            .observe(obs_m, F.count(F.lit(1)).alias("n")))
-        n_matched = obs_m.get["n"] or 0
-        if n_matched == 0:
-            break
-        out = matched if out is None else out.unionByName(matched)
-        gone = (matched.select(F.col("u").alias("vid"))
-                .unionByName(matched.select(F.col("v").alias("vid"))))
-        # the observed match count tells us the exact retire-set size:
-        # broadcast it while it fits (both anti joins then stream the
-        # cached live set with no shuffle), fall back to shuffled anti
-        # joins when a round matches millions of pairs (the CC
-        # bcast_components discipline)
-        if n_matched <= 1_000_000:
-            gone = F.broadcast(gone)
-        obs_l = Observation(f"match_live_{r + 1}")
-        live = eager_checkpoint(
-            live.join(gone.withColumnRenamed("vid", "src"), "src",
+    loop = SuperstepLoop(edges.sparkSession, "match", None, rounds)
+    live, m = loop.commit(loop.observe(undirected_simple(edges),
+                                       F.count(F.lit(1)).alias("n")))
+    n_live = m["n"] or 0
+    # every round's exchange runs at the measured count
+    nparts = loop.partitions = adaptive_partitions(n_live)
+    out = edges.sparkSession.createDataFrame([], "u LONG, v LONG")
+    with loop:
+        for r in loop:
+            if n_live == 0:
+                break
+            prop = (live.repartition(nparts, "src")
+                    .groupBy("src").agg(F.min("dst").alias("prop")))
+            other = prop.select(F.col("src").alias("b_src"),
+                                F.col("prop").alias("b_prop"))
+            # the match count is needed before the round's commit (it
+            # sizes the retire set), so it rides its own Observation
+            obs_m = Observation(f"match_matched_{r}")
+            matched = loop.setup(
+                prop.join(other,
+                          (F.col("b_src") == F.col("prop"))
+                          & (F.col("b_prop") == F.col("src")))
+                .where(F.col("src") < F.col("prop"))
+                .select(F.col("src").alias("u"), F.col("prop").alias("v"))
+                .observe(obs_m, F.count(F.lit(1)).alias("n")))
+            n_matched = obs_m.get["n"] or 0
+            if n_matched == 0:
+                break
+            out = matched if r == 0 else out.unionByName(matched)
+            gone = (matched.select(F.col("u").alias("vid"))
+                    .unionByName(matched.select(F.col("v").alias("vid"))))
+            # the observed match count tells us the exact retire-set size:
+            # broadcast it while it fits (both anti joins then stream the
+            # cached live set with no shuffle), fall back to shuffled anti
+            # joins when a round matches millions of pairs (the CC
+            # bcast_components discipline)
+            if n_matched <= 1_000_000:
+                gone = F.broadcast(gone)
+            live, m = loop.commit(loop.observe(
+                live.join(gone.withColumnRenamed("vid", "src"), "src",
+                          "left_anti")
+                .join(gone.withColumnRenamed("vid", "dst"), "dst",
                       "left_anti")
-            .join(gone.withColumnRenamed("vid", "dst"), "dst",
-                  "left_anti")
-            .select("src", "dst")
-            .observe(obs_l, F.count(F.lit(1)).alias("n")))
-        n_live = obs_l.get["n"] or 0
-    return out
+                .select("src", "dst"),
+                F.count(F.lit(1)).alias("n")))
+            n_live = m["n"] or 0
+    return loop.finish(out)

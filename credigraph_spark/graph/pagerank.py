@@ -124,9 +124,9 @@ def pagerank(
     # THE vertex table (vid, out_deg, in_deg): out_deg is null for a vertex
     # without out-edges (dangling), in_deg is 0 for a non-receiver. One
     # groupBy over src, dst and user-vertex rows; its checkpoint job also
-    # fills every count the setup needs. localCheckpoint (not persist):
-    # the blocks are GC-tied to this call, so nothing leaks across calls
-    # in a long-lived session.
+    # fills every count the setup needs. It is a setup table of the loop,
+    # so the loop's finish releases it once the result is materialized;
+    # the loop is sized after it, from the edge count it observes.
     rows = (e.select(F.col("src").alias("vid"), out_w.alias("w"), F.lit(0).alias("d"))
             .unionByName(e.select(F.col("dst").alias("vid"), no_w.alias("w"),
                                   F.lit(1).alias("d"))))
@@ -135,7 +135,10 @@ def pagerank(
             F.col(vertices.columns[0]).alias("vid"), no_w.alias("w"), F.lit(0).alias("d")))
     recv, dangling = F.col("in_deg") > 0, F.col("out_deg").isNull()
     setup_obs = Observation("pr_setup")
-    vt = eager_checkpoint(
+    info: dict = {}
+    loop = SuperstepLoop(spark, "pagerank", None, max_iter, ckpt=ckpt,
+                         checkpoint_every=checkpoint_every, resume=resume, info=info)
+    vt = loop.setup(
         rows.groupBy("vid").agg(F.sum("w").alias("out_deg"), F.sum("d").alias("in_deg"))
         .observe(setup_obs,
                  F.sum("in_deg").alias("n_edges"),
@@ -155,16 +158,14 @@ def pagerank(
         raise ValueError(f"unknown mode: {mode}")
 
     n = n_recv + m
-    info: dict = {
+    info.update({
         "n_vertices": n, "n_receivers": n_recv, "n_nonreceivers": m,
         "n_dangling": n_recv_dangling + m_dangling, "n_edges": stats["n_edges"] or 0,
         "mode": mode, "iterations": 0, "converged": n <= 0, "l1_history": [],
-    }
+    })
     if n == 0:
         return vt.select("vid", F.lit(0.0).alias("rank")), info
-    shuffle_n = num_partitions or adaptive_partitions(info["n_edges"])
-    loop = SuperstepLoop(spark, "pagerank", shuffle_n, max_iter, ckpt=ckpt,
-                         checkpoint_every=checkpoint_every, resume=resume, info=info)
+    shuffle_n = loop.partitions = num_partitions or adaptive_partitions(info["n_edges"])
     done = loop.converged_state()
     if done is not None:
         return done, info
@@ -223,7 +224,7 @@ def pagerank(
             # the static dangling scalar rides the sv checkpoint's own job
             # (which also fills the edges_deg cache) as an Observation
             sv_obs = Observation("pr_static_dangling")
-            sv = eager_checkpoint(
+            sv = loop.setup(
                 edges_deg.where(~F.col("src_recv"))
                 .groupBy("dst")
                 .agg(F.sum(coef_expr).alias("coef"),

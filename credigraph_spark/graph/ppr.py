@@ -81,12 +81,12 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     ed.count()
 
     s = seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct()
-    # static tiny table: seed rows flagged dangling (no out-edges); the
-    # flag feeds the observed dangling sum, teleport value is per-iter.
-    seed_rows = (
+    # static tiny setup table: seed rows flagged dangling (no out-edges);
+    # the flag feeds the observed dangling sum, teleport value is per-iter.
+    loop = SuperstepLoop(spark, "ppr", None, max_iter)
+    seed_rows = loop.setup(
         s.join(deg.withColumn("_out", F.lit(True)).select("vid", "_out"), "vid", "left")
         .select("vid", F.col("_out").isNull().alias("seed_dangling"))
-        .transform(eager_checkpoint)
     )
     counts = seed_rows.agg(
         F.count("*").alias("n"),
@@ -98,7 +98,6 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
         return s.select("vid", F.lit(0.0).alias("rank"))
     p = 1.0 / n_seeds
 
-    loop = SuperstepLoop(spark, "ppr", None, max_iter)
     state, _ = loop.commit(seed_rows.select("vid", F.lit(p).alias("rank")))
     dangling_sum = p * n_dang_seeds  # analytic at t=0 (uniform seed mass)
     with loop:
@@ -130,7 +129,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
             # Σ_{v dangling} rank_{t+1}(v), by linearity of the stream sum
             dangling_sum = m["nd"] or 0.0
     ed.unpersist()
-    return state
+    return loop.finish(state)
 
 def ppr_batch(edges: DataFrame, seeds: DataFrame, damping: float = 0.85,
               max_iter: int = 5,

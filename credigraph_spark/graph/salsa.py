@@ -18,9 +18,10 @@ surface on the same contribution-join physical plan as PageRank/HITS.
 Scale shape: degrees are folded into the cached edge table ONCE
 (w_fwd = 1/outdeg(src), w_bwd = 1/indeg(dst)), so each half-step is one
 state ⋈ edges join plus a partial-aggregatable groupBy-sum — hub skew
-combines map-side; per-iteration state is localCheckpointed eagerly
-(lineage truncation, the Louvain lesson) with one driver action per
-iteration. No windows, no collect over vertices, no Python.
+combines map-side; the half-steps run on the superstep driver
+(``graph/loop.py``): auth is checkpointed as a part of the round's state,
+hub is the round's commit, and both are released once the next round has
+replaced them. No windows, no collect over vertices, no Python.
 """
 
 from __future__ import annotations
@@ -29,8 +30,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges, vertices_from_edges
 
-from credigraph_spark.session import (adaptive_partitions, eager_checkpoint,
-                                      loop_tuning, release)
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.session import adaptive_partitions
 
 
 def salsa(edges: DataFrame, max_iter: int = 3,
@@ -65,28 +66,30 @@ def salsa(edges: DataFrame, max_iter: int = 3,
     bwd.count()
     e.unpersist()
 
+    if n == 0:  # only self-loops/nulls: no vertex to score
+        fwd.unpersist()
+        bwd.unpersist()
+        verts.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], "vid long, hub double, auth double")
+
     hub = verts.select("vid", F.lit(1.0 / n).alias("score"))
     auth = None
-    with loop_tuning(edges.sparkSession, nparts):
-        for i in range(max_iter):
-            # the previous round's checkpoints (round 0's hub is a
-            # projection of the verts cache, which stays)
-            superseded = (auth, hub) if i else ()
-            auth = (
+    loop = SuperstepLoop(edges.sparkSession, "salsa", nparts, max_iter)
+    with loop:
+        for _ in loop:
+            auth = loop.checkpoint(
                 fwd.join(hub.select(F.col("vid").alias("src"), "score"), "src")
                 .groupBy(F.col("dst").alias("vid"))
                 .agg(F.sum(F.col("score") * F.col("w_fwd")).alias("score"))
-                .transform(eager_checkpoint)
             )
-            hub = (
+            hub, _ = loop.commit(
                 bwd.join(auth.select(F.col("vid").alias("dst"), "score"), "dst")
                 .groupBy(F.col("src").alias("vid"))
                 .agg(F.sum(F.col("score") * F.col("w_bwd")).alias("score"))
-                .transform(eager_checkpoint)
             )
-            for df in superseded:
-                release(df)
-    out = (
+    # materialized before the caches are released: the result reads them
+    out = loop.finish(
         verts
         .join(hub.select("vid", F.col("score").alias("h")), "vid", "left")
         .join(auth.select("vid", F.col("score").alias("a")), "vid", "left")
@@ -94,10 +97,6 @@ def salsa(edges: DataFrame, max_iter: int = 3,
                 F.round(F.coalesce("h", F.lit(0.0)), round_digits).alias("hub"),
                 F.round(F.coalesce("a", F.lit(0.0)), round_digits).alias("auth"))
     )
-    # materialize before releasing the caches: the returned lazy plan
-    # reads them, and the caller's first action would otherwise re-run
-    # the full pipeline against uncached inputs
-    out = out.transform(eager_checkpoint)
     fwd.unpersist()
     bwd.unpersist()
     verts.unpersist()

@@ -32,9 +32,14 @@ once every higher-vid external ancestor is gone, at which point its color
 is the component's own maximum) — deterministic, and expressible in
 DuckDB as ``greatest(vid, max(mutually-reachable vid))`` for the oracle.
 
-One driver action per superstep in each fixpoint: the changed/kept count
-rides an Observation on the eager localCheckpoint that truncates the
-per-round plan (same contract as components.py). Trimmed-singleton labels
+Each fixpoint (trim, coloring, backward reach, bow-tie's two floods) is
+one superstep-driver loop (``graph/loop.py``) with one action per
+superstep: the changed/kept count rides the commit that truncates the
+per-round plan (same contract as components.py). The phase loop is a
+driver loop too: its commit is the shrunken vertex set, and it releases
+every table a phase's inner loops hand it once the phase is over.
+Bow-tie's floods hand theirs to a loop with no rounds of its own, whose
+``finish`` materializes the classes. Trimmed-singleton labels
 are derived once per phase as ``verts@phase-start ANTI verts@post-trim``
 (no per-round label unions, so lineage stays flat however many trim
 rounds run). Messages are monotone maxima / boolean ORs — partial
@@ -48,18 +53,12 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning
+from credigraph_spark.session import adaptive_partitions, eager_checkpoint
 from credigraph_spark.graph.adjacency import clean_edges, vertices_from_edges
+from credigraph_spark.graph.loop import SuperstepLoop
 from credigraph_spark.graph.pregel import aggregate_messages, triplets
-
-
-def _ckpt_observe(df: DataFrame, obs_name: str, *metrics):
-    """Eager localCheckpoint with an Observation riding the same job."""
-    obs = Observation(obs_name)
-    out = df.observe(obs, *metrics).transform(eager_checkpoint)
-    return out, obs.get
 
 
 def _induced(e: DataFrame, verts: DataFrame) -> DataFrame:
@@ -68,6 +67,98 @@ def _induced(e: DataFrame, verts: DataFrame) -> DataFrame:
                   "src", "semi")
              .join(verts.withColumnRenamed("vid", "dst").hint("shuffle_hash"),
                    "dst", "semi"))
+
+
+def _trim(owner: SuperstepLoop, e: DataFrame, verts: DataFrame, n: int,
+          rounds: int, info: dict) -> tuple[DataFrame, DataFrame, int]:
+    """Trim fixpoint: peel vertices with no in-edge or no out-edge until
+    none remain. Returns the surviving (edges, vertices, count), cached
+    through ``owner``, which releases them with its round."""
+    trim = SuperstepLoop(owner.spark, "scc_trim", owner.partitions, rounds)
+    with trim:
+        for r in trim:
+            if r:  # restrict the edges to the last round's survivors
+                e = owner.cache(trim.checkpoint(_induced(e, verts)))
+            on_cycle_side = (e.select("src").distinct()
+                             .join(e.select(F.col("dst").alias("src"))
+                                    .distinct(), "src", "semi")
+                             .withColumnRenamed("src", "vid"))
+            kept, m = trim.commit(trim.observe(
+                verts.join(on_cycle_side.hint("shuffle_hash"), "vid", "semi"),
+                F.count("vid").alias("n")))
+            info["supersteps"] += 1
+            verts = owner.cache(kept)
+            n_kept = m["n"] or 0
+            trim.end_round(n_kept in (n, 0))
+            n = n_kept
+    return e, verts, n
+
+
+def _coloring(owner: SuperstepLoop, e: DataFrame, verts: DataFrame,
+              max_steps: int, info: dict) -> DataFrame:
+    """Coloring fixpoint: forward max + pointer jump. Returns (vid, color),
+    cached through ``owner``."""
+    loop = SuperstepLoop(owner.spark, "scc_color", owner.partitions, max_steps)
+    colors = owner.cache(verts.select("vid", F.col("vid").alias("color")))
+    with loop:
+        for _ in loop:
+            msgs = aggregate_messages(
+                e, colors, to_dst=F.col("src_color"),
+                agg={"nbr_max": F.max}, attach=("src",), how="inner",
+            )
+            stepped = loop.cache(
+                colors.select("vid", F.col("color").alias("prev"))
+                .join(msgs, "vid", "left")
+                .select("vid", "prev",
+                        F.greatest(F.col("prev"),
+                                   F.coalesce("nbr_max", F.col("prev"))
+                                   ).alias("color"))
+            )
+            jump = stepped.select(F.col("vid").alias("color"),
+                                  F.col("color").alias("_jump"))
+            new, m = loop.commit(loop.observe(
+                stepped.join(jump.hint("shuffle_hash"), "color", "left")
+                .select("vid", "prev",
+                        F.greatest("color", F.coalesce("_jump", "color")
+                                   ).alias("color")),
+                F.sum((F.col("color") != F.col("prev")).cast("long")
+                      ).alias("changed"),
+            ).select("vid", "color"))
+            colors = owner.cache(new)
+            info["supersteps"] += 1
+            loop.end_round((m["changed"] or 0) == 0)
+    return colors
+
+
+def _flood(owner: SuperstepLoop, e: DataFrame, state: DataFrame, col: str,
+           forward: bool, max_steps: int) -> tuple[DataFrame, int]:
+    """Boolean closure of ``col`` along ``e``: a vertex whose in-neighbour
+    (``forward``) or out-neighbour (backward) is flagged becomes flagged.
+    One join + OR-agg per superstep. Returns (final state, supersteps);
+    every state is cached through ``owner``, which releases the final one
+    (the flood's own loop releases the superseded ones)."""
+    loop = SuperstepLoop(owner.spark, f"flood_{col}", owner.partitions, max_steps)
+    rest = [c for c in state.columns if c != col]
+    kwargs = ({"to_dst": F.col(f"src_{col}"), "attach": ("src",)}
+              if forward else
+              {"to_src": F.col(f"dst_{col}"), "attach": ("dst",)})
+    cur = owner.cache(state)
+    with loop:
+        for _ in loop:
+            msgs = aggregate_messages(e, cur, agg={"nbr_any": F.max},
+                                      how="inner", **kwargs)
+            new, m = loop.commit(loop.observe(
+                cur.withColumnRenamed(col, "prev")
+                .join(msgs, "vid", "left")
+                .select(*rest, "prev",
+                        (F.col("prev") | F.coalesce("nbr_any", F.lit(False))
+                         ).alias(col)),
+                F.sum((F.col(col) != F.col("prev")).cast("long")
+                      ).alias("changed"),
+            ).select(*rest, col))
+            cur = owner.cache(new)
+            loop.end_round((m["changed"] or 0) == 0)
+    return cur, loop.it
 
 
 def strongly_connected_components(
@@ -86,161 +177,74 @@ def strongly_connected_components(
     e0 = clean_edges(edges).persist()
     n_e = e0.count()
     shuffle_n = adaptive_partitions(n_e)
-    e = e0.repartition(shuffle_n, "src").persist()
-    verts = vertices_from_edges(e).repartition(shuffle_n, "vid").persist()
+    phases = SuperstepLoop(spark, "scc", shuffle_n, max_phases)
+    e = phases.cache(e0.repartition(shuffle_n, "src"))
+    verts = phases.cache(vertices_from_edges(e).repartition(shuffle_n, "vid"))
     n = verts.count()
     e.count()
     e0.unpersist()
     info: dict = {"n_vertices": n, "phases": 0, "supersteps": 0,
                   "converged": n == 0, "phase_extracted": []}
 
-    done: DataFrame | None = None
-    phase = 0
-    with loop_tuning(spark, shuffle_n):
-        while phase < max_phases and n > 0:
+    done = spark.createDataFrame([], "vid long, scc_id long")
+    with phases:
+        for phase in phases:
+            if n == 0:
+                break
             t0 = time.time()
-            verts_start, n_start = verts, n   # stays persisted through phase
+            verts_start, n_start = verts, n
 
             # ---- 1. trim fixpoint: no-in or no-out vertices are singletons
-            for _ in range(trim_rounds):
-                on_cycle_side = (e.select("src").distinct()
-                                 .join(e.select(F.col("dst").alias("src"))
-                                        .distinct(), "src", "semi")
-                                 .withColumnRenamed("src", "vid"))
-                kept, m = _ckpt_observe(
-                    verts.join(on_cycle_side.hint("shuffle_hash"), "vid", "semi"),
-                    f"scc_trim_{phase}_{info['supersteps']}",
-                    F.count("vid").alias("n"))
-                info["supersteps"] += 1
-                n_kept = m["n"] or 0
-                if verts is not verts_start:
-                    verts.unpersist()
-                verts = kept.persist()
-                if n_kept in (n, 0):
-                    n = n_kept
-                    break
-                new_e = _induced(e, verts).transform(eager_checkpoint)
-                e.unpersist()
-                e = new_e.persist()
-                n = n_kept
+            e, verts, n = _trim(phases, e, verts, n, trim_rounds, info)
 
             members = None
-            colors = None
             if n > 0:
                 # ---- 2. coloring fixpoint: forward max + pointer jump
-                colors = verts.select("vid", F.col("vid").alias("color")).persist()
-                for _ in range(max_steps):
-                    msgs = aggregate_messages(
-                        e, colors, to_dst=F.col("src_color"),
-                        agg={"nbr_max": F.max}, attach=("src",), how="inner",
-                    )
-                    stepped = (
-                        colors.select("vid", F.col("color").alias("prev"))
-                        .join(msgs, "vid", "left")
-                        .select("vid", "prev",
-                                F.greatest(F.col("prev"),
-                                           F.coalesce("nbr_max", F.col("prev"))
-                                           ).alias("color"))
-                        .persist()
-                    )
-                    jump = stepped.select(F.col("vid").alias("color"),
-                                          F.col("color").alias("_jump"))
-                    new_colors, m = _ckpt_observe(
-                        stepped.join(jump.hint("shuffle_hash"), "color", "left")
-                        .select("vid", "prev",
-                                F.greatest("color", F.coalesce("_jump", "color")
-                                           ).alias("color")),
-                        f"scc_color_{phase}_{info['supersteps']}",
-                        F.sum((F.col("color") != F.col("prev")).cast("long")
-                              ).alias("changed"),
-                    )
-                    new_colors = new_colors.select("vid", "color")
-                    stepped.unpersist()
-                    colors.unpersist()
-                    colors = new_colors.persist()
-                    info["supersteps"] += 1
-                    if (m["changed"] or 0) == 0:
-                        break
+                colors = _coloring(phases, e, verts, max_steps, info)
 
                 # ---- 3. backward reach from roots in frozen-color subgraph
-                same_color_e = (
+                same_color_e = phases.cache(
                     triplets(e, colors, attach=("src", "dst"), how="inner")
                     .where(F.col("src_color") == F.col("dst_color"))
                     .select("src", "dst")
-                    .transform(eager_checkpoint)
-                ).persist()
-                flags = colors.select(
-                    "vid", (F.col("vid") == F.col("color")).alias("flag")
-                ).persist()
-                for _ in range(max_steps):
-                    msgs = aggregate_messages(
-                        same_color_e, flags, to_src=F.col("dst_flag"),
-                        agg={"nbr_any": F.max}, attach=("dst",), how="inner",
-                    )
-                    new_flags, m = _ckpt_observe(
-                        flags.select("vid", F.col("flag").alias("prev"))
-                        .join(msgs, "vid", "left")
-                        .select("vid", "prev",
-                                (F.col("prev") | F.coalesce("nbr_any",
-                                                            F.lit(False))
-                                 ).alias("flag")),
-                        f"scc_bw_{phase}_{info['supersteps']}",
-                        F.sum((F.col("flag") != F.col("prev")).cast("long")
-                              ).alias("changed"),
-                    )
-                    new_flags = new_flags.select("vid", "flag")
-                    flags.unpersist()
-                    flags = new_flags.persist()
-                    info["supersteps"] += 1
-                    if (m["changed"] or 0) == 0:
-                        break
-                same_color_e.unpersist()
-                members = (flags.where("flag").join(colors, "vid")
-                           .select("vid", F.col("color").alias("scc_id"))
-                           .persist())
+                    .transform(eager_checkpoint))
+                flags, steps = _flood(
+                    phases, same_color_e,
+                    colors.select("vid", (F.col("vid") == F.col("color")).alias("flag")),
+                    "flag", forward=False, max_steps=max_steps)
+                info["supersteps"] += steps
+                members = phases.cache(
+                    flags.where("flag").join(colors, "vid")
+                    .select("vid", F.col("color").alias("scc_id")))
 
-            # phase labels = trimmed singletons + extracted SCC members;
-            # materialize into `done` BEFORE unpersisting phase state.
+            # phase labels = trimmed singletons + extracted SCC members,
+            # materialized into `done` while the phase's tables are held
             trimmed = (verts_start.join(verts, "vid", "anti")
                        .select("vid", F.col("vid").alias("scc_id")))
             phase_labels = trimmed if members is None \
                 else trimmed.unionByName(members)
-            done = phase_labels if done is None \
-                else done.unionByName(phase_labels)
-            done = done.transform(eager_checkpoint)
+            done = phases.checkpoint(phase_labels if phase == 0
+                                     else done.unionByName(phase_labels))
 
+            n_next = 0
             if members is not None:
-                remaining, m = _ckpt_observe(
+                remaining, m = phases.commit(phases.observe(
                     verts.join(members.select("vid"), "vid", "anti"),
-                    f"scc_shrink_{phase}", F.count("vid").alias("n"))
+                    F.count("vid").alias("n")))
                 info["supersteps"] += 1
                 n_next = m["n"] or 0
-                members.unpersist()
-                flags.unpersist()
-                colors.unpersist()
-            else:
-                remaining, n_next = verts, 0
             info["phase_extracted"].append(
                 {"phase": phase, "extracted": n_start - n_next,
                  "wall_ms": round((time.time() - t0) * 1e3, 1)})
             if n_next > 0:
-                new_e = _induced(e, remaining).transform(eager_checkpoint)
-                e.unpersist()
-                e = new_e.persist()
-            if verts is not verts_start:
-                verts.unpersist()
-            verts_start.unpersist()
-            verts = remaining.persist()
+                # after the commit: the next phase's edges and vertices
+                e = phases.cache(_induced(e, remaining).transform(eager_checkpoint))
+                verts = remaining.persist()
             n = n_next
-            phase += 1
-            info["phases"] = phase
+            info["phases"] = phase + 1
 
     info["converged"] = n == 0
-    e.unpersist()
-    verts.unpersist()
-    if done is None:
-        done = spark.createDataFrame([], "vid long, scc_id long")
-    return done, info
+    return phases.finish(done), info
 
 
 def bowtie_classes(
@@ -258,73 +262,44 @@ def bowtie_classes(
 
     Physical shape: after SCC, two boolean BFS floods (forward from core
     along edges, backward along reversed edges), each one join + OR-agg
-    per superstep with the Observation/localCheckpoint contract — no
-    closure materialization, state is one boolean per vertex. The
+    per superstep on the superstep driver (``_flood``, shared with the
+    SCC backward reach) — no closure materialization, state is one
+    boolean per vertex. The
     core-pick itself is a 1-row aggregate (top-1 by count)."""
     spark = edges.sparkSession
-    e = clean_edges(edges).persist()
-    shuffle_n = adaptive_partitions(e.count())
-    if scc_labels is None:
+    # a loop with no rounds of its own owns the tables the two floods hand
+    # it; its finish materializes the classes and releases them
+    own = SuperstepLoop(spark, "bowtie", None, 0)
+    e = own.cache(clean_edges(edges))
+    own.partitions = adaptive_partitions(e.count())
+    owned = scc_labels is None
+    if owned:
         scc_labels, _ = strongly_connected_components(e)
-    labels = scc_labels.persist()
+    # a caller's table is only persisted here, never released
+    labels = own.cache(scc_labels) if owned else scc_labels.persist()
 
     core_row = (labels.groupBy("scc_id").count()
                 .orderBy(F.desc("count"), F.asc("scc_id")).limit(1)
                 .collect())
     if not core_row:
-        e.unpersist()
+        out = own.finish(spark.createDataFrame([], "vid long, cls string"))
+    else:
+        state = own.cache(labels.select(
+            "vid", (F.col("scc_id") == F.lit(core_row[0]["scc_id"])).alias("core")))
+        fwd, _ = _flood(own, e, state.withColumn("fwd", F.col("core")), "fwd",
+                        forward=True, max_steps=max_steps)      # core ⇝ v
+        bwd, _ = _flood(own, e, state.withColumn("bwd", F.col("core")), "bwd",
+                        forward=False, max_steps=max_steps)     # v ⇝ core
+        out = own.finish(
+            fwd.select("vid", "core", "fwd")
+            .join(bwd.select("vid", "bwd"), "vid")
+            .select(
+                "vid",
+                F.when(F.col("core"), F.lit("core"))
+                 .when(F.col("bwd"), F.lit("in"))
+                 .when(F.col("fwd"), F.lit("out"))
+                 .otherwise(F.lit("other")).alias("cls"),
+            ))
+    if not owned:
         labels.unpersist()
-        return spark.createDataFrame([], "vid long, cls string")
-    core_id = core_row[0]["scc_id"]
-
-    state = labels.select(
-        "vid", (F.col("scc_id") == F.lit(core_id)).alias("core")).persist()
-
-    def _flood(col: str, forward: bool) -> DataFrame:
-        """Boolean closure: reach-from-core (forward=True) or
-        reach-to-core (forward=False); seeded with the core itself."""
-        cur = state.withColumn(col, F.col("core")).persist()
-        for step in range(max_steps):
-            kwargs = ({"to_dst": F.col(f"src_{col}"), "attach": ("src",)}
-                      if forward else
-                      {"to_src": F.col(f"dst_{col}"), "attach": ("dst",)})
-            msgs = aggregate_messages(e, cur, agg={"nbr_any": F.max},
-                                      how="inner", **kwargs)
-            new_cur, m = _ckpt_observe(
-                cur.withColumnRenamed(col, "prev")
-                .join(msgs, "vid", "left")
-                .select("vid", "core", "prev",
-                        (F.col("prev") | F.coalesce("nbr_any", F.lit(False))
-                         ).alias(col)),
-                f"bowtie_{col}_{step}",
-                F.sum((F.col(col) != F.col("prev")).cast("long")
-                      ).alias("changed"),
-            )
-            new_cur = new_cur.select("vid", "core", col)
-            cur.unpersist()
-            cur = new_cur.persist()
-            if (m["changed"] or 0) == 0:
-                break
-        return cur
-
-    with loop_tuning(spark, shuffle_n):
-        fwd = _flood("fwd", forward=True)      # core ⇝ v
-        bwd = _flood("bwd", forward=False)     # v ⇝ core
-
-    out = (
-        fwd.select("vid", "core", "fwd")
-        .join(bwd.select("vid", "bwd"), "vid")
-        .select(
-            "vid",
-            F.when(F.col("core"), F.lit("core"))
-             .when(F.col("bwd"), F.lit("in"))
-             .when(F.col("fwd"), F.lit("out"))
-             .otherwise(F.lit("other")).alias("cls"),
-        )
-    ).transform(eager_checkpoint)
-    fwd.unpersist()
-    bwd.unpersist()
-    state.unpersist()
-    labels.unpersist()
-    e.unpersist()
     return out

@@ -179,9 +179,10 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
 
     und = undirected_simple(edges.select("src", "dst")).persist()
     nparts = adaptive_partitions(und.count())
-    deg = (und.groupBy(F.col("dst").alias("vid"))
-           .agg(F.count("*").alias("deg"))
-           .repartition(nparts, "vid").transform(eager_checkpoint))
+    loop = SuperstepLoop(edges.sparkSession, "fiedler", nparts, max_iter)
+    deg = loop.setup(und.groupBy(F.col("dst").alias("vid"))
+                     .agg(F.count("*").alias("deg"))
+                     .repartition(nparts, "vid"))
     s2m = deg.agg(F.sum("deg")).collect()[0][0]  # = 2|E_und|, one setup agg
     rt2m = math.sqrt(float(s2m))
     # edges enriched once with the SOURCE-side 1/sqrt(deg) — per-round
@@ -198,7 +199,6 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
         1, 15), 16, 10).cast("double") / F.lit(float(16 ** 15)))
     x0 = vert.select("vid", "rs", "v1",
                      (frac * 2.0 - 1.0).alias("x"))
-    loop = SuperstepLoop(edges.sparkSession, "fiedler", nparts, max_iter)
     with loop:
         x0, _ = loop.commit(x0)
         # deflate-normalize the init with the same one-agg trick
@@ -225,6 +225,8 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
                 "vid", "rs", "v1",
                 ((F.col("y") - F.lit(float(s.c)) * F.col("v1"))
                  / F.lit(float(nrm))).alias("x"))
+    # the result is a projection of the final state: keep it, free the rest
+    loop.finish(loop.state)
     out = state.select(
         "vid",
         (F.round("x", round_digits) if round_digits is not None

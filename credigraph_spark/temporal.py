@@ -44,30 +44,6 @@ def merge_edge_slices(slices: list[DataFrame], dedup_within_ts: bool = True) -> 
     return out
 
 
-def merge_vertex_slices(slices: list[DataFrame]) -> DataFrame:
-    """Union per-slice vertex tables ``(vid, ts, in_deg, out_deg)`` keyed
-    by (vid, ts) — keep-FIRST-slice deterministically on duplicates.
-
-    ``dropDuplicates`` keeps an arbitrary row, so conflicting rows for the
-    same key would survive nondeterministically across runs/partitionings;
-    instead each slice is stamped with its argument position and the min
-    struct (slice_idx, values...) is kept — a plain partial-aggregatable
-    aggregation, and fully deterministic (within-slice duplicates tie-break
-    by value)."""
-    key = slices[0].columns[0]
-    value_cols = [c for c in slices[0].columns if c not in (key, "ts")]
-    out = slices[0].withColumn("_slice", F.lit(0))
-    for i, s in enumerate(slices[1:], start=1):
-        out = out.unionByName(s.withColumn("_slice", F.lit(i)))
-    packed = out.groupBy(key, "ts").agg(
-        F.min(F.struct("_slice", *[F.col(c) for c in value_cols])).alias("m")
-    )
-    return packed.select(
-        *[F.col(f"m.{c}").alias(c) if c in value_cols else F.col(c)
-          for c in slices[0].columns]
-    )
-
-
 def snapshot_diff(old: DataFrame, new: DataFrame,
                   keys: tuple[str, ...] = ("src", "dst")) -> DataFrame:
     """Keyed diff of two snapshots: one row per key present in either,

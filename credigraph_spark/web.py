@@ -53,7 +53,6 @@ from pyspark.sql.types import StringType
 
 # mirror of wat_extract_links.py:36-41 (as str regexes; payload is text here)
 HTTP_REDIRECT_PATTERN = r"^HTTP\s*/\s*1\.[01]\s*30[12378]\b"
-HTTP_SUCCESS_PATTERN = r"^HTTP\s*/\s*1\.[01]\s*200\b"
 LOCATION_PATTERN = r"(?mi)^Location:\s*(\S+)"
 SITEMAP_PATTERN = r"(?mi)^Sitemap:\s*(\S+)"
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*):"
@@ -151,11 +150,6 @@ def url_join(base: Column | str, link: Column | str) -> Column:
 def is_redirect(headers: Column | str) -> Column:
     h = F.col(headers) if isinstance(headers, str) else headers
     return h.rlike(HTTP_REDIRECT_PATTERN)
-
-
-def is_success(headers: Column | str) -> Column:
-    h = F.col(headers) if isinstance(headers, str) else headers
-    return h.rlike(HTTP_SUCCESS_PATTERN)
 
 
 def extract_redirects(df: DataFrame, url_col: str = "url",

@@ -1,6 +1,8 @@
 """Degenerate-input guards (ADVICE r5): operators must not crash on
 empty/trivial inputs reachable through the CLI."""
 
+import importlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,3 +52,31 @@ def test_reclist_quality_k1_null_ild(spark):
     # AVG-over-empty), not a TypeError
     assert row.mean_ild is None
     assert row.k == 1
+
+
+# every operator on the superstep driver's multi-phase and two-state loops
+# (scc, k-core, Louvain/Leiden, matching, HITS, SALSA) on a graph whose
+# cleaned edge set is empty: each returns an empty result, none raises
+SELF_LOOPS_ONLY = {
+    "scc": ("scc", lambda m, e: m.strongly_connected_components(e)[0]),
+    "bowtie": ("scc", lambda m, e: m.bowtie_classes(e)),
+    "k_core": ("kcore", lambda m, e: m.k_core(e, 2)[0]),
+    "s_core": ("kcore", lambda m, e: m.s_core(e.withColumn("w", F.lit(1)), 2)[0]),
+    "coreness": ("kcore", lambda m, e: m.coreness(e)),
+    "densest_subgraph": ("kcore", lambda m, e: m.densest_subgraph(e, max_rounds=2)),
+    "louvain_local_move": ("louvain", lambda m, e: m.louvain_local_move(e)),
+    "louvain_two_level": ("louvain", lambda m, e: m.louvain_two_level(e)),
+    "leiden_two_level": ("louvain", lambda m, e: m.leiden_two_level(e)),
+    "greedy_matching": ("matching", lambda m, e: m.greedy_matching(e)),
+    "hits": ("hits", lambda m, e: m.hits(e)),
+    "hits_to_convergence": ("hits", lambda m, e: m.hits_to_convergence(e)[0]),
+    "salsa": ("salsa", lambda m, e: m.salsa(e)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SELF_LOOPS_ONLY))
+def test_self_loops_only_input_gives_empty_result(spark, name):
+    mod_name, run = SELF_LOOPS_ONLY[name]
+    mod = importlib.import_module(f"credigraph_spark.graph.{mod_name}")
+    e = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
+    assert run(mod, e).count() == 0
