@@ -225,11 +225,12 @@ def densest_subgraph(edges: DataFrame, eps_tenths: int = 1,
                              .join(keep.withColumnRenamed("vid", "dst"), "dst",
                                    "left_semi")
                              .select("src", "dst"))
+    loop.finish()  # the result is local: it reads no loop table
     out = []
     if rows:  # none on an empty cleaned graph (e.g. only self-loops/nulls)
         best = max(range(len(rows)), key=lambda i: (rows[i][3], -i))
         out = [(r, nv, ne, d, i == best)
                for i, (r, nv, ne, d) in enumerate(rows)]
-    return loop.finish(spark.createDataFrame(
+    return spark.createDataFrame(
         out, "round LONG, n_vertices LONG, n_edges LONG, "
-             "density DOUBLE, is_best BOOLEAN"))
+             "density DOUBLE, is_best BOOLEAN")

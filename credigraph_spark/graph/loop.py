@@ -29,16 +29,18 @@ rest, so the rules below hold in one place instead of one copy per loop:
   replaces (a vertex table, a static coefficient vector, seed rows) is
   materialized with ``setup`` and released by ``finish``, after the
   result that may read it is materialized. A result that IS a table the
-  loop holds (its state, or a part made with ``checkpoint``) is returned
-  as is: ``finish(loop.state)`` frees everything else and keeps the
-  state, so a result that is a projection of the state stays lazy.
+  loop holds (its state, a part made with ``checkpoint``, a setup table)
+  is returned as is: ``finish(loop.state)`` frees everything else and
+  keeps the state, so a result that is a projection of the state stays
+  lazy. ``finish()`` with no plan only releases, for a result that
+  reads no loop table.
 * **nesting**: one ``SuperstepLoop`` per fixpoint. An inner fixpoint
   (scc's trim, coloring and backward floods inside its phase loop) is
   its own loop; ``loop_tuning`` restores the settings it found, so the
-  inner ``with`` hands the outer loop its tuning back. A table an inner
-  loop makes that must outlive the inner loop is cached through the
-  outer loop's ``cache`` and released with the outer loop's round; the
-  inner loop still releases the superseded ones.
+  inner ``with`` hands the outer loop its tuning back. An inner loop has
+  no ``finish``: it releases each superseded state at the end of its
+  round and keeps its final one, which the outer loop adopts with
+  ``cache`` and releases with its own round.
 * **the CheckpointStore protocol**: ``converged_state`` is the resume
   short-circuit (a run already marked converged returns its converged
   state verbatim; an extra superstep would drift the result by < tol and
@@ -216,14 +218,15 @@ class SuperstepLoop:
         if self.converged:
             self.ckpt.mark_converged(self.it)
 
-    def finish(self, plan: DataFrame) -> DataFrame:
+    def finish(self, plan: DataFrame | None = None) -> DataFrame | None:
         """Materialize the operator's result from the final state, then
         release everything the loop still holds, setup tables included.
         A ``plan`` the loop already holds materialized is returned as is
-        and kept."""
-        held = self._held + self._next
-        out = plan if any(plan is df for df in held) else eager_checkpoint(plan)
-        for df in held + self._scratch + self._setup + self._done:
+        and kept; with no ``plan``, nothing is materialized."""
+        held = self._held + self._next + self._setup
+        out = plan if plan is None or any(plan is df for df in held) \
+            else eager_checkpoint(plan)
+        for df in held + self._scratch + self._done:
             if df is not out:
                 release(df)
         self._held, self._next, self._scratch, self._setup, self._done = [], [], [], [], []

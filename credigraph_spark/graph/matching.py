@@ -47,7 +47,7 @@ def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
     n_live = m["n"] or 0
     # every round's exchange runs at the measured count
     nparts = loop.partitions = adaptive_partitions(n_live)
-    out = edges.sparkSession.createDataFrame([], "u LONG, v LONG")
+    out = None
     with loop:
         for r in loop:
             if n_live == 0:
@@ -69,7 +69,7 @@ def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
             n_matched = obs_m.get["n"] or 0
             if n_matched == 0:
                 break
-            out = matched if r == 0 else out.unionByName(matched)
+            out = matched if out is None else out.unionByName(matched)
             gone = (matched.select(F.col("u").alias("vid"))
                     .unionByName(matched.select(F.col("v").alias("vid"))))
             # the observed match count tells us the exact retire-set size:
@@ -87,4 +87,7 @@ def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
                 .select("src", "dst"),
                 F.count(F.lit(1)).alias("n")))
             n_live = m["n"] or 0
+    if out is None:  # nothing matched
+        loop.finish()
+        return edges.sparkSession.createDataFrame([], "u LONG, v LONG")
     return loop.finish(out)

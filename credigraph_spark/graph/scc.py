@@ -72,13 +72,13 @@ def _induced(e: DataFrame, verts: DataFrame) -> DataFrame:
 def _trim(owner: SuperstepLoop, e: DataFrame, verts: DataFrame, n: int,
           rounds: int, info: dict) -> tuple[DataFrame, DataFrame, int]:
     """Trim fixpoint: peel vertices with no in-edge or no out-edge until
-    none remain. Returns the surviving (edges, vertices, count), cached
-    through ``owner``, which releases them with its round."""
+    none remain. Returns the surviving (edges, vertices, count), adopted
+    by ``owner``, which releases them with its round."""
     trim = SuperstepLoop(owner.spark, "scc_trim", owner.partitions, rounds)
     with trim:
         for r in trim:
             if r:  # restrict the edges to the last round's survivors
-                e = owner.cache(trim.checkpoint(_induced(e, verts)))
+                e = trim.checkpoint(_induced(e, verts))
             on_cycle_side = (e.select("src").distinct()
                              .join(e.select(F.col("dst").alias("src"))
                                     .distinct(), "src", "semi")
@@ -87,17 +87,18 @@ def _trim(owner: SuperstepLoop, e: DataFrame, verts: DataFrame, n: int,
                 verts.join(on_cycle_side.hint("shuffle_hash"), "vid", "semi"),
                 F.count("vid").alias("n")))
             info["supersteps"] += 1
-            verts = owner.cache(kept)
+            verts = kept
             n_kept = m["n"] or 0
             trim.end_round(n_kept in (n, 0))
             n = n_kept
-    return e, verts, n
+    # the first round restricts no edges: then ``e`` is still the owner's
+    return (owner.cache(e) if trim.it > 1 else e), owner.cache(verts), n
 
 
 def _coloring(owner: SuperstepLoop, e: DataFrame, verts: DataFrame,
               max_steps: int, info: dict) -> DataFrame:
     """Coloring fixpoint: forward max + pointer jump. Returns (vid, color),
-    cached through ``owner``."""
+    adopted by ``owner``."""
     loop = SuperstepLoop(owner.spark, "scc_color", owner.partitions, max_steps)
     colors = owner.cache(verts.select("vid", F.col("vid").alias("color")))
     with loop:
@@ -124,10 +125,10 @@ def _coloring(owner: SuperstepLoop, e: DataFrame, verts: DataFrame,
                 F.sum((F.col("color") != F.col("prev")).cast("long")
                       ).alias("changed"),
             ).select("vid", "color"))
-            colors = owner.cache(new)
+            colors = new
             info["supersteps"] += 1
             loop.end_round((m["changed"] or 0) == 0)
-    return colors
+    return owner.cache(colors)
 
 
 def _flood(owner: SuperstepLoop, e: DataFrame, state: DataFrame, col: str,
@@ -135,8 +136,7 @@ def _flood(owner: SuperstepLoop, e: DataFrame, state: DataFrame, col: str,
     """Boolean closure of ``col`` along ``e``: a vertex whose in-neighbour
     (``forward``) or out-neighbour (backward) is flagged becomes flagged.
     One join + OR-agg per superstep. Returns (final state, supersteps);
-    every state is cached through ``owner``, which releases the final one
-    (the flood's own loop releases the superseded ones)."""
+    the final state is adopted by ``owner``."""
     loop = SuperstepLoop(owner.spark, f"flood_{col}", owner.partitions, max_steps)
     rest = [c for c in state.columns if c != col]
     kwargs = ({"to_dst": F.col(f"src_{col}"), "attach": ("src",)}
@@ -156,9 +156,9 @@ def _flood(owner: SuperstepLoop, e: DataFrame, state: DataFrame, col: str,
                 F.sum((F.col(col) != F.col("prev")).cast("long")
                       ).alias("changed"),
             ).select(*rest, col))
-            cur = owner.cache(new)
+            cur = new
             loop.end_round((m["changed"] or 0) == 0)
-    return cur, loop.it
+    return owner.cache(cur), loop.it
 
 
 def strongly_connected_components(
@@ -185,8 +185,7 @@ def strongly_connected_components(
     e0.unpersist()
     info: dict = {"n_vertices": n, "phases": 0, "supersteps": 0,
                   "converged": n == 0, "phase_extracted": []}
-
-    done = spark.createDataFrame([], "vid long, scc_id long")
+    done = None
     with phases:
         for phase in phases:
             if n == 0:
@@ -223,7 +222,7 @@ def strongly_connected_components(
                        .select("vid", F.col("vid").alias("scc_id")))
             phase_labels = trimmed if members is None \
                 else trimmed.unionByName(members)
-            done = phases.checkpoint(phase_labels if phase == 0
+            done = phases.checkpoint(phase_labels if done is None
                                      else done.unionByName(phase_labels))
 
             n_next = 0
@@ -244,6 +243,9 @@ def strongly_connected_components(
             info["phases"] = phase + 1
 
     info["converged"] = n == 0
+    if done is None:  # no phase ran: an empty cleaned graph
+        phases.finish()
+        return spark.createDataFrame([], "vid long, scc_id long"), info
     return phases.finish(done), info
 
 
@@ -282,7 +284,8 @@ def bowtie_classes(
                 .orderBy(F.desc("count"), F.asc("scc_id")).limit(1)
                 .collect())
     if not core_row:
-        out = own.finish(spark.createDataFrame([], "vid long, cls string"))
+        own.finish()
+        out = spark.createDataFrame([], "vid long, cls string")
     else:
         state = own.cache(labels.select(
             "vid", (F.col("scc_id") == F.lit(core_row[0]["scc_id"])).alias("core")))

@@ -243,6 +243,9 @@ PROTOCOL = {"loop_tuning", "release", "converged_iteration",
 ALLOWED = {"triangles": {"loop_tuning"}}
 GRAPH_MODULES = sorted(p.stem for p in Path(loop_mod.__file__).parent.glob("*.py")
                        if p.stem != "loop")
+# the modules whose loops run on the driver
+DRIVER = {"anf", "components", "katz", "lpa", "pagerank", "ppr", "spreading",
+          "sssp", "wl", "scc", "kcore", "louvain", "matching", "hits", "salsa"}
 
 
 @pytest.mark.parametrize("name", GRAPH_MODULES)
@@ -254,4 +257,6 @@ def test_migrated_loops_use_the_superstep_driver(name):
                 for a in node.names}
     used = {node.attr for node in ast.walk(tree) if isinstance(node, ast.Attribute)}
     used |= {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+    if name in DRIVER:
+        assert "SuperstepLoop" in imported
     assert not (imported | used) & (PROTOCOL - ALLOWED.get(name, set()))
