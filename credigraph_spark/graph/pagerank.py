@@ -168,6 +168,7 @@ def pagerank(
     shuffle_n = loop.partitions = num_partitions or adaptive_partitions(info["n_edges"])
     done = loop.converged_state()
     if done is not None:
+        loop.finish()  # the stored state reads no loop table: release vt
         return done, info
 
     base = (1.0 - damping) / n

@@ -114,8 +114,13 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 3,
 def _power_iteration(und: DataFrame, term, algo: str, max_iter: int,
                      round_digits: int | None) -> DataFrame:
     """x ← Σ_{u→v} ``term`` from the all-ones start, L2-normalized each
-    round, over the symmetrized edge set ``und``."""
-    le, _, nparts = measured_repartition(und, "src")
+    round, over the symmetrized edge set ``und``. No edges: empty
+    (vid, x), with no loop and no norm over an empty state."""
+    le, n_und, nparts = measured_repartition(und, "src")
+    if n_und == 0:
+        le.unpersist()
+        return und.select(F.col("dst").alias("vid"),
+                          F.lit(0.0).alias("x")).where(F.lit(False))
     verts = (le.select(F.col("dst").alias("vid")).distinct()
              .repartition(nparts, "vid").persist())
     loop = SuperstepLoop(und.sparkSession, algo, nparts, max_iter)
@@ -178,7 +183,12 @@ def fiedler_vector(edges: DataFrame, max_iter: int = 3,
     import math
 
     und = undirected_simple(edges.select("src", "dst")).persist()
-    nparts = adaptive_partitions(und.count())
+    n_und = und.count()
+    if n_und == 0:  # no edges: no degree sum to normalize by
+        und.unpersist()
+        return und.select(F.col("dst").alias("vid"),
+                          F.lit(0.0).alias("f")).where(F.lit(False))
+    nparts = adaptive_partitions(n_und)
     loop = SuperstepLoop(edges.sparkSession, "fiedler", nparts, max_iter)
     deg = loop.setup(und.groupBy(F.col("dst").alias("vid"))
                      .agg(F.count("*").alias("deg"))

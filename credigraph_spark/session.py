@@ -48,6 +48,19 @@ _DEFAULTS = {
     # ~1.8x slower at 20M edges). Broadcast still wins when the small side
     # fits under autoBroadcastJoinThreshold.
     "spark.sql.join.preferSortMergeJoin": "false",
+    # Generated-code cache (a static conf: it takes effect only when the
+    # session is built). A superstep loop re-plans the same operators
+    # every round, and one perfbench rank_hub_ckpt call (PageRank with a
+    # store, CC, triangles) needs 213 distinct classes; at Spark's default
+    # of 100 the call evicted its own classes, so every warm call
+    # recompiled ~270 (~2 s of serial Janino, and the new classes run
+    # cold in the JIT). At 2000 a traced warm call compiled 0 and the
+    # call's median time fell 16.1 -> 11.9 s (10 alternating runs, 4
+    # cores). The heaviest bench.py leaf at sf0.001, leiden_two_level,
+    # recompiled 184 per warm rep at 100 and none at 2000 (every leaf: at
+    # most 6). 2000 is ~9x the largest working set; the classes live in
+    # metaspace, not heap (peak RSS did not rise).
+    "spark.sql.codegen.cache.maxEntries": "2000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

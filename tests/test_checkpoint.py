@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
 from credigraph_spark.graph import connected_components, label_propagation, pagerank
@@ -109,6 +110,33 @@ def test_iceberg_catalog_fallback(spark, tmp_path):
     assert ck.latest_iteration() == 0
     again = ck.read_state(spark, 0)
     assert again.count() == 2
+
+
+def test_parquet_write_state_is_one_job(spark, tmp_path):
+    """A parquet-backend write runs one Spark job, the write: the re-read
+    is lazy (the written schema is known, nothing is inferred) and the
+    lineage record comes from the part files' footers, one entry per
+    written part file, its rows summing to the state's."""
+    import json
+    import os
+
+    ck = CheckpointStore(str(tmp_path / "one_job"), "run1")
+    df = spark.range(0, 1000, numPartitions=3).select(
+        F.col("id").alias("vid"), (F.col("id") / 7).alias("rank"))
+    sc = spark.sparkContext
+    sc.setJobGroup("write_state_jobs", "write_state")
+    try:
+        out = ck.write_state(df, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("write_state_jobs")) == 1
+    assert out.dtypes == df.dtypes
+    assert sorted(out.collect()) == sorted(df.collect())
+    written = [f for f in os.listdir(ck._iter_dir("state", 0)) if f.startswith("part-")]
+    with open(os.path.join(ck.run_dir, "lineage.jsonl")) as f:
+        rec = json.loads(f.readlines()[-1])
+    assert rec["iteration"] == 0 and len(rec["partitions"]) == len(written) == 3
+    assert sum(rec["partitions"].values()) == 1000
 
 
 class FakeTableIO:

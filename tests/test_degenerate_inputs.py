@@ -55,8 +55,9 @@ def test_reclist_quality_k1_null_ild(spark):
 
 
 # every operator on the superstep driver's multi-phase and two-state loops
-# (scc, k-core, Louvain/Leiden, matching, HITS, SALSA) on a graph whose
-# cleaned edge set is empty: each returns an empty result, none raises
+# (scc, k-core, Louvain/Leiden, matching, HITS, SALSA) and the normalized
+# power iterations (eigenvector, Fiedler, the spectral sweep) on a graph
+# whose cleaned edge set is empty: each returns an empty result, none raises
 SELF_LOOPS_ONLY = {
     "scc": ("scc", lambda m, e: m.strongly_connected_components(e)[0]),
     "bowtie": ("scc", lambda m, e: m.bowtie_classes(e)),
@@ -71,6 +72,12 @@ SELF_LOOPS_ONLY = {
     "hits": ("hits", lambda m, e: m.hits(e)),
     "hits_to_convergence": ("hits", lambda m, e: m.hits_to_convergence(e)[0]),
     "salsa": ("salsa", lambda m, e: m.salsa(e)),
+    "eigenvector_centrality": ("spreading", lambda m, e: m.eigenvector_centrality(e)),
+    "eigenvector_centrality_weighted": (
+        "spreading", lambda m, e: m.eigenvector_centrality_weighted(
+            e.withColumn("w", F.lit(1.0)), "w")),
+    "fiedler_vector": ("spreading", lambda m, e: m.fiedler_vector(e)),
+    "spectral_sweep_cut": ("spreading", lambda m, e: m.spectral_sweep_cut(e)),
 }
 
 

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from credigraph_spark import session
+from credigraph_spark.checkpoint import CheckpointStore
 from credigraph_spark.graph import loop as loop_mod
 from credigraph_spark.graph.components import connected_components
 from credigraph_spark.session import eager_checkpoint, join_side
@@ -143,7 +144,13 @@ def _scanned_rdds(df) -> set[int]:
 
 CYCLE41 = [(i, (i + 1) % 41) for i in range(41)]
 
-# operator -> (module, one call on the 7-edge fixture)
+
+def _pagerank_stored(m, e, ck):
+    return m.pagerank(e, tol=1e-2, ckpt=ck)[0]
+
+
+# operator -> (module, one call on the 7-edge fixture[, a call made first
+# on the same store, whose additions are not counted])
 ONE_CALL = {
     "scc_cycle41": ("credigraph_spark.graph.scc",
                     lambda m, e: m.strongly_connected_components(
@@ -159,22 +166,31 @@ ONE_CALL = {
                 e, e.sparkSession.createDataFrame([(1,)], "vid long"), max_iter=3)),
     "fiedler": ("credigraph_spark.graph.spreading",
                 lambda m, e: m.fiedler_vector(e, max_iter=3)),
+    # the run converged in the first call: the second returns the stored
+    # state, which reads no checkpoint, and releases its vertex table
+    "pagerank_converged_resume": ("credigraph_spark.graph.pagerank",
+                                  _pagerank_stored, _pagerank_stored),
 }
 
 
 @pytest.mark.parametrize("name", sorted(ONE_CALL))
-def test_one_call_leaves_only_what_its_result_reads(spark, monkeypatch, name):
+def test_one_call_leaves_only_what_its_result_reads(spark, monkeypatch, tmp_path,
+                                                   name):
     """Once an operator returns, the only persisted RDDs it has added are
     the ones its result reads: every superseded state, scratch cache and
     setup table (pagerank's vertex table and static vector, katz's
     receivers and base, ppr's seed rows, fiedler's degrees) is released."""
-    mod_name, run = ONE_CALL[name]
+    mod_name, run, *first = ONE_CALL[name]
     mod = importlib.import_module(mod_name)
     held = []
     _hold_every_checkpoint(monkeypatch, mod, held)
     sc = spark.sparkContext
+    args = (mod, edges_df(spark, EDGES7))
+    if first:
+        args += (CheckpointStore(str(tmp_path), "one_call"),)
+        held.append(first[0](*args))
     before = set(sc._jsc.getPersistentRDDs().keySet())
-    out = run(mod, edges_df(spark, EDGES7))
+    out = run(*args)
     out.collect()
     added = set(sc._jsc.getPersistentRDDs().keySet()) - before
     assert added == _scanned_rdds(out)
@@ -231,6 +247,37 @@ def test_stats_strip_fallback_warns_once(spark, monkeypatch, caplog):
     warnings = [r for r in caplog.records
                 if r.name == "credigraph_spark" and r.levelno == logging.WARNING]
     assert len(warnings) == 1
+
+
+def test_codegen_cache_keeps_a_calls_classes(spark, tmp_path):
+    """PageRank with a store and CC on a small R-MAT generate 144 distinct
+    classes, more than Spark's default 100-entry codegen cache holds: at
+    that size every repeat of the pair recompiled 139 of them. The
+    session's cache keeps them, so the same calls again compile nothing.
+    The graph is symmetrized so no vertex is dangling: PageRank's per-round
+    scalars, which its plans carry as literals, are then exact.
+    (triangle_count is left out: 2 of its 14 repeats compiled 4-6 new
+    classes, which would make this test flaky.)"""
+    from credigraph_spark.graph import pagerank
+    from credigraph_spark.graph.generate import rmat_edges
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    e = rmat_edges(spark, scale=7, n_edges=600).select("src", "dst")
+    edges = e.unionByName(e.select(F.col("dst").alias("src"),
+                                   F.col("src").alias("dst"))).persist()
+    edges.count()
+
+    def call(run_id: str) -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        ck = CheckpointStore(str(tmp_path), run_id)
+        pagerank(edges, tol=0.0, max_iter=3, ckpt=ck, checkpoint_every=1,
+                 mode="shuffle", salt_buckets=4, hot_threshold=8)[0].collect()
+        connected_components(edges)[0].collect()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    call("first")
+    assert call("second") == 0
+    edges.unpersist()
 
 
 # No graph module but the driver names the superstep protocol (tuning,
