@@ -10,6 +10,18 @@ the higher one, which bounds every oriented out-degree by O(sqrt(E)) — the
 standard skew bound that keeps hub vertices from exploding the wedge join.
 Then triangles = wedges (u→v1, u→v2 with key(v1)<key(v2)) that close with
 an oriented edge (v1→v2): two self-joins, no iteration, no UDFs.
+``_oriented`` builds that layout and ``_triangles`` the wedge join, for
+every operator here but the weighted clustering coefficient (whose float
+corner sums keep their own plan).
+
+Sizing (PageRank's rule): an operator's first action measures its input
+(the canonical pair set's materializing job counts its rows); everything
+after it runs under ``session.loop_tuning`` at
+``adaptive_partitions(n)``. With AQE paused, the degree, orientation and
+wedge exchanges are created at the measured size instead of the session's
+constant, and no AQE stage job runs per exchange; AQE's runtime skew
+split would buy nothing, since the orientation already bounds each
+vertex's wedges.
 """
 
 from __future__ import annotations
@@ -18,7 +30,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges
 
-from credigraph_spark.session import adaptive_partitions, eager_checkpoint
+from credigraph_spark.session import adaptive_partitions, eager_checkpoint, loop_tuning
 
 
 def _canonical_undirected(edges: DataFrame) -> DataFrame:
@@ -32,60 +44,78 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> tuple[DataFrame, int]:
-    """Returns (per_vertex(vid, triangles), total_triangles)."""
-    spark = edges.sparkSession
-    shuffle_n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+def _measured_pairs(edges: DataFrame) -> tuple[DataFrame, int]:
+    """The canonical pair set (a, b), materialized by ONE job whose
+    Observation also counts its rows (the operator's measuring action).
+    Returns (checkpointed pairs, row count)."""
+    obs = Observation("canonical_pairs")
+    cnd = eager_checkpoint(_canonical_undirected(edges)
+                           .observe(obs, F.count(F.lit(1)).alias("n")))
+    return cnd, int(obs.get["n"] or 0)
 
-    cnd = _canonical_undirected(edges).persist()
 
-    deg = (
+def _degrees(cnd: DataFrame, name: str = "deg") -> DataFrame:
+    """(vid, ``name``): every vertex's degree over the canonical pairs."""
+    return (
         cnd.select(F.col("a").alias("vid"))
         .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("deg"))
+        .groupBy("vid").agg(F.count("*").alias(name))
     )
-    da = deg.select(F.col("vid").alias("a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("vid").alias("b"), F.col("deg").alias("db"))
-    keyed = cnd.join(da, "a").join(db, "b")
 
-    # orient low-(deg, vid) -> high-(deg, vid)
+
+def _oriented(cnd: DataFrame, shuffle_n: int) -> DataFrame:
+    """The degree-oriented layout (u, v, dv) of the canonical pairs: each
+    edge points from its lower-(deg, vid) endpoint u to the higher one v
+    (dv = deg(v)), hash-partitioned by u into ``shuffle_n`` parts."""
+    deg = _degrees(cnd)
+    keyed = (cnd.join(deg.select(F.col("vid").alias("a"), F.col("deg").alias("da")), "a")
+             .join(deg.select(F.col("vid").alias("b"), F.col("deg").alias("db")), "b"))
     a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = keyed.select(
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
+    return keyed.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).repartition(shuffle_n, "u").persist()
-    oriented.count()
+    ).repartition(shuffle_n, "u")
 
-    e1 = oriented.select(F.col("u"), F.col("v").alias("v1"), F.col("dv").alias("dv1"))
-    e2 = oriented.select(F.col("u"), F.col("v").alias("v2"), F.col("dv").alias("dv2"))
+
+def _triangles(oriented: DataFrame) -> DataFrame:
+    """(u, v1, v2), every triangle once: the wedges u→v1, u→v2 with
+    key(v1) < key(v2) that an oriented edge v1→v2 closes."""
+    e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("dv1"))
+    e2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("dv2"))
     wedges = e1.join(e2, "u").where(
         (F.col("dv1") < F.col("dv2"))
-        | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2")))
-    )
+        | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2"))))
     closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tris = wedges.join(closing, ["v1", "v2"], "inner").select("u", "v1", "v2")
+    return wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
 
-    # ONE action: the per-vertex corner aggregation is checkpointed (so
-    # the expensive wedge enumeration never re-runs at the caller's first
-    # action) and the total rides an Observation on that same job — every
-    # triangle contributes exactly 3 corner rows. Previously `tris` was
-    # persisted for a separate count action and that persist LEAKED for
-    # the session's lifetime.
-    obs = Observation("triangle_total")
-    per_vertex = eager_checkpoint(
-        tris.select(F.explode(F.array("u", "v1", "v2")).alias("vid"))
-        .groupBy("vid")
-        .agg(F.count("*").alias("triangles"))
-        .observe(obs, F.sum("triangles").alias("corners"))
-    )
+
+def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> tuple[DataFrame, int]:
+    """Returns (per_vertex(vid, triangles), total_triangles)."""
+    spark = edges.sparkSession
+    cnd, n = _measured_pairs(edges)
+    shuffle_n = num_partitions or adaptive_partitions(n)
+    with loop_tuning(spark, shuffle_n):
+        oriented = _oriented(cnd, shuffle_n).persist()
+        # ONE action: the per-vertex corner aggregation is checkpointed (so
+        # the expensive wedge enumeration never re-runs at the caller's
+        # first action; its job also fills the oriented cache) and the
+        # total rides an Observation on that same job — every triangle
+        # contributes exactly 3 corner rows.
+        obs = Observation("triangle_total")
+        per_vertex = eager_checkpoint(
+            _triangles(oriented)
+            .select(F.explode(F.array("u", "v1", "v2")).alias("vid"))
+            .groupBy("vid")
+            .agg(F.count("*").alias("triangles"))
+            .observe(obs, F.sum("triangles").alias("corners"))
+        )
+        oriented.unpersist()
     total = int(obs.get["corners"] or 0) // 3
     # vertices with zero triangles still appear (left join against all);
-    # lazy on purpose — recomputing it at the caller costs one canonical
-    # dedup of the edges, never the wedge join
+    # lazy on purpose — it reads only the two checkpoints the call made,
+    # never the wedge join
     all_verts = (
         cnd.select(F.col("a").alias("vid"))
         .unionByName(cnd.select(F.col("b").alias("vid")))
@@ -95,8 +125,6 @@ def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> tuple
         all_verts.join(per_vertex, "vid", "left")
         .select("vid", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles"))
     )
-    cnd.unpersist()
-    oriented.unpersist()
     return result, total
 
 
@@ -110,13 +138,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     Returns (vid, deg, lcc).
     """
     per_vertex, _ = triangle_count(edges)
-    cnd = _canonical_undirected(edges)
-    deg = (
-        cnd.select(F.col("a").alias("vid"))
-        .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(_canonical_undirected(edges))
     return per_vertex.join(deg, "vid").select(
         "vid",
         "deg",
@@ -137,12 +159,7 @@ def global_transitivity(edges: DataFrame) -> DataFrame:
     global sibling of clustering_coefficient, exact integer moments and
     one final rounded division (closeness/eccentricity convention)."""
     per_vertex, total = triangle_count(edges)
-    cnd = _canonical_undirected(edges)
-    deg = (
-        cnd.select(F.col("a").alias("vid"))
-        .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid").agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(_canonical_undirected(edges))
     # all-integer: deg*(deg-1) is even, so the DIV is exact — doubles
     # would lose bits once a hub degree passes 2^26 (deg^2 > 2^53)
     wedges = deg.agg(
@@ -175,68 +192,42 @@ def k_truss(
     oracle, exactly like ``k_core(max_rounds=...)``.
     """
     spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     need = k - 2
 
-    cur = (_canonical_undirected(edges)
-           .repartition(shuffle_n, "a")
-           .transform(eager_checkpoint))
-    n_edges = cur.count()
+    cur, n_edges = _measured_pairs(edges)
+    shuffle_n = adaptive_partitions(n_edges)
     rounds = 0
-    while n_edges > 0:
-        if max_rounds is not None and rounds >= max_rounds:
-            break
-        deg = (
-            cur.select(F.col("a").alias("vid"))
-            .unionByName(cur.select(F.col("b").alias("vid")))
-            .groupBy("vid").agg(F.count("*").alias("deg"))
-        )
-        da = deg.select(F.col("vid").alias("a"), F.col("deg").alias("da"))
-        db = deg.select(F.col("vid").alias("b"), F.col("deg").alias("db"))
-        keyed = cur.join(da, "a").join(db, "b")
-        a_first = (F.col("da") < F.col("db")) | (
-            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-        )
-        oriented = keyed.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-        ).repartition(shuffle_n, "u").persist()
+    with loop_tuning(spark, shuffle_n):
+        while n_edges > 0 and (max_rounds is None or rounds < max_rounds):
+            oriented = _oriented(cur, shuffle_n).persist()
+            tris = _triangles(oriented)
+            # scatter each triangle to its 3 edges (already canonical a < b
+            # is NOT guaranteed between u/v1/v2 — orientation is by degree
+            # — so re-canonicalize per edge), map-side-combinable count per
+            # edge
+            tri_edges = None
+            for x, y in (("u", "v1"), ("u", "v2"), ("v1", "v2")):
+                part = tris.select(
+                    F.least(F.col(x), F.col(y)).alias("a"),
+                    F.greatest(F.col(x), F.col(y)).alias("b"),
+                )
+                tri_edges = part if tri_edges is None else tri_edges.unionByName(part)
+            supp = tri_edges.groupBy("a", "b").agg(F.count("*").alias("supp"))
 
-        e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("dv1"))
-        e2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("dv2"))
-        wedges = e1.join(e2, "u").where(
-            (F.col("dv1") < F.col("dv2"))
-            | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2")))
-        )
-        closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-        tris = wedges.join(closing, ["v1", "v2"], "inner").select("u", "v1", "v2")
-
-        # scatter each triangle to its 3 edges (already canonical a < b is
-        # NOT guaranteed between u/v1/v2 — orientation is by degree — so
-        # re-canonicalize per edge), map-side-combinable count per edge
-        tri_edges = None
-        for x, y in (("u", "v1"), ("u", "v2"), ("v1", "v2")):
-            part = tris.select(
-                F.least(F.col(x), F.col(y)).alias("a"),
-                F.greatest(F.col(x), F.col(y)).alias("b"),
+            # the surviving-edge count rides the round's checkpoint job
+            obs = Observation(f"k_truss_{rounds}")
+            cur = eager_checkpoint(
+                cur.join(supp, ["a", "b"], "left")
+                .where(F.coalesce("supp", F.lit(0)) >= need)
+                .select("a", "b")
+                .observe(obs, F.count(F.lit(1)).alias("n"))
             )
-            tri_edges = part if tri_edges is None else tri_edges.unionByName(part)
-        supp = tri_edges.groupBy("a", "b").agg(F.count("*").alias("supp"))
-
-        nxt = (
-            cur.join(supp, ["a", "b"], "left")
-            .where(F.coalesce("supp", F.lit(0)) >= need)
-            .select("a", "b")
-            .transform(eager_checkpoint)
-        )
-        n_next = nxt.count()
-        oriented.unpersist()
-        cur = nxt
-        rounds += 1
-        if n_next == n_edges:
-            break
-        n_edges = n_next
+            n_next = int(obs.get["n"] or 0)
+            oriented.unpersist()
+            rounds += 1
+            if n_next == n_edges:
+                break
+            n_edges = n_next
 
     return cur.select(F.col("a").alias("src"), F.col("b").alias("dst")), rounds
 
@@ -349,30 +340,8 @@ def directed_triad_census(edges: DataFrame) -> DataFrame:
                    .alias("m"))
           .groupBy("a", "b").agg(F.sum("m").alias("m")))
 
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cnd = dm.select("a", "b")
-    deg = (cnd.select(F.col("a").alias("vid"))
-           .unionByName(cnd.select(F.col("b").alias("vid")))
-           .groupBy("vid").agg(F.count("*").alias("deg")))
-    keyed = (cnd.join(deg.select(F.col("vid").alias("a"),
-                                 F.col("deg").alias("da")), "a")
-             .join(deg.select(F.col("vid").alias("b"),
-                              F.col("deg").alias("db")), "b"))
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = keyed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).repartition(shuffle_n, "u")
-    e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("dv1"))
-    e2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("dv2"))
-    wedges = e1.join(e2, "u").where(
-        (F.col("dv1") < F.col("dv2"))
-        | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2"))))
-    closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
+    shuffle_n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    tris = _triangles(_oriented(dm.select("a", "b"), shuffle_n))
 
     def mask_join(t, x, y, name):
         return t.join(
@@ -458,12 +427,7 @@ def clustering_null_model(edges: DataFrame) -> DataFrame:
     it overflows anyone's patience); the two divisions at the end are
     the only floats, rounded."""
     gt = global_transitivity(edges)
-    cnd = _canonical_undirected(edges)
-    deg = (
-        cnd.select(F.col("a").alias("vid"))
-        .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid").agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(_canonical_undirected(edges))
     dd = F.col("deg").cast("decimal(38,0)")
     mom = deg.agg(
         F.count("*").alias("n_vertices"),
@@ -504,45 +468,23 @@ def clique_percolation_k3(edges: DataFrame) -> DataFrame:
     string key."""
     # cache + count the canonical pair set once: it feeds the degree agg
     # (twice) and the orientation join, and the measured edge count sizes
-    # the wedge-join partitioning (scale-adaptive)
+    # the wedge join (the loop-tuned context below)
     cnd = _canonical_undirected(edges).persist()
-    n_cnd = cnd.count()
-    # enumerate triangles via the deg-oriented wedge join (the
-    # triangle_count shape), then canonical-sort each triple
     spark = edges.sparkSession
-    shuffle_n = adaptive_partitions(n_cnd)
-    deg = (
-        cnd.select(F.col("a").alias("vid"))
-        .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid").agg(F.count("*").alias("deg"))
-    )
-    keyed = (cnd.join(deg.select(F.col("vid").alias("a"),
-                                 F.col("deg").alias("da")), "a")
-             .join(deg.select(F.col("vid").alias("b"),
-                              F.col("deg").alias("db")), "b"))
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = keyed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).repartition(shuffle_n, "u").persist()
-    oriented.count()
-    e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("dv1"))
-    e2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("dv2"))
-    wedges = e1.join(e2, "u").where(
-        (F.col("dv1") < F.col("dv2"))
-        | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2"))))
-    closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    srt = F.array_sort(F.array("u", "v1", "v2"))
-    tri = (wedges.join(closing, ["v1", "v2"])
-           .select(srt[0].alias("x"), srt[1].alias("y"), srt[2].alias("z"))
-           .withColumn("tkey", F.concat_ws(
-               ":", F.lit("t"), F.col("x").cast("string"),
-               F.col("y").cast("string"), F.col("z").cast("string")))
-           .persist())
-    n_tri = tri.count()
-    oriented.unpersist()
+    shuffle_n = adaptive_partitions(cnd.count())
+    # enumerate triangles via the deg-oriented wedge join, then
+    # canonical-sort each triple; the tri count's job fills both caches
+    with loop_tuning(spark, shuffle_n):
+        oriented = _oriented(cnd, shuffle_n).persist()
+        srt = F.array_sort(F.array("u", "v1", "v2"))
+        tri = (_triangles(oriented)
+               .select(srt[0].alias("x"), srt[1].alias("y"), srt[2].alias("z"))
+               .withColumn("tkey", F.concat_ws(
+                   ":", F.lit("t"), F.col("x").cast("string"),
+                   F.col("y").cast("string"), F.col("z").cast("string")))
+               .persist())
+        n_tri = tri.count()
+        oriented.unpersist()
     cnd.unpersist()
 
     def _ekey(p, q):
@@ -566,7 +508,6 @@ def clique_percolation_k3(edges: DataFrame) -> DataFrame:
     # re-planning this one checkpoint job measured 1.1 s on a 10k-row
     # graph, 0.4 s under the loop-sized context
     cc_parts = max(1, min(shuffle_n, 1 + (3 * n_tri) // 250_000))
-    from credigraph_spark.session import loop_tuning
     # eager-checkpoint the tiny incidence graph BEFORE the CC loop: CC's
     # setup and every superstep otherwise re-canonicalize the deep
     # inc-join-star lineage on each plan (cache lookup + stats walk) —
@@ -606,58 +547,33 @@ def edge_embeddedness(edges: DataFrame,
     oriented join + one scatter groupBy; returns (src, dst, common,
     emb), src < dst."""
     cnd = _canonical_undirected(edges).persist()
-    spark = edges.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    tris, oriented = None, None
-    deg = (
-        cnd.select(F.col("a").alias("vid"))
-        .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid").agg(F.count("*").alias("deg"))
-    )
-    keyed = (cnd.join(deg.select(F.col("vid").alias("a"),
-                                 F.col("deg").alias("da")), "a")
-             .join(deg.select(F.col("vid").alias("b"),
-                              F.col("deg").alias("db")), "b"))
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = keyed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).repartition(shuffle_n, "u").persist()
-    oriented.count()
-    e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("dv1"))
-    e2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("dv2"))
-    wedges = e1.join(e2, "u").where(
-        (F.col("dv1") < F.col("dv2"))
-        | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2"))))
-    closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
-    # scatter each triangle to its three canonical edges
-    def _pair(p, q):
-        return F.struct(F.least(p, q).alias("a"), F.greatest(p, q).alias("b"))
-    sup = (tris.select(F.explode(F.array(
-        _pair(F.col("u"), F.col("v1")),
-        _pair(F.col("u"), F.col("v2")),
-        _pair(F.col("v1"), F.col("v2")))).alias("e"))
-        .groupBy("e.a", "e.b").agg(F.count("*").alias("common")))
-    out = (cnd.join(deg.select(F.col("vid").alias("a"),
-                               F.col("deg").alias("da")), "a")
-           .join(deg.select(F.col("vid").alias("b"),
-                            F.col("deg").alias("db")), "b")
-           .join(sup, ["a", "b"], "left")
-           .select(
-               F.col("a").alias("src"), F.col("b").alias("dst"),
-               F.coalesce("common", F.lit(0)).cast("long").alias("common"),
-               F.round(
-                   F.coalesce("common", F.lit(0))
-                   / (F.col("da") + F.col("db") - 2
-                      - F.coalesce("common", F.lit(0))).cast("double"),
-                   round_digits).alias("emb")))
-    # materialize before releasing the caches (caller's action would
-    # otherwise re-run the wedge enumeration against uncached inputs)
-    out = out.transform(eager_checkpoint)
-    oriented.unpersist()
+    shuffle_n = adaptive_partitions(cnd.count())
+    with loop_tuning(edges.sparkSession, shuffle_n):
+        oriented = _oriented(cnd, shuffle_n).persist()
+        deg = _degrees(cnd)
+
+        # scatter each triangle to its three canonical edges
+        def _pair(p, q):
+            return F.struct(F.least(p, q).alias("a"), F.greatest(p, q).alias("b"))
+        sup = (_triangles(oriented).select(F.explode(F.array(
+            _pair(F.col("u"), F.col("v1")),
+            _pair(F.col("u"), F.col("v2")),
+            _pair(F.col("v1"), F.col("v2")))).alias("e"))
+            .groupBy("e.a", "e.b").agg(F.count("*").alias("common")))
+        common = F.coalesce("common", F.lit(0))
+        # materialized before releasing the caches (the caller's action
+        # would otherwise re-run the wedge enumeration against uncached
+        # inputs); its job also fills the oriented cache
+        out = eager_checkpoint(
+            cnd.join(deg.select(F.col("vid").alias("a"), F.col("deg").alias("da")), "a")
+            .join(deg.select(F.col("vid").alias("b"), F.col("deg").alias("db")), "b")
+            .join(sup, ["a", "b"], "left")
+            .select(
+                F.col("a").alias("src"), F.col("b").alias("dst"),
+                common.cast("long").alias("common"),
+                F.round(common / (F.col("da") + F.col("db") - 2 - common).cast("double"),
+                        round_digits).alias("emb")))
+        oriented.unpersist()
     cnd.unpersist()
     return out
 
@@ -773,12 +689,7 @@ def egonet_anomaly(edges: DataFrame, top_k: int = 20,
     and ONE TakeOrderedAndProject for the top-k — no window over data.
     Returns (vid, n, e, resid), top_k rows."""
     per, _ = triangle_count(edges)
-    cnd = _canonical_undirected(edges)
-    deg = (
-        cnd.select(F.col("a").alias("vid"))
-        .unionByName(cnd.select(F.col("b").alias("vid")))
-        .groupBy("vid").agg(F.count("*").alias("n"))
-    )
+    deg = _degrees(_canonical_undirected(edges), "n")
     ego = (deg.join(per, "vid", "left")
            .select("vid", "n",
                    (F.col("n") + F.coalesce("triangles", F.lit(0)))

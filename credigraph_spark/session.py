@@ -104,8 +104,12 @@ def loop_tuning(spark: SparkSession, shuffle_partitions: int | None = None):
     stage shapes are static, partition counts are chosen explicitly, and
     skew is handled by targeted salting. Pausing AQE cuts the serial
     driver floor — the term that dominates N→4N scaling efficiency at
-    small per-superstep data. One-shot queries (extraction, joins,
-    analytics) keep AQE's size-based coalescing and skew-join.
+    small per-superstep data. Graph operators without a loop follow the
+    same rule once their first action has measured the input (triangle
+    counting, CC's setup): every job after that count runs here, at
+    ``adaptive_partitions(n)``. Other one-shot queries (extraction,
+    relational joins, analytics) keep AQE's size-based coalescing and
+    skew-join.
 
     Inside the loop the per-round groupBy/join exchanges are created at
     the SESSION shuffle-partition constant — explicit repartitions of the

@@ -55,9 +55,11 @@ def test_reclist_quality_k1_null_ild(spark):
 
 
 # every operator on the superstep driver's multi-phase and two-state loops
-# (scc, k-core, Louvain/Leiden, matching, HITS, SALSA) and the normalized
-# power iterations (eigenvector, Fiedler, the spectral sweep) on a graph
-# whose cleaned edge set is empty: each returns an empty result, none raises
+# (scc, k-core, Louvain/Leiden, matching, HITS, SALSA), the normalized
+# power iterations (eigenvector, Fiedler, the spectral sweep), CC and the
+# triangle operators, which size their work from a measured count, on a
+# graph whose cleaned edge set is empty: each returns an empty result, none
+# raises
 SELF_LOOPS_ONLY = {
     "scc": ("scc", lambda m, e: m.strongly_connected_components(e)[0]),
     "bowtie": ("scc", lambda m, e: m.bowtie_classes(e)),
@@ -78,6 +80,11 @@ SELF_LOOPS_ONLY = {
             e.withColumn("w", F.lit(1.0)), "w")),
     "fiedler_vector": ("spreading", lambda m, e: m.fiedler_vector(e)),
     "spectral_sweep_cut": ("spreading", lambda m, e: m.spectral_sweep_cut(e)),
+    "connected_components": ("components", lambda m, e: m.connected_components(e)[0]),
+    "triangle_count": ("triangles", lambda m, e: m.triangle_count(e)[0]),
+    "edge_embeddedness": ("triangles", lambda m, e: m.edge_embeddedness(e)),
+    "k_truss": ("triangles", lambda m, e: m.k_truss(e, 3)[0]),
+    "clique_percolation_k3": ("triangles", lambda m, e: m.clique_percolation_k3(e)),
 }
 
 
