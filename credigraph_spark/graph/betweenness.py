@@ -19,8 +19,11 @@ Algorithm (Brandes 2001, both phases as DataFrame level-sweeps):
   grouped sum per level, reusing the materialized level frames.
 * B(v) = Σ_seeds δ_seed(v) for v ≠ seed.
 
-Every level frame is localCheckpointed (plans stay flat; each is touched
-once forward + once backward). All joins key on (seed, vid) — a seed
+Both phases run on the superstep driver (``graph/loop.py``): each level
+frame and each dependency frame is kept for the backward sweep and the
+result (plans stay flat; each is touched once forward + once backward),
+the seen set is the committed state, and the new level's size rides an
+Observation on its own action, so an empty level costs no extra job. All joins key on (seed, vid) — a seed
 batch of k seeds multiplies state rows by ≤ k but keeps every stage a
 plain hash join + partial agg, so hub skew is absorbed the same way as
 every other superstep in this engine. σ values are exact integers; δ is
@@ -34,8 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges, vertices_from_edges
-
-from credigraph_spark.session import eager_checkpoint
+from credigraph_spark.graph.loop import SuperstepLoop
 
 
 def betweenness_from_seeds(
@@ -55,29 +57,27 @@ def betweenness_from_seeds(
     rel = rel.persist()
     all_verts = vertices_from_edges(rel)
 
-    l0 = (
+    loop = SuperstepLoop(edges.sparkSession, "betweenness", None, max_hops)
+    l0 = loop.setup(
         seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
         .select("seed", F.col("seed").alias("vid"),
                 F.lit(1).cast("long").alias("sigma"))
-        .transform(eager_checkpoint)
     )
     levels = [l0]
     seen = l0.select("seed", "vid")
-    for _ in range(max_hops):
+    for _ in loop:
         cand = (
             levels[-1].join(rel, levels[-1]["vid"] == rel["src"])
             .select("seed", F.col("dst").alias("vid"), "sigma")
         )
-        new = (
+        new, m = loop.keep(loop.observe(
             cand.join(seen, ["seed", "vid"], "left_anti")
-            .groupBy("seed", "vid").agg(F.sum("sigma").alias("sigma"))
-            .transform(eager_checkpoint)
-        )
-        if new.isEmpty():
+            .groupBy("seed", "vid").agg(F.sum("sigma").alias("sigma")),
+            F.count(F.lit(1)).alias("n")))
+        if not m["n"]:
             break
         levels.append(new)
-        seen = seen.unionByName(new.select("seed", "vid")) \
-                   .transform(eager_checkpoint)
+        seen, _ = loop.commit(seen.unionByName(new.select("seed", "vid")))
 
     # backward sweep: delta[h] frames (seed, vid, delta); deepest level
     # has delta = 0 and contributes only its (1 + 0)/sigma ratio upward.
@@ -101,30 +101,29 @@ def betweenness_from_seeds(
             .select("seed", F.col("src").alias("vid"), "ratio")
             .groupBy("seed", "vid").agg(F.sum("ratio").alias("rsum"))
         )
-        d = (
+        d = loop.setup(
             levels[h - 1].join(per_u, ["seed", "vid"])
             .select("seed", "vid",
                     (F.col("sigma") * F.col("rsum")).alias("delta"))
-            .transform(eager_checkpoint)
         )
         deltas[h - 1] = d
         interior = d.where(F.col("vid") != F.col("seed"))
         acc = interior if acc is None else acc.unionByName(interior)
 
     if acc is None:
-        return all_verts.select(
-            "vid", F.lit(0.0).alias("betweenness"))
-    b = acc.groupBy("vid").agg(
-        F.round(F.sum("delta"), round_digits).alias("betweenness"))
-    out = (
-        all_verts.join(b, "vid", "left")
-        .select("vid", F.coalesce("betweenness", F.lit(0.0))
-                .alias("betweenness"))
-    )
-    # materialize before releasing the caches: the returned lazy plan
+        out = all_verts.select("vid", F.lit(0.0).alias("betweenness"))
+    else:
+        b = acc.groupBy("vid").agg(
+            F.round(F.sum("delta"), round_digits).alias("betweenness"))
+        out = (
+            all_verts.join(b, "vid", "left")
+            .select("vid", F.coalesce("betweenness", F.lit(0.0))
+                    .alias("betweenness"))
+        )
+    # materialized before the caches are released: the returned plan
     # reads them, and the caller's first action would otherwise re-run
     # the full pipeline against uncached inputs
-    out = out.transform(eager_checkpoint)
+    out = loop.finish(out)
     rel.unpersist()
     return out
 
@@ -155,8 +154,9 @@ def weighted_betweenness_from_seeds(
     * B(v) = Σ_seeds δ_seed(v), v ≠ seed.
 
     Each round is one hash join + one partial-aggregated sum keyed
-    (seed, vid), localCheckpointed — the same superstep discipline as
-    every iterative operator here."""
+    (seed, vid), committed by the superstep driver — the same superstep
+    discipline as every iterative operator here (σ and δ are two loops;
+    the DAG and the pinned seed rows are the σ loop's setup tables)."""
     from credigraph_spark.graph.sssp import weighted_per_seed_distances
 
     rel = edges.select("src", "dst",
@@ -167,9 +167,10 @@ def weighted_betweenness_from_seeds(
                        "w"))
     rel = (rel.where(F.col("src").isNotNull() & F.col("dst").isNotNull()
                      & (F.col("w") > 0)).persist())
-    d = weighted_per_seed_distances(rel, seeds, max_rounds, "w", True) \
-        .transform(eager_checkpoint)
-    dag = (
+    d = weighted_per_seed_distances(rel, seeds, max_rounds, "w", True)
+    spark = edges.sparkSession
+    sig = SuperstepLoop(spark, "wbetweenness_sigma", None, max_rounds)
+    dag = sig.setup(
         d.select("seed", F.col("vid").alias("src"),
                  F.col("dist").alias("du"))
         .join(rel, "src")
@@ -177,26 +178,25 @@ def weighted_betweenness_from_seeds(
                        F.col("dist").alias("dv")), ["seed", "dst"])
         .where(F.col("du") + F.col("w") == F.col("dv"))
         .select("seed", F.col("src").alias("u"), F.col("dst").alias("v"))
-        .transform(eager_checkpoint)
     )
-    seed_sigma = (
+    seed_sigma = sig.setup(
         seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
         .select("seed", F.col("seed").alias("vid"),
                 F.lit(1).cast("long").alias("sigma"))
-        .transform(eager_checkpoint)
     )
     sigma = seed_sigma
-    for _ in range(max_rounds):
+    for _ in sig:
         prop = (
             dag.join(sigma.select("seed", F.col("vid").alias("u"), "sigma"),
                      ["seed", "u"])
             .groupBy("seed", F.col("v").alias("vid"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        sigma = seed_sigma.unionByName(prop).transform(eager_checkpoint)
+        sigma, _ = sig.commit(seed_sigma.unionByName(prop))
 
+    dl = SuperstepLoop(spark, "wbetweenness_delta", None, max_rounds)
     delta = sigma.select("seed", "vid", F.lit(0.0).alias("delta"))
-    for _ in range(max_rounds):
+    for _ in dl:
         ratios = (
             sigma.join(delta, ["seed", "vid"], "left")
             .select("seed", F.col("vid").alias("v"),
@@ -208,11 +208,10 @@ def weighted_betweenness_from_seeds(
             .groupBy("seed", F.col("u").alias("vid"))
             .agg(F.sum("ratio").alias("rsum"))
         )
-        delta = (
+        delta, _ = dl.commit(
             sigma.join(rsum, ["seed", "vid"])
             .select("seed", "vid",
                     (F.col("sigma") * F.col("rsum")).alias("delta"))
-            .transform(eager_checkpoint)
         )
     b = (
         delta.where(F.col("vid") != F.col("seed"))
@@ -220,14 +219,13 @@ def weighted_betweenness_from_seeds(
         .agg(F.round(F.sum("delta"), round_digits).alias("betweenness"))
     )
     all_verts = vertices_from_edges(rel)
-    out = (
+    # materialized before the loops' tables and the cache are released:
+    # the returned plan reads them
+    out = dl.finish(
         all_verts.join(b, "vid", "left")
         .select("vid", F.coalesce("betweenness", F.lit(0.0))
                 .alias("betweenness"))
     )
-    # materialize before releasing the caches: the returned lazy plan
-    # reads them, and the caller's first action would otherwise re-run
-    # the full pipeline against uncached inputs
-    out = out.transform(eager_checkpoint)
+    sig.finish()
     rel.unpersist()
     return out

@@ -20,23 +20,25 @@ or stay active. After each color run, OUT and still-active vertices
 return to the pool for the next color; vertices uncolored after all
 budgeted runs report color 0.
 
-Scale shape: identical to MIS per round (ONE dst-keyed join of the
-persisted symmetric edge set with the active state + map-side-combinable
-min, winner left-join, semi/anti deactivation, eager localCheckpoint on
-every state feeding two subplans — the Louvain lesson). The active set
-shrinks geometrically within a run AND across colors, so later rounds
-are cheap; the edge set is partitioned by dst exactly once for ALL runs.
+Scale shape: each color runs the MIS module's Luby rounds
+(``mis.luby_rounds``: ONE dst-keyed join of the persisted symmetric edge
+set with the active state + map-side-combinable min, winner left-join,
+semi/anti deactivation) on its own superstep loop; the color classes and
+the returned pool are the colors loop's kept tables and committed state
+(``graph/loop.py``). The active set shrinks geometrically within a run
+AND across colors, so later rounds are cheap; the edge set is
+partitioned by dst exactly once for ALL runs.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
-
-from credigraph_spark.session import eager_checkpoint
-
-_MAX_P = "g"  # every md5 hex string sorts strictly below this
+from credigraph_spark.graph.loop import SuperstepLoop
+from credigraph_spark.graph.mis import luby_rounds
 
 
 def luby_coloring(edges: DataFrame, n_colors: int = 3, rounds: int = 3,
@@ -46,52 +48,22 @@ def luby_coloring(edges: DataFrame, n_colors: int = 3, rounds: int = 3,
     within the budget."""
     und = undirected_simple(edges).repartition(F.col("dst")).persist()
     spark = edges.sparkSession
-    remaining = (und.select(F.col("src").alias("vid")).distinct()
-                 .transform(eager_checkpoint))
-    colored = spark.createDataFrame([], "vid long, color int")
-    for c in range(1, n_colors + 1):
+    colors = SuperstepLoop(spark, "coloring", None, n_colors)
+    remaining, _ = colors.commit(und.select(F.col("src").alias("vid")).distinct())
+    classes = [spark.createDataFrame([], "vid long, color int")]
+    for i in colors:
+        c = i + 1
         pr = F.md5(F.concat_ws(":", F.lit(str(seed)), F.lit(str(c)),
                                F.col("vid").cast("string")))
-        active = remaining.withColumn("p", pr).transform(eager_checkpoint)
-        mis = spark.createDataFrame([], "vid long")
-        carry = spark.createDataFrame([], "vid long")  # OUT this run
-        for _ in range(rounds):
-            if active.isEmpty():
-                break
-            nbr_min = (
-                und.join(active.select(F.col("vid").alias("dst"),
-                                       F.col("p").alias("pn")), "dst")
-                .groupBy("src").agg(F.min("pn").alias("mp"))
-            )
-            winners = (
-                active.join(nbr_min.withColumnRenamed("src", "vid"),
-                            "vid", "left")
-                .where(F.col("p") < F.coalesce("mp", F.lit(_MAX_P)))
-                .select("vid")
-                .transform(eager_checkpoint)
-            )
-            removed = (
-                und.join(winners.withColumnRenamed("vid", "src"), "src")
-                .select(F.col("dst").alias("vid")).distinct()
-                .join(active.select("vid"), "vid", "left_semi")
-                .join(winners, "vid", "left_anti")
-                .transform(eager_checkpoint)
-            )
-            mis = mis.unionByName(winners)
-            carry = carry.unionByName(removed)
-            active = (
-                active.join(winners, "vid", "left_anti")
-                .join(removed, "vid", "left_anti")
-                .transform(eager_checkpoint)
-            )
-        colored = colored.unionByName(
-            mis.select("vid", F.lit(c).cast("int").alias("color")))
+        run = SuperstepLoop(spark, "coloring_luby", None, rounds)
+        mis, carry, active = luby_rounds(run, und, remaining.withColumn("p", pr))
+        classes.append(colors.setup(
+            mis.select("vid", F.lit(c).cast("int").alias("color"))))
         # OUT + still-active vertices return to the pool for color c+1
-        remaining = (
-            carry.unionByName(active.select("vid")).distinct()
-            .transform(eager_checkpoint)
-        )
-    out = colored.unionByName(
-        remaining.select("vid", F.lit(0).cast("int").alias("color")))
+        remaining, _ = colors.commit(
+            carry.unionByName(active.select("vid")).distinct())
+        run.finish()
+    out = colors.finish(reduce(DataFrame.unionByName, classes).unionByName(
+        remaining.select("vid", F.lit(0).cast("int").alias("color"))))
     und.unpersist()
     return out

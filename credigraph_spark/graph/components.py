@@ -33,7 +33,7 @@ label is carried through the plan as a ``prev`` column).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
 from credigraph_spark.session import (BROADCAST_MAX_ROWS, adaptive_partitions,
@@ -90,10 +90,9 @@ def connected_components(
     # subgraphs — the dominant fixed cost of a superstep is per-task
     # overhead — thousands at web scale); everything after it runs under
     # the loop's tuning
-    und_obs = Observation("cc_edges")
-    und0 = loop.setup(undirected_simple(edges)
-                      .observe(und_obs, F.count(F.lit(1)).alias("n")))
-    shuffle_n = loop.partitions = num_partitions or adaptive_partitions(und_obs.get["n"] or 0)
+    und0, m = loop.keep(loop.observe(undirected_simple(edges),
+                                     F.count(F.lit(1)).alias("n")))
+    shuffle_n = loop.partitions = num_partitions or adaptive_partitions(m["n"] or 0)
     with loop:
         und = und0.repartition(shuffle_n, "src").persist()
         if vertices is None:

@@ -13,9 +13,10 @@ Physical design: Bellman-style max-propagation.  Each superstep sends
 ``level(u) + 1`` over every edge, takes the per-receiver MAX (the
 ``aggregate_messages`` primitive — map-side-combinable, hub-safe), and
 folds it into the running level with ``GREATEST``.  The changed-row
-count rides an Observation on the SAME action that materializes the new
-state (eager localCheckpoint — one driver action per superstep, lineage
-truncated every round), so convergence detection costs no extra job.
+count rides an Observation on the superstep driver's commit of the new
+state (``graph/loop.py``: one driver action per superstep, lineage
+truncated every round, the superseded state released), so convergence
+detection costs no extra job.
 Rounds are bounded by the DAG depth; ``max_rounds`` caps the horizon
 for adversarially deep chains (the returned level is then "longest path
 using <= max_rounds edges", exact whenever depth < max_rounds).
@@ -23,12 +24,12 @@ using <= max_rounds edges", exact whenever depth < max_rounds).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+import sys
 
-from credigraph_spark.graph.adjacency import clean_edges
+from pyspark.sql import DataFrame, functions as F
+
+from credigraph_spark.graph.loop import SuperstepLoop
 from credigraph_spark.graph.pregel import aggregate_messages
-
-from credigraph_spark.session import eager_checkpoint
 
 
 def dag_levels(edges: DataFrame, max_rounds: int | None = None,
@@ -51,32 +52,26 @@ def dag_levels(edges: DataFrame, max_rounds: int | None = None,
                      F.greatest("src", "dst").alias("dst"))
     d = e.dropDuplicates(["src", "dst"]).persist()
 
-    lvl = (d.select(F.col("src").alias("vid"))
-           .unionByName(d.select(F.col("dst").alias("vid")))
-           .distinct()
-           .select("vid", F.lit(0).cast("long").alias("l"))
-           .transform(eager_checkpoint))
-
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
+    loop = SuperstepLoop(edges.sparkSession, "dag", None,
+                         sys.maxsize if max_rounds is None else max_rounds)
+    lvl, _ = loop.commit(d.select(F.col("src").alias("vid"))
+                         .unionByName(d.select(F.col("dst").alias("vid")))
+                         .distinct()
+                         .select("vid", F.lit(0).cast("long").alias("l")))
+    for _ in loop:
         msg = aggregate_messages(
             d, lvl, to_dst=F.col("src_l") + 1, agg={"m": F.max},
             attach=("src",), how="inner")
-        obs = Observation()
         joined = (lvl.withColumnRenamed("l", "l_old")
                   .join(msg, "vid", "left")
                   .select("vid", "l_old",
                           F.greatest(F.col("l_old"),
                                      F.coalesce("m", F.lit(0)).cast("long"))
-                          .alias("l"))
-                  .observe(obs, F.sum((F.col("l") != F.col("l_old"))
-                                      .cast("long")).alias("changed")))
-        nxt = joined.select("vid", "l").transform(eager_checkpoint)
-        rounds += 1
-        changed = obs.get["changed"] or 0
-        lvl = nxt
-        if changed == 0:
-            break
-
+                          .alias("l")))
+        lvl, m = loop.commit(loop.observe(
+            joined, F.sum((F.col("l") != F.col("l_old")).cast("long"))
+            .alias("changed")).select("vid", "l"))
+        loop.end_round((m["changed"] or 0) == 0)
+    lvl = loop.finish(lvl)
     d.unpersist()
-    return lvl.select("vid", F.col("l").alias("level")), rounds
+    return lvl.select("vid", F.col("l").alias("level")), loop.it

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import sys
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges
 from credigraph_spark.graph.loop import SuperstepLoop
@@ -201,9 +201,8 @@ def densest_subgraph(edges: DataFrame, eps_tenths: int = 1,
     # the symmetrized edge set is a setup table: the first round's peeled
     # set is a lazy cache over it, which the second round materializes.
     # Its observed row count sizes the peel loop.
-    obs = Observation("densest_edges")
-    und = loop.setup(_symmetric(edges).observe(obs, F.count(F.lit(1)).alias("n")))
-    loop.partitions = adaptive_partitions(obs.get["n"] or 0)
+    und, m = loop.keep(loop.observe(_symmetric(edges), F.count(F.lit(1)).alias("n")))
+    loop.partitions = adaptive_partitions(m["n"] or 0)
     rows = []
     thr = 20 + 2 * eps_tenths
     with loop:

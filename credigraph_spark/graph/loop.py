@@ -6,7 +6,8 @@ rest, so the rules below hold in one place instead of one copy per loop:
 * **tuning**: ``with loop:`` runs the loop under ``session.loop_tuning``
   at the loop's partition count (AQE paused, every superstep exchange
   sized to the measured data). The operator enters it where its loop
-  setup begins; what runs before stays on the session's settings.
+  setup begins; what runs before stays on the session's settings, and a
+  loop that is never entered runs on the session's settings throughout.
 * **exactly ONE driver action per superstep**: ``commit(plan)`` eager-
   localCheckpoints the step's plan. Every per-round scalar the loop needs
   (changed count, L1 delta, dangling mass, frontier size) rides an
@@ -28,19 +29,25 @@ rest, so the rules below hold in one place instead of one copy per loop:
 * **setup tables**: a table the rounds or the result read but no round
   replaces (a vertex table, a static coefficient vector, seed rows) is
   materialized with ``setup`` and released by ``finish``, after the
-  result that may read it is materialized. A result that IS a table the
-  loop holds (its state, a part made with ``checkpoint``, a setup table)
-  is returned as is: ``finish(loop.state)`` frees everything else and
-  keeps the state, so a result that is a projection of the state stays
-  lazy. ``finish()`` with no plan only releases, for a result that
-  reads no loop table.
+  result that may read it is materialized. Per-round tables that the
+  result unions (walk steps, MIS winners, betweenness levels) are kept
+  with ``setup`` too. ``keep`` is ``setup`` that also returns the values
+  observed on the table, so a round with nothing new says so on that
+  action and no ``isEmpty``/``take(1)`` job runs. A result that IS a
+  table the loop holds (its state, a part made with ``checkpoint``, a
+  setup table) is returned as is: ``finish(loop.state)`` frees
+  everything else and keeps the state, so a result that is a projection
+  of the state stays lazy. ``finish()`` with no plan only releases, for
+  a result that reads no loop table.
 * **nesting**: one ``SuperstepLoop`` per fixpoint. An inner fixpoint
   (scc's trim, coloring and backward floods inside its phase loop) is
   its own loop; ``loop_tuning`` restores the settings it found, so the
   inner ``with`` hands the outer loop its tuning back. An inner loop has
   no ``finish``: it releases each superseded state at the end of its
   round and keeps its final one, which the outer loop adopts with
-  ``cache`` and releases with its own round.
+  ``cache`` and releases with its own round. An inner loop that keeps
+  per-round tables (coloring's Luby rounds per color) calls ``finish()``
+  once the outer loop has materialized what it read from them.
 * **the CheckpointStore protocol**: ``converged_state`` is the resume
   short-circuit (a run already marked converged returns its converged
   state verbatim; an extra superstep would drift the result by < tol and
@@ -105,6 +112,7 @@ class SuperstepLoop:
         self._done: list[DataFrame] = []     # superseded, freed at round end
         self._committed = False              # this round has committed
         self._obs: list[Observation] = []
+        self._n_obs = 0
         self._tuning = None
         self._t0 = 0.0
 
@@ -153,8 +161,9 @@ class SuperstepLoop:
 
     def observe(self, df: DataFrame, *exprs) -> DataFrame:
         """``df`` observing ``exprs``; their values come back from the
-        next ``commit``."""
-        obs = Observation(f"{self.algo}_{self.it}_{len(self._obs)}")
+        next ``commit`` or ``keep``."""
+        self._n_obs += 1
+        obs = Observation(f"{self.algo}_{self.it}_{self._n_obs}")
         self._obs.append(obs)
         return df.observe(obs, *exprs)
 
@@ -176,6 +185,13 @@ class SuperstepLoop:
         self._setup.append(out)
         return out
 
+    def keep(self, plan: DataFrame) -> tuple[DataFrame, dict]:
+        """``setup`` that also returns every value observed since the last
+        ``commit`` or ``keep``: a setup table's measured size, or the
+        count of a per-round table that the result reads (a walk step, a
+        BFS level, a round's matches), the round's "nothing new" test."""
+        return self.setup(plan), self._observed()
+
     def checkpoint(self, plan: DataFrame) -> DataFrame:
         """Materialize a part of the NEXT state that the round's ``commit``
         plan reads together with the current state; it is released with
@@ -188,16 +204,21 @@ class SuperstepLoop:
         """The round's one action: materialize the new state; the
         superseded state and the scratch caches are released when the
         round ends. Returns the new state and every value observed since
-        the last commit."""
+        the last ``commit`` or ``keep``."""
         new = eager_checkpoint(plan)
-        metrics: dict = {}
-        for obs in self._obs:
-            metrics.update(obs.get)
+        metrics = self._observed()
         self._done += self._held + self._scratch
-        self._held, self._next, self._scratch, self._obs = self._next + [new], [], [], []
+        self._held, self._next, self._scratch = self._next + [new], [], []
         self._committed = True
         self.state = new
         return new, metrics
+
+    def _observed(self) -> dict:
+        metrics: dict = {}
+        for obs in self._obs:
+            metrics.update(obs.get)
+        self._obs = []
+        return metrics
 
     def end_round(self, converged: bool, write: DataFrame | None = None,
                   **metrics) -> None:

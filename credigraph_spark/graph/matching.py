@@ -24,7 +24,7 @@ round's matched pairs are setup tables that the result unions, held until
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
@@ -57,16 +57,15 @@ def greedy_matching(edges: DataFrame, rounds: int = 3) -> DataFrame:
             other = prop.select(F.col("src").alias("b_src"),
                                 F.col("prop").alias("b_prop"))
             # the match count is needed before the round's commit (it
-            # sizes the retire set), so it rides its own Observation
-            obs_m = Observation(f"match_matched_{r}")
-            matched = loop.setup(
+            # sizes the retire set), so it rides the matches' own action
+            matched, mm = loop.keep(loop.observe(
                 prop.join(other,
                           (F.col("b_src") == F.col("prop"))
                           & (F.col("b_prop") == F.col("src")))
                 .where(F.col("src") < F.col("prop"))
-                .select(F.col("src").alias("u"), F.col("prop").alias("v"))
-                .observe(obs_m, F.count(F.lit(1)).alias("n")))
-            n_matched = obs_m.get["n"] or 0
+                .select(F.col("src").alias("u"), F.col("prop").alias("v")),
+                F.count(F.lit(1)).alias("n")))
+            n_matched = mm["n"] or 0
             if n_matched == 0:
                 break
             out = matched if out is None else out.unionByName(matched)

@@ -24,21 +24,66 @@ Scale shape per round:
 * winner selection is a |active|-row left join (no active neighbour →
   wins);
 * deactivation is one semi/anti-join pair on the winner's neighbourhood;
-* per-round state is eager-localCheckpointed (feeds two subplans next
-  round — the Louvain/LPA lesson).
+* the rounds run on the superstep driver (``graph/loop.py``): each
+  round's winners and removed vertices are kept for the result, the
+  active set is the committed state, and its size rides an Observation
+  on that commit, so the "nothing left" test costs no job.
+
+``luby_rounds`` is the one copy of the round: ``luby_coloring`` runs it
+once per color.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import undirected_simple
-
-from credigraph_spark.session import eager_checkpoint
+from credigraph_spark.graph.loop import SuperstepLoop
 
 
 # any md5 hex string sorts strictly below this sentinel (bytewise compare)
 _MAX_P = "g"
+
+
+def luby_rounds(loop: SuperstepLoop, und: DataFrame,
+                active: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Luby rounds on ``loop`` from the (vid, p) ``active`` plan until no
+    vertex is active or the loop's budget is spent; ``und`` is the
+    symmetric edge set partitioned by dst. Returns (winners, removed,
+    active): the union of every round's winners and of every round's
+    removed neighbours (both held by ``loop`` until its ``finish``) and
+    the final active set (the loop's state)."""
+    empty = und.sparkSession.createDataFrame([], "vid long")
+    winners, removed = [empty], [empty]
+    active, m = loop.commit(loop.observe(active, F.count(F.lit(1)).alias("n")))
+    for _ in loop:
+        if not m["n"]:
+            break
+        nbr_min = (
+            und.join(active.select(F.col("vid").alias("dst"),
+                                   F.col("p").alias("pn")), "dst")
+            .groupBy("src").agg(F.min("pn").alias("mp"))
+        )
+        win = loop.setup(
+            active.join(nbr_min.withColumnRenamed("src", "vid"),
+                        "vid", "left")
+            .where(F.col("p") < F.coalesce("mp", F.lit(_MAX_P)))
+            .select("vid"))
+        gone = loop.setup(
+            und.join(win.withColumnRenamed("vid", "src"), "src")
+            .select(F.col("dst").alias("vid")).distinct()
+            .join(active.select("vid"), "vid", "left_semi")
+            .join(win, "vid", "left_anti"))
+        winners.append(win)
+        removed.append(gone)
+        active, m = loop.commit(loop.observe(
+            active.join(win, "vid", "left_anti")
+            .join(gone, "vid", "left_anti"),
+            F.count(F.lit(1)).alias("n")))
+    return (reduce(DataFrame.unionByName, winners),
+            reduce(DataFrame.unionByName, removed), active)
 
 
 def maximal_independent_set(edges: DataFrame, rounds: int = 3,
@@ -51,49 +96,13 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 3,
     und = undirected_simple(edges).repartition(F.col("dst")).persist()
     pr = F.md5(F.concat_ws(":", F.lit(str(seed)),
                            F.col("vid").cast("string")))
-    active = (und.select(F.col("src").alias("vid")).distinct()
-              .withColumn("p", pr)
-              .transform(eager_checkpoint))
-    spark = edges.sparkSession
-    mis = spark.createDataFrame([], "vid long")
-    out = spark.createDataFrame([], "vid long")
-    done = 0
-    for _ in range(rounds):
-        if active.isEmpty():
-            break
-        done += 1
-        nbr_min = (
-            und.join(active.select(F.col("vid").alias("dst"),
-                                   F.col("p").alias("pn")), "dst")
-            .groupBy("src").agg(F.min("pn").alias("mp"))
-        )
-        winners = (
-            active.join(nbr_min.withColumnRenamed("src", "vid"),
-                        "vid", "left")
-            .where(F.col("p") < F.coalesce("mp", F.lit(_MAX_P)))
-            .select("vid")
-            .transform(eager_checkpoint)
-        )
-        removed = (
-            und.join(winners.withColumnRenamed("vid", "src"), "src")
-            .select(F.col("dst").alias("vid")).distinct()
-            .join(active.select("vid"), "vid", "left_semi")
-            .join(winners, "vid", "left_anti")
-            .transform(eager_checkpoint)
-        )
-        # accumulators are unions of already-checkpointed frames and are
-        # only read once at the end — no checkpoint job needed
-        mis = mis.unionByName(winners)
-        out = out.unionByName(removed)
-        active = (
-            active.join(winners, "vid", "left_anti")
-            .join(removed, "vid", "left_anti")
-            .transform(eager_checkpoint)
-        )
-    result = (
+    loop = SuperstepLoop(edges.sparkSession, "mis", None, rounds)
+    mis, out, active = luby_rounds(
+        loop, und, und.select(F.col("src").alias("vid")).distinct()
+        .withColumn("p", pr))
+    result = loop.finish(
         mis.select("vid", F.lit("mis").alias("state"))
         .unionByName(out.select("vid", F.lit("out").alias("state")))
-        .unionByName(active.select("vid", F.lit("active").alias("state")))
-    )
+        .unionByName(active.select("vid", F.lit("active").alias("state"))))
     und.unpersist()
-    return result, done
+    return result, loop.it

@@ -18,19 +18,23 @@ round is a pair of partial-aggregatable reductions:
 Scale shape per round: one relabel join (edges ⋈ comp ×2, co-partitioned
 on the endpoint key), one struct-min groupBy (map-side combinable — hub
 components reduce partially), one distinct, then a CC run over a table
-bounded by #components. State (comp) is localCheckpointed each round —
-the Louvain lesson: loop state feeding >1 downstream subplan must
-truncate lineage eagerly. Weights stay integers end-to-end, so the
-selected forest is oracle-exact.
+bounded by #components. The rounds run on the superstep driver
+(``graph/loop.py``): the component map is the committed state (loop
+state feeding >1 downstream subplan must truncate lineage eagerly — the
+Louvain lesson), each round's picked edges are kept for the forest, and
+their count rides an Observation on that action, so an empty pick costs
+no extra job. Weights stay integers end-to-end, so the selected forest
+is oracle-exact.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.graph.adjacency import vertices_from_edges
-
-from credigraph_spark.session import eager_checkpoint
+from credigraph_spark.graph.loop import SuperstepLoop
 
 
 def canonical_weighted_edges(edges: DataFrame,
@@ -61,8 +65,9 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
     verts = vertices_from_edges(
         canon.select(F.col("u").alias("src"), F.col("v").alias("dst")))
     comp = verts.select("vid", F.col("vid").alias("comp"))
-    forest = None
-    for rnd in range(max_rounds):
+    loop = SuperstepLoop(edges.sparkSession, "msf", None, max_rounds)
+    picks = []
+    for rnd in loop:
         cu = comp.select(F.col("vid").alias("u"), F.col("comp").alias("cu"))
         cv = comp.select(F.col("vid").alias("v"), F.col("comp").alias("cv"))
         ce = (canon.join(cu, "u").join(cv, "v")
@@ -72,32 +77,34 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
         inc = ce.select(F.col("cu").alias("c"), "w", "u", "v", "cv").unionByName(
             ce.select(F.col("cv").alias("c"), "w", "u", "v",
                       F.col("cu").alias("cv")))
-        sel = (
+        sel, m = loop.keep(loop.observe(
             inc.groupBy("c")
             .agg(F.min(F.struct("w", "u", "v")).alias("m"))
             .select(F.col("m.u").alias("u"), F.col("m.v").alias("v"),
                     F.col("m.w").alias("w"))
-            .distinct()
-            .transform(eager_checkpoint)
-        )
-        if not sel.take(1):
+            .distinct(),
+            F.count(F.lit(1)).alias("n")))
+        if not m["n"]:
             break
-        forest = sel if forest is None else forest.unionByName(sel).distinct()
+        picks.append(sel)
         if rnd < max_rounds - 1:
             # contract: hash-min CC over the component-level picked edges
             sel_ce = (sel.join(cu, "u").join(cv, "v")
                       .select(F.col("cu").alias("src"),
                               F.col("cv").alias("dst")))
             labels, _ = connected_components(sel_ce)
-            comp = (
+            # the inner loop's result, released when this round ends
+            labels = loop.cache(labels)
+            comp, _ = loop.commit(
                 comp.join(labels.withColumnRenamed("vid", "comp"),
                           "comp", "left")
                 .select("vid",
                         F.coalesce("component", F.col("comp")).alias("comp"))
-                .transform(eager_checkpoint)
             )
+    if not picks:
+        loop.finish()
+        canon.unpersist()
+        return edges.sparkSession.createDataFrame([], "u long, v long, w long")
+    forest = loop.finish(reduce(lambda a, b: a.unionByName(b).distinct(), picks))
     canon.unpersist()
-    if forest is None:
-        schema = "u long, v long, w long"
-        return edges.sparkSession.createDataFrame([], schema)
     return forest

@@ -1,4 +1,4 @@
-"""n-hop subnetwork extraction (BFS frontier expansion).
+"""n-hop subnetwork extraction and hop-bounded BFS distances.
 
 Reference: tgrag/construct_graph_scripts/subnetwork_construct.py:19-72 —
 pandas frontier loop over the undirected incidence relation, run
@@ -6,47 +6,74 @@ pandas frontier loop over the undirected incidence relation, run
 test/test_construct/test_subnetwork_construction.py:38-95 (4-node path,
 seed {1}: hop0 -> {1,2}, hop1 -> {1,2,3}, hop2 -> {1,2,3}).
 
-Spark-first: per round, two semi-join-shaped joins (edges incident to the
-frontier via src and via dst), union, distinct; the seen set is a
-DataFrame, dedup via left_anti. Same loop skeleton as CC/LPA supersteps.
+Spark-first: every hop-bounded reach in the engine (the subnetwork, BFS
+distances from a seed set or from each seed, the live-edge spread of the
+influence operators) is one keyed frontier BFS, ``frontier_bfs``, on the
+superstep driver (``graph/loop.py``): per round one join of the frontier
+with the arcs, a distinct and an anti join against the seen set, and ONE
+commit of the grown seen set.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from credigraph_spark.session import eager_checkpoint
+from credigraph_spark.graph.loop import SuperstepLoop
+
+
+def frontier_bfs(loop: SuperstepLoop, arcs: DataFrame, seeds: DataFrame) -> DataFrame:
+    """The keyed frontier BFS: ``seeds`` holds distinct (*keys, vid) rows
+    (the key is a seed, a simulation or a (sim, cand) pair; none for one
+    shared source) and ``arcs`` (*arc_keys, vid, dst) rows, its keys a
+    subset of the seeds' (a simulation's live edges). Round h of ``loop``
+    joins the pairs at distance h with their arcs and adds the pairs not
+    seen yet at distance h + 1: BFS discovers each pair at its minimum
+    distance, so no min-agg is needed.
+
+    The state (*keys, vid, dist) is the seen set, committed once per
+    round; the new-pair count rides an Observation on that commit and
+    the loop stops once a round finds none. Returns the final state,
+    held by ``loop`` until its ``finish``."""
+    keys = [c for c in seeds.columns if c != "vid"]
+    on = [c for c in arcs.columns if c != "dst"]
+    state, _ = loop.commit(seeds.select(*keys, "vid", F.lit(0).alias("dist")))
+    for h in loop:
+        new = (
+            state.where(F.col("dist") == h).select(*keys, "vid")
+            .join(arcs, on)
+            .select(*keys, F.col("dst").alias("vid")).distinct()
+            .join(state.select(*keys, "vid"), [*keys, "vid"], "left_anti")
+            .select(*keys, "vid", F.lit(h + 1).alias("dist"))
+        )
+        state, m = loop.commit(state.unionByName(
+            loop.observe(new, F.count(F.lit(1)).alias("n"))))
+        loop.end_round((m["n"] or 0) == 0)
+    return state
+
+
+def _arcs(edges: DataFrame, directed: bool) -> DataFrame:
+    """(vid, dst) arcs of ``edges``, reversed copies added when undirected."""
+    arcs = edges.select(F.col("src").alias("vid"), "dst")
+    if directed:
+        return arcs
+    return arcs.unionByName(edges.select(F.col("dst").alias("vid"),
+                                         F.col("src").alias("dst")))
+
+
+def _sources(seeds: DataFrame) -> DataFrame:
+    return seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct()
 
 
 def n_hop_subgraph(edges: DataFrame, seeds: DataFrame, n_hop: int) -> tuple[DataFrame, DataFrame]:
     """Returns (vertices(vid), sub_edges(src,dst)).
 
     ``seeds``: single-column DataFrame of seed vids. Expansion runs
-    ``n_hop + 1`` rounds (reference semantics: hop 0 already includes the
-    seeds' direct neighbors, subnetwork_construct.py:44-60)."""
-    # localCheckpoint (not persist) for per-round state: materialized once,
-    # plan truncated each round (the union chain would otherwise grow), and
-    # blocks are GC-tied to this call — nothing stays cached across calls
-    # in a long-lived session.
-    seen = (
-        seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct()
-        .transform(eager_checkpoint)
-    )
-    frontier = seen
-    for _ in range(n_hop + 1):
-        inc_s = edges.join(frontier.withColumnRenamed("vid", "src"), "src", "left_semi")
-        inc_t = edges.join(frontier.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-        incident = inc_s.select("src", "dst").unionByName(inc_t.select("src", "dst"))
-        endpoints = (
-            incident.select(F.col("src").alias("vid"))
-            .unionByName(incident.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-        new = endpoints.join(seen, "vid", "left_anti").transform(eager_checkpoint)
-        if new.isEmpty():
-            break
-        seen = seen.unionByName(new).distinct().transform(eager_checkpoint)
-        frontier = new
+    ``n_hop + 1`` rounds over the undirected incidence relation
+    (reference semantics: hop 0 already includes the seeds' direct
+    neighbors, subnetwork_construct.py:44-60)."""
+    loop = SuperstepLoop(edges.sparkSession, "nhop", None, n_hop + 1)
+    seen = loop.finish(frontier_bfs(loop, _arcs(edges, False), _sources(seeds))) \
+        .select("vid")
     sub_edges = (
         edges.join(seen.withColumnRenamed("vid", "src"), "src", "left_semi")
         .join(seen.withColumnRenamed("vid", "dst"), "dst", "left_semi")
@@ -58,40 +85,11 @@ def n_hop_subgraph(edges: DataFrame, seeds: DataFrame, n_hop: int) -> tuple[Data
 def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int,
                   directed: bool = True) -> DataFrame:
     """(vid, dist) — minimum hop count from the seed set, up to
-    ``max_hops``; unreachable vertices are absent. Same frontier-loop
-    skeleton as ``n_hop_subgraph`` (one semi-join + anti-join per round,
-    localCheckpoint truncates lineage), but tracks the discovery round:
-    BFS discovers each vertex at its minimum distance, so no min-agg is
-    ever needed. Exactly oracle-checkable with a depth-bounded recursive
-    CTE (min over all ≤max_hops paths)."""
-    seen = (
-        seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct()
-        .select("vid", F.lit(0).alias("dist"))
-        .transform(eager_checkpoint)
-    )
-    frontier = seen.select("vid")
-    for h in range(1, max_hops + 1):
-        nbrs = (
-            edges.join(frontier.withColumnRenamed("vid", "src"), "src", "left_semi")
-            .select(F.col("dst").alias("vid"))
-        )
-        if not directed:
-            rev = (
-                edges.join(frontier.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-                .select(F.col("src").alias("vid"))
-            )
-            nbrs = nbrs.unionByName(rev)
-        new = (
-            nbrs.distinct()
-            .join(seen.select("vid"), "vid", "left_anti")
-            .select("vid", F.lit(h).alias("dist"))
-            .transform(eager_checkpoint)
-        )
-        if new.isEmpty():
-            break
-        seen = seen.unionByName(new).transform(eager_checkpoint)
-        frontier = new.select("vid")
-    return seen
+    ``max_hops``; unreachable vertices are absent. Exactly
+    oracle-checkable with a depth-bounded recursive CTE (min over all
+    ≤max_hops paths)."""
+    loop = SuperstepLoop(edges.sparkSession, "bfs", None, max_hops)
+    return loop.finish(frontier_bfs(loop, _arcs(edges, directed), _sources(seeds)))
 
 
 def per_seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int,
@@ -99,35 +97,11 @@ def per_seed_distances(edges: DataFrame, seeds: DataFrame, max_hops: int,
     """(seed, vid, dist) — minimum hop count from EACH seed separately,
     up to ``max_hops`` (bfs_distances collapses the seed set to one
     source; this keeps the seed dimension, the building block for
-    per-source centralities). Same frontier skeleton, state keyed by
-    (seed, vid): BFS discovers each pair at its minimum distance, so no
-    min-agg is needed. Seed rows themselves appear with dist = 0."""
-    rel = edges.select("src", "dst")
-    if not directed:
-        rel = rel.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    seen = (
-        seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
-        .select("seed", F.col("seed").alias("vid"), F.lit(0).alias("dist"))
-        .transform(eager_checkpoint)
-    )
-    frontier = seen.select("seed", "vid")
-    for h in range(1, max_hops + 1):
-        nbrs = (
-            frontier.join(rel.withColumnRenamed("src", "vid"), "vid")
-            .select("seed", F.col("dst").alias("vid"))
-            .distinct()
-        )
-        new = (
-            nbrs.join(seen.select("seed", "vid"), ["seed", "vid"], "left_anti")
-            .select("seed", "vid", F.lit(h).alias("dist"))
-            .transform(eager_checkpoint)
-        )
-        if new.isEmpty():
-            break
-        seen = seen.unionByName(new).transform(eager_checkpoint)
-        frontier = new.select("seed", "vid")
-    return seen
+    per-source centralities): the frontier BFS keyed by the seed. Seed
+    rows themselves appear with dist = 0."""
+    loop = SuperstepLoop(edges.sparkSession, "per_seed_bfs", None, max_hops)
+    sources = _sources(seeds).select(F.col("vid").alias("seed"), "vid")
+    return loop.finish(frontier_bfs(loop, _arcs(edges, directed), sources))
 
 
 def closeness_centrality(edges: DataFrame, seeds: DataFrame, max_hops: int,
@@ -308,8 +282,9 @@ def truncated_hitting_time(edges: DataFrame, targets: DataFrame,
     Scale shape: identical to a PageRank superstep — one
     contribution-AVG shuffle per round over the cleaned edge set (the
     mean over out-neighbors IS the P h matvec for uniform P), state
-    re-derived from the localCheckpointed vertex frame each round; no
-    driver action inside the loop.
+    re-derived from the vertex table (a setup table of the superstep
+    driver) and committed once per round; no other driver action inside
+    the loop.
     """
     from credigraph_spark.graph.adjacency import clean_edges
 
@@ -318,22 +293,23 @@ def truncated_hitting_time(edges: DataFrame, targets: DataFrame,
              .unionByName(e.select(F.col("dst").alias("vid")))
              .distinct())
     cap = float(rounds)
-    base = (verts.join(targets.select(F.col("vid")).distinct()
-                       .withColumn("_t", F.lit(1)), "vid", "left")
-            .transform(eager_checkpoint))
+    loop = SuperstepLoop(edges.sparkSession, "hitting_time", None, rounds)
+    base = loop.setup(verts.join(targets.select(F.col("vid")).distinct()
+                                 .withColumn("_t", F.lit(1)), "vid", "left"))
     h = base.select("vid", F.when(F.col("_t") == 1, 0.0)
                     .otherwise(F.lit(cap)).alias("h"))
-    for _ in range(rounds):
+    for _ in loop:
         nb = (e.join(h.select(F.col("vid").alias("dst"), "h"), "dst")
               .groupBy(F.col("src").alias("vid"))
               .agg(F.avg("h").alias("nh")))
-        h = (base.join(nb, "vid", "left")
-             .select("vid",
-                     F.when(F.col("_t") == 1, 0.0)
-                     .otherwise(F.least(
-                         F.lit(cap),
-                         1.0 + F.coalesce("nh", F.lit(cap))))
-                     .alias("h"))
-             .transform(eager_checkpoint))
+        h, _ = loop.commit(
+            base.join(nb, "vid", "left")
+            .select("vid",
+                    F.when(F.col("_t") == 1, 0.0)
+                    .otherwise(F.least(
+                        F.lit(cap),
+                        1.0 + F.coalesce("nh", F.lit(cap))))
+                    .alias("h")))
+    h = loop.finish(h)
     e.unpersist()
     return h.select("vid", F.round("h", round_digits).alias("h"))

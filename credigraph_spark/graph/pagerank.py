@@ -56,11 +56,10 @@ Spark-first physical design (NOT a port of the per-node Python loop):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from credigraph_spark.checkpoint import CheckpointStore
-from credigraph_spark.session import (BROADCAST_MAX_ROWS, adaptive_partitions,
-                                      eager_checkpoint)
+from credigraph_spark.session import BROADCAST_MAX_ROWS, adaptive_partitions
 from credigraph_spark.graph.adjacency import clean_edges
 from credigraph_spark.graph.loop import SuperstepLoop
 
@@ -134,19 +133,16 @@ def pagerank(
         rows = rows.unionByName(vertices.select(
             F.col(vertices.columns[0]).alias("vid"), no_w.alias("w"), F.lit(0).alias("d")))
     recv, dangling = F.col("in_deg") > 0, F.col("out_deg").isNull()
-    setup_obs = Observation("pr_setup")
     info: dict = {}
     loop = SuperstepLoop(spark, "pagerank", None, max_iter, ckpt=ckpt,
                          checkpoint_every=checkpoint_every, resume=resume, info=info)
-    vt = loop.setup(
-        rows.groupBy("vid").agg(F.sum("w").alias("out_deg"), F.sum("d").alias("in_deg"))
-        .observe(setup_obs,
-                 F.sum("in_deg").alias("n_edges"),
-                 F.count(F.when(recv, 1)).alias("n_recv"),
-                 F.count(F.when(recv & dangling, 1)).alias("n_recv_dangling"),
-                 F.count(F.when(~recv, 1)).alias("m"),
-                 F.count(F.when(~recv & dangling, 1)).alias("m_dangling")))
-    stats = setup_obs.get
+    vt, stats = loop.keep(loop.observe(
+        rows.groupBy("vid").agg(F.sum("w").alias("out_deg"), F.sum("d").alias("in_deg")),
+        F.sum("in_deg").alias("n_edges"),
+        F.count(F.when(recv, 1)).alias("n_recv"),
+        F.count(F.when(recv & dangling, 1)).alias("n_recv_dangling"),
+        F.count(F.when(~recv, 1)).alias("m"),
+        F.count(F.when(~recv & dangling, 1)).alias("m_dangling")))
     n_recv, n_recv_dangling = stats["n_recv"], stats["n_recv_dangling"]
     # every non-receiver from the edge list contributes (has out-edges), so
     # only user-supplied isolated vertices are non-receiver AND dangling.
@@ -224,17 +220,15 @@ def pagerank(
                 else (F.lit(1.0) / F.col("out_deg"))
             # the static dangling scalar rides the sv checkpoint's own job
             # (which also fills the edges_deg cache) as an Observation
-            sv_obs = Observation("pr_static_dangling")
-            sv = loop.setup(
+            sv, sv_stats = loop.keep(loop.observe(
                 edges_deg.where(~F.col("src_recv"))
                 .groupBy("dst")
                 .agg(F.sum(coef_expr).alias("coef"),
                      F.max("dst_dangling").alias("dst_dangling"))
-                .repartition(shuffle_n, "dst")
-                .observe(sv_obs,
-                         F.sum(F.when(F.col("dst_dangling"), F.col("coef"))
-                               .otherwise(0.0)).alias("sd")))
-            sd_static = sv_obs.get["sd"] or 0.0
+                .repartition(shuffle_n, "dst"),
+                F.sum(F.when(F.col("dst_dangling"), F.col("coef"))
+                      .otherwise(0.0)).alias("sd")))
+            sd_static = sv_stats["sd"] or 0.0
             dyn = edges_deg.where(F.col("src_recv"))
 
         # -- initial / resumed state --------------------------------------
@@ -374,9 +368,10 @@ def opic(edges: DataFrame, rounds: int = 3) -> DataFrame:
 
     Scale shape: identical to a PageRank superstep — one
     contribution-sum shuffle per round over the cleaned edge set, the
-    dangling total as a 1-row aggregate, per-round eager
-    localCheckpoint for lineage; no damping term, no convergence test
-    (OPIC is an anytime algorithm — rounds are the budget).
+    dangling total as a 1-row aggregate, one commit per round on the
+    superstep driver; no damping term, no convergence test (OPIC is an
+    anytime algorithm — rounds are the budget). A graph with no cleaned
+    edge gives an empty result.
     """
     e = clean_edges(edges).persist()
     verts = (e.select(F.col("src").alias("vid"))
@@ -385,10 +380,16 @@ def opic(edges: DataFrame, rounds: int = 3) -> DataFrame:
     n = verts.count()
     deg = e.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").alias("outdeg"))
-    state = verts.select(
+    if n == 0:  # no cleaned edge (only self-loops/nulls): nothing to rank
+        e.unpersist()
+        verts.unpersist()
+        return verts.select("vid", F.lit(0.0).alias("history"),
+                            F.lit(0.0).alias("cash"))
+    loop = SuperstepLoop(edges.sparkSession, "opic", None, rounds)
+    state, _ = loop.commit(verts.select(
         "vid", F.lit(1.0 / n).alias("cash"),
-        F.lit(0.0).alias("history")).transform(eager_checkpoint)
-    for _ in range(rounds):
+        F.lit(0.0).alias("history")))
+    for _ in loop:
         st = state.join(deg, "vid", "left")
         dang = (st.where(F.col("outdeg").isNull())
                 .agg(F.coalesce(F.sum("cash"), F.lit(0.0)).alias("d")))
@@ -398,13 +399,14 @@ def opic(edges: DataFrame, rounds: int = 3) -> DataFrame:
                                   .alias("share")), "src")
                    .groupBy(F.col("dst").alias("vid"))
                    .agg(F.sum("share").alias("inflow")))
-        state = (state.join(contrib, "vid", "left").crossJoin(dang)
-                 .select("vid",
-                         (F.coalesce("inflow", F.lit(0.0))
-                          + F.col("d") / n).alias("cash"),
-                         (F.col("history") + F.col("cash"))
-                         .alias("history"))
-                 .transform(eager_checkpoint))
+        state, _ = loop.commit(
+            state.join(contrib, "vid", "left").crossJoin(dang)
+            .select("vid",
+                    (F.coalesce("inflow", F.lit(0.0))
+                     + F.col("d") / n).alias("cash"),
+                    (F.col("history") + F.col("cash"))
+                    .alias("history")))
+    state = loop.finish(state)
     e.unpersist()
     verts.unpersist()
     return state.select("vid", F.round("history", 8).alias("history"),

@@ -143,9 +143,9 @@ def ppr_batch(edges: DataFrame, seeds: DataFrame, damping: float = 0.85,
     Per iteration: one contribution join (state ⋈ cached edges on vid =
     src), one per-seed dangling aggregation (a (seed, vid=seed) restart
     row — per-seed scalars cannot ride a single Observation), the tiny
-    teleport rows, and ONE map-side-combinable groupBy(seed, vid) sum;
-    the eager localCheckpoint is the one action. Sparse: pairs the walk
-    never reaches are absent (exactly rank 0)."""
+    teleport rows, and ONE map-side-combinable groupBy(seed, vid) sum,
+    committed by the superstep driver as the round's one action. Sparse:
+    pairs the walk never reaches are absent (exactly rank 0)."""
     spark = edges.sparkSession
     shuffle_n = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions"))
@@ -157,12 +157,12 @@ def ppr_batch(edges: DataFrame, seeds: DataFrame, damping: float = 0.85,
         .persist()
     )
     ed.count()
-    s = (seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
-         .transform(eager_checkpoint))
-    state = s.select("seed", F.col("seed").alias("vid"),
-                     F.lit(1.0).alias("rank")).transform(eager_checkpoint)
+    loop = SuperstepLoop(spark, "ppr_batch", None, max_iter)
+    s = loop.setup(seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct())
+    state, _ = loop.commit(s.select("seed", F.col("seed").alias("vid"),
+                                    F.lit(1.0).alias("rank")))
     d = damping
-    for _ in range(max_iter):
+    for _ in loop:
         contribs = (
             ed.join(state.withColumnRenamed("vid", "src"), "src")
             .select("seed", F.col("dst").alias("vid"),
@@ -178,14 +178,13 @@ def ppr_batch(edges: DataFrame, seeds: DataFrame, damping: float = 0.85,
         )
         teleport = s.select("seed", F.col("seed").alias("vid"),
                             F.lit(1.0 - d).alias("c"))
-        state = (
+        state, _ = loop.commit(
             contribs.unionByName(dang_rows).unionByName(teleport)
             .groupBy("seed", "vid")
             .agg(F.sum("c").alias("rank"))
-            .transform(eager_checkpoint)
         )
     ed.unpersist()
-    return state
+    return loop.finish(state)
 
 
 def ppr_sweep_cut(edges: DataFrame, seeds: DataFrame,
@@ -297,13 +296,14 @@ def heat_kernel_scores(edges: DataFrame, seeds: DataFrame, t: float = 3.0,
 
     The Taylor coefficients are driver-side Python float literals, so
     the oracle can embed the IDENTICAL doubles — no transcendental is
-    evaluated inside either engine. Loop shape = the katz/PPR superstep:
-    one walk join + partial-agg sum per term, an accumulator merged by
-    vid, eager localCheckpoint per term (lineage + single
-    materialization), zero per-term driver actions after setup."""
+    evaluated inside either engine. Loop shape = the katz/PPR superstep
+    on the superstep driver: one walk join + partial-agg sum per term
+    (the next walk vector, a part of the loop state) and the accumulator
+    merged by vid (the round's commit); zero per-term driver actions
+    after setup. An empty seed set gives an empty result."""
     import math
 
-    spark = edges.sparkSession  # noqa: F841 (parity with siblings)
+    spark = edges.sparkSession
     e = (edges.select("src", "dst")
          .where(F.col("src").isNotNull() & F.col("dst").isNotNull()
                 & (F.col("src") != F.col("dst")))
@@ -317,19 +317,23 @@ def heat_kernel_scores(edges: DataFrame, seeds: DataFrame, t: float = 3.0,
              for k in range(n_terms + 1)]
     s = (seeds.select(F.col(seeds.columns[0]).alias("vid")).distinct())
     n_seeds = s.count()  # setup scalar
-    v = s.select("vid", F.lit(1.0 / n_seeds).alias("m")) \
-         .transform(eager_checkpoint)
+    if n_seeds == 0:
+        e.unpersist()
+        return s.select("vid", F.lit(0.0).alias("score"))
+    loop = SuperstepLoop(spark, "heat_kernel", None, n_terms)
+    v, _ = loop.commit(s.select("vid", F.lit(1.0 / n_seeds).alias("m")))
     acc = v.select("vid", (F.lit(coefs[0]) * F.col("m")).alias("score"))
-    for k in range(1, n_terms + 1):
-        v = (v.join(walk, "vid")
-             .select(F.col("dst").alias("vid"),
-                     (F.col("m") * F.col("p")).alias("m"))
-             .groupBy("vid").agg(F.sum("m").alias("m"))
-             .transform(eager_checkpoint))
-        acc = (acc.unionByName(
-                   v.select("vid", (F.lit(coefs[k]) * F.col("m"))
-                            .alias("score")))
-               .groupBy("vid").agg(F.sum("score").alias("score"))
-               .transform(eager_checkpoint))
+    for k in loop:
+        v = loop.checkpoint(
+            v.join(walk, "vid")
+            .select(F.col("dst").alias("vid"),
+                    (F.col("m") * F.col("p")).alias("m"))
+            .groupBy("vid").agg(F.sum("m").alias("m")))
+        acc, _ = loop.commit(
+            acc.unionByName(
+                v.select("vid", (F.lit(coefs[k + 1]) * F.col("m"))
+                         .alias("score")))
+            .groupBy("vid").agg(F.sum("score").alias("score")))
+    out = loop.finish(acc)
     e.unpersist()
-    return acc
+    return out

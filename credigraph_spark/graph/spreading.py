@@ -359,62 +359,50 @@ def ic_influence(edges: DataFrame, seeds: DataFrame, n_sims: int = 8,
     includes the seeds.
 
     Scale shape: ALL simulations advance in ONE frame keyed
-    (sim, vid) — the frontier join is a single (sim, src) co-partition
-    per round over the percolated edge set (|E| x n_sims rows, each a
-    pure per-row coin — no RNG state, no driver loop per sim), with
-    per-round eager localCheckpoint for lineage.
+    (sim, vid) — the keyed frontier BFS (``nhop.frontier_bfs``) over the
+    percolated edge set, its frontier join a single (sim, src)
+    co-partition per round (|E| x n_sims rows, each a pure per-row coin
+    — no RNG state, no driver loop per sim), one commit of the reach set
+    per round.
     """
     from credigraph_spark.graph.adjacency import clean_edges
+    from credigraph_spark.graph.nhop import frontier_bfs
 
     e = clean_edges(edges)
     spark = edges.sparkSession
     sims = spark.range(n_sims).select(F.col("id").alias("sim"))
+    alive = _live_edges(e, sims, p, seed)
+    loop = SuperstepLoop(spark, "ic", None, rounds)
+    reach = frontier_bfs(loop, alive.withColumnRenamed("src", "vid"),
+                         seeds.select("vid").distinct().crossJoin(sims)
+                         .select("sim", "vid"))
+    na = alive.groupBy("sim").agg(F.count("*").cast("long")
+                                  .alias("n_alive"))
+    nr = reach.groupBy("sim").agg(F.count("*").cast("long")
+                                  .alias("n_reached"))
+    out = loop.finish(
+        sims.join(na, "sim", "left").join(nr, "sim", "left")
+        .select("sim",
+                F.coalesce("n_alive", F.lit(0)).cast("long")
+                .alias("n_alive"),
+                F.coalesce("n_reached", F.lit(0)).cast("long")
+                .alias("n_reached")))
+    alive.unpersist()
+    return out
+
+
+def _live_edges(e: DataFrame, sims: DataFrame, p: float, seed: int) -> DataFrame:
+    """(sim, src, dst): the edges each simulation keeps alive — those
+    whose md5 coin for (seed, sim, src, dst) falls below ``p`` —
+    persisted."""
     frac = (F.conv(F.substring(
         F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("sim"),
                           F.col("src").cast("string"),
                           F.col("dst").cast("string"))),
         1, 15), 16, 10).cast("double") / F.lit(float(16 ** 15)))
-    alive = (e.crossJoin(sims)
-             .where(frac < F.lit(float(p)))
-             .select("sim", "src", "dst").persist())
-    reach = (seeds.select("vid").distinct().crossJoin(sims)
-             .select("sim", "vid").transform(eager_checkpoint))
-    frontier = reach
-    prev_frontier = None
-    for _ in range(rounds):
-        # ONE materialization per hop: the frontier is persisted and
-        # filled as a side effect of the reach checkpoint's union
-        # (two checkpoints per hop doubled the write volume — measured
-        # on the 20M-edge standalone harness)
-        nxt = (alive.join(frontier.select("sim",
-                                          F.col("vid").alias("src")),
-                          ["sim", "src"])
-               .select("sim", F.col("dst").alias("vid")).distinct()
-               .join(reach, ["sim", "vid"], "left_anti")
-               .persist())
-        reach = reach.unionByName(nxt).transform(eager_checkpoint)
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-        prev_frontier = nxt
-        frontier = nxt
-    if prev_frontier is not None:
-        prev_frontier.unpersist()
-    na = alive.groupBy("sim").agg(F.count("*").cast("long")
-                                  .alias("n_alive"))
-    nr = reach.groupBy("sim").agg(F.count("*").cast("long")
-                                  .alias("n_reached"))
-    out = (sims.join(na, "sim", "left").join(nr, "sim", "left")
-           .select("sim",
-                   F.coalesce("n_alive", F.lit(0)).cast("long")
-                   .alias("n_alive"),
-                   F.coalesce("n_reached", F.lit(0)).cast("long")
-                   .alias("n_reached")))
-    # materialize before releasing the caches: the returned lazy plan
-    # reads them, and the caller's first action would otherwise re-run
-    # the full pipeline against uncached inputs
-    out = out.transform(eager_checkpoint)
-    alive.unpersist()
-    return out
+    return (e.crossJoin(sims)
+            .where(frac < F.lit(float(p)))
+            .select("sim", "src", "dst").persist())
 
 
 def greedy_influence_max(edges: DataFrame, k: int = 3, n_cands: int = 8,
@@ -439,46 +427,35 @@ def greedy_influence_max(edges: DataFrame, k: int = 3, n_cands: int = 8,
     Monte-Carlo spread estimate of the prefix seed set).
 
     Scale shape: ALL (sim, candidate) BFS frontiers advance in ONE
-    frame keyed (sim, cand, vid) — rounds co-partitioned joins total,
-    regardless of candidate count; the reach table is persisted once
-    and each greedy round is one anti-join + bounded count + top-1
-    (the X237 discipline). Candidate and sim counts bound every
-    per-round structure.
+    frame keyed (sim, cand, vid) — the keyed frontier BFS
+    (``nhop.frontier_bfs``), ``rounds`` co-partitioned joins total,
+    regardless of candidate count; each greedy round is one anti-join +
+    bounded count + top-1 over that reach table, then one commit of the
+    covered set (the X237 discipline). Candidate and sim counts bound
+    every per-round structure.
     """
     from credigraph_spark.graph.adjacency import clean_edges
+    from credigraph_spark.graph.nhop import frontier_bfs
 
     e = clean_edges(edges)
     spark = edges.sparkSession
     sims = spark.range(n_sims).select(F.col("id").alias("sim"))
-    frac = (F.conv(F.substring(
-        F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("sim"),
-                          F.col("src").cast("string"),
-                          F.col("dst").cast("string"))),
-        1, 15), 16, 10).cast("double") / F.lit(float(16 ** 15)))
-    alive = (e.crossJoin(sims).where(frac < F.lit(float(p)))
-             .select("sim", "src", "dst").persist())
+    alive = _live_edges(e, sims, p, seed)
     cands = (e.groupBy(F.col("src").alias("cand"))
              .agg(F.count("*").alias("_d"))
              .orderBy(F.desc("_d"), F.asc("cand")).limit(n_cands)
              .select("cand"))
-    reach = (cands.crossJoin(sims)
-             .select("sim", "cand", F.col("cand").alias("vid"))
-             .transform(eager_checkpoint))
-    for _ in range(rounds):
-        ex = (alive.join(reach.select("sim", "cand",
-                                      F.col("vid").alias("src")),
-                         ["sim", "src"])
-              .select("sim", "cand", F.col("dst").alias("vid")))
-        reach = (reach.unionByName(ex).distinct()
-                 .transform(eager_checkpoint))
-    reach = reach.persist()
+    bfs = SuperstepLoop(spark, "greedy_im_reach", None, rounds)
+    reach = frontier_bfs(bfs, alive.withColumnRenamed("src", "vid"),
+                         cands.crossJoin(sims)
+                         .select("sim", "cand", F.col("cand").alias("vid")))
     alive.unpersist()
-    covered = spark.createDataFrame([], "sim LONG, vid LONG") \
-        .transform(eager_checkpoint)
+    picks = SuperstepLoop(spark, "greedy_im", None, k)
+    covered, _ = picks.commit(spark.createDataFrame([], "sim LONG, vid LONG"))
     picked: list[int] = []
     rows = []
     total = 0
-    for r in range(1, k + 1):
+    for r in picks:
         rem = reach.join(covered, ["sim", "vid"], "left_anti")
         if picked:
             rem = rem.where(~F.col("cand").isin(picked))
@@ -491,12 +468,14 @@ def greedy_influence_max(edges: DataFrame, k: int = 3, n_cands: int = 8,
         cand, marg = int(top[0]["cand"]), int(top[0]["marg"])
         picked.append(cand)
         total += marg
-        rows.append((r, cand, marg, total,
+        rows.append((r + 1, cand, marg, total,
                      round(total / n_sims, round_digits)))
-        covered = (covered.unionByName(
+        covered, _ = picks.commit(covered.unionByName(
             reach.where(F.col("cand") == cand).select("sim", "vid"))
-            .distinct().transform(eager_checkpoint))
-    reach.unpersist()
+            .distinct())
+    # the result is local: it reads no loop table
+    picks.finish()
+    bfs.finish()
     return spark.createDataFrame(
         rows, "round LONG, seed_vid LONG, marginal LONG, "
               "covered_total LONG, est_spread DOUBLE")

@@ -93,6 +93,14 @@ def _triangles(oriented: DataFrame) -> DataFrame:
 
 def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> tuple[DataFrame, int]:
     """Returns (per_vertex(vid, triangles), total_triangles)."""
+    result, total, _ = _counted(edges, num_partitions)
+    return result, total
+
+
+def _counted(edges: DataFrame,
+             num_partitions: int | None = None) -> tuple[DataFrame, int, DataFrame]:
+    """``triangle_count`` plus the measured canonical pair set it read,
+    which the degree-based operators reuse instead of rebuilding it."""
     spark = edges.sparkSession
     cnd, n = _measured_pairs(edges)
     shuffle_n = num_partitions or adaptive_partitions(n)
@@ -125,7 +133,7 @@ def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> tuple
         all_verts.join(per_vertex, "vid", "left")
         .select("vid", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles"))
     )
-    return result, total
+    return result, total, cnd
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:
@@ -137,9 +145,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     final division, so the result is bit-reproducible across engines.
     Returns (vid, deg, lcc).
     """
-    per_vertex, _ = triangle_count(edges)
-    deg = _degrees(_canonical_undirected(edges))
-    return per_vertex.join(deg, "vid").select(
+    per_vertex, _, cnd = _counted(edges)
+    return per_vertex.join(_degrees(cnd), "vid").select(
         "vid",
         "deg",
         F.when(
@@ -158,8 +165,13 @@ def global_transitivity(edges: DataFrame) -> DataFrame:
     simple graph: transitivity = 3·T / W with W = Σ_v C(deg_v, 2) — the
     global sibling of clustering_coefficient, exact integer moments and
     one final rounded division (closeness/eccentricity convention)."""
-    per_vertex, total = triangle_count(edges)
-    deg = _degrees(_canonical_undirected(edges))
+    _, total, cnd = _counted(edges)
+    return _transitivity(total, _degrees(cnd))
+
+
+def _transitivity(total: int, deg: DataFrame) -> DataFrame:
+    """The ``global_transitivity`` row from the triangle total and the
+    (vid, deg) table."""
     # all-integer: deg*(deg-1) is even, so the DIV is exact — doubles
     # would lose bits once a hub degree passes 2^26 (deg^2 > 2^53)
     wedges = deg.agg(
@@ -426,8 +438,9 @@ def clustering_null_model(edges: DataFrame) -> DataFrame:
     discipline: Σk² over a hub-heavy graph overflows int64 long before
     it overflows anyone's patience); the two divisions at the end are
     the only floats, rounded."""
-    gt = global_transitivity(edges)
-    deg = _degrees(_canonical_undirected(edges))
+    _, total, cnd = _counted(edges)
+    deg = _degrees(cnd)
+    gt = _transitivity(total, deg)
     dd = F.col("deg").cast("decimal(38,0)")
     mom = deg.agg(
         F.count("*").alias("n_vertices"),
@@ -688,8 +701,8 @@ def egonet_anomaly(edges: DataFrame, top_k: int = 20,
     moment aggregate broadcast back, a per-row residual expression,
     and ONE TakeOrderedAndProject for the top-k — no window over data.
     Returns (vid, n, e, resid), top_k rows."""
-    per, _ = triangle_count(edges)
-    deg = _degrees(_canonical_undirected(edges), "n")
+    per, _, cnd = _counted(edges)
+    deg = _degrees(cnd, "n")
     ego = (deg.join(per, "vid", "left")
            .select("vid", "n",
                    (F.col("n") + F.coalesce("triangles", F.lit(0)))

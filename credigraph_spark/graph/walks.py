@@ -14,17 +14,59 @@ Physical shape per step: one hash join (frontier ⋈ edges on src) and one
 struct-MIN aggregation per walk — partial-aggregatable, so a hub's
 candidate fan-out collapses map-side and no walk ever serializes a hot
 partition. State is one row per live walk; walks die at sinks
-(inner-join semantics). Each step is localCheckpointed: plans stay flat
-for arbitrary walk lengths.
+(inner-join semantics). Both samplers run one walk loop, ``_walk``, on
+the superstep driver (``graph/loop.py``): only the step plan differs.
+Each step's rows are kept for the result (plans stay flat for arbitrary
+walk lengths), the live-walk count rides an Observation on that action,
+and the result, the union of the steps, is materialized once at the end.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from credigraph_spark.graph.adjacency import clean_edges, undirected_simple
+from credigraph_spark.graph.loop import SuperstepLoop
 
 from credigraph_spark.session import eager_checkpoint
+
+
+def _walk(edges: DataFrame, seeds: DataFrame, walk_length: int,
+          walks_per_seed: int, algo: str,
+          step: Callable[[DataFrame, DataFrame, int], DataFrame]) -> DataFrame:
+    """The walk loop: step 0 puts walk ``widx`` of every seed on the seed
+    (a (start, widx, prev = null, vid, step) row); round k turns the
+    live walks' rows ``cur`` into their step-k rows with
+    ``step(cur, rel, k)``, rel being the cleaned (src, dst) edge set.
+    Stops after ``walk_length`` steps or once no walk is alive.
+    Returns (start, widx, step, vid)."""
+    rel = clean_edges(edges).select("src", "dst").persist()
+    loop = SuperstepLoop(edges.sparkSession, algo, None, walk_length)
+    cur = loop.setup(
+        seeds.select(F.col(seeds.columns[0]).alias("start")).distinct()
+        .select(
+            "start",
+            F.explode(F.sequence(
+                F.lit(0), F.lit(walks_per_seed - 1))).alias("widx"),
+        )
+        .withColumn("widx", F.col("widx").cast("long"))
+        .select("start", "widx", F.lit(None).cast("long").alias("prev"),
+                F.col("start").alias("vid"), F.lit(0).alias("step"))
+    )
+    steps = [cur]
+    for k in loop:
+        cur, m = loop.keep(loop.observe(step(cur, rel, k + 1),
+                                        F.count(F.lit(1)).alias("n")))
+        steps.append(cur)
+        loop.end_round((m["n"] or 0) == 0)
+    out = loop.finish(reduce(DataFrame.unionByName,
+                             [df.select("start", "widx", "step", "vid")
+                              for df in steps]))
+    rel.unpersist()
+    return out
 
 
 def deterministic_walks(
@@ -37,40 +79,22 @@ def deterministic_walks(
     """Returns (start, widx, step, vid): for each seed vertex and walk
     index, the vertex visited at each step (step 0 = the seed itself;
     a walk that hits a sink simply stops emitting rows)."""
-    rel = clean_edges(edges).select("src", "dst").persist()
-    cur = (
-        seeds.select(F.col(seeds.columns[0]).alias("start")).distinct()
-        .select(
-            "start",
-            F.explode(F.sequence(
-                F.lit(0), F.lit(walks_per_seed - 1))).alias("widx"),
-        )
-        .withColumn("widx", F.col("widx").cast("long"))
-        .select("start", "widx", F.col("start").alias("vid"),
-                F.lit(0).alias("step"))
-        .transform(eager_checkpoint)
-    )
-    out = cur
-    for step in range(1, walk_length + 1):
+    def step(cur: DataFrame, rel: DataFrame, k: int) -> DataFrame:
         h = F.md5(F.concat_ws(
             ":", F.lit(str(seed)), F.col("start").cast("string"),
-            F.col("widx").cast("string"), F.lit(str(step)),
+            F.col("widx").cast("string"), F.lit(str(k)),
             F.col("dst").cast("string")))
-        nxt = (
+        return (
             cur.join(rel, cur["vid"] == rel["src"])
             .groupBy("start", "widx")
             .agg(F.min(F.struct(h.alias("h"),
                                 F.col("dst").alias("dst"))).alias("m"))
             .select("start", "widx", F.col("m.dst").alias("vid"),
-                    F.lit(step).alias("step"))
-            .transform(eager_checkpoint)
+                    F.lit(k).alias("step"))
         )
-        if nxt.isEmpty():
-            break
-        out = out.unionByName(nxt)
-        cur = nxt
-    rel.unpersist()
-    return out.select("start", "widx", "step", "vid")
+
+    return _walk(edges, seeds, walk_length, walks_per_seed, "walks", step)
+
 
 def node2vec_walks(
     edges: DataFrame,
@@ -101,33 +125,20 @@ def node2vec_walks(
     join against the edge set keyed (prev, x) for the stay-near flag (the
     inherent second-order cost of node2vec), a per-walk window over the
     candidate fan-out (bounded by out-degree, never the graph), and a
-    min-aggregated pick. State is one row per live walk and each step is
-    localCheckpointed, as in :func:`deterministic_walks`.
+    min-aggregated pick. State is one row per live walk, each step kept
+    by the walk loop of :func:`deterministic_walks`.
 
     Returns (start, widx, step, vid); step 0 is the seed itself."""
-    rel = clean_edges(edges).select("src", "dst").persist()
-    tmark = rel.select(F.col("src").alias("prev"), F.col("dst").alias("x"),
-                       F.lit(True).alias("tn"))
-    cur = (
-        seeds.select(F.col(seeds.columns[0]).alias("start")).distinct()
-        .select(
-            "start",
-            F.explode(F.sequence(
-                F.lit(0), F.lit(walks_per_seed - 1))).alias("widx"),
-        )
-        .withColumn("widx", F.col("widx").cast("long"))
-        .select("start", "widx", F.lit(None).cast("long").alias("prev"),
-                F.col("start").alias("vid"), F.lit(0).alias("step"))
-        .transform(eager_checkpoint)
-    )
-    out = cur.select("start", "widx", "step", "vid")
     w_ord = (Window.partitionBy("start", "widx").orderBy("x")
              .rowsBetween(Window.unboundedPreceding, 0))
     w_all = Window.partitionBy("start", "widx")
-    for step in range(1, walk_length + 1):
+
+    def step(cur: DataFrame, rel: DataFrame, k: int) -> DataFrame:
+        tmark = rel.select(F.col("src").alias("prev"), F.col("dst").alias("x"),
+                           F.lit(True).alias("tn"))
         h = F.md5(F.concat_ws(
             ":", F.lit(str(seed)), F.col("start").cast("string"),
-            F.col("widx").cast("string"), F.lit(str(step))))
+            F.col("widx").cast("string"), F.lit(str(k))))
         frac = (F.conv(F.substring(h, 1, 15), 16, 10).cast("double")
                 / F.lit(float(16 ** 15)))
         alpha = (
@@ -146,20 +157,15 @@ def node2vec_walks(
             cand.withColumn("cum", F.sum("alpha").over(w_ord))
             .withColumn("tot", F.max("cum").over(w_all))
         )
-        nxt = (
+        return (
             scored.where(F.col("cum") >= frac * F.col("tot"))
             .groupBy("start", "widx")
             .agg(F.min("x").alias("nx"), F.max("vid").alias("v"))
             .select("start", "widx", F.col("v").alias("prev"),
-                    F.col("nx").alias("vid"), F.lit(step).alias("step"))
-            .transform(eager_checkpoint)
+                    F.col("nx").alias("vid"), F.lit(k).alias("step"))
         )
-        if nxt.isEmpty():
-            break
-        out = out.unionByName(nxt.select("start", "widx", "step", "vid"))
-        cur = nxt
-    rel.unpersist()
-    return out.select("start", "widx", "step", "vid")
+
+    return _walk(edges, seeds, walk_length, walks_per_seed, "node2vec", step)
 
 
 def closed_walk_census(edges: DataFrame) -> DataFrame:

@@ -56,10 +56,10 @@ def test_reclist_quality_k1_null_ild(spark):
 
 # every operator on the superstep driver's multi-phase and two-state loops
 # (scc, k-core, Louvain/Leiden, matching, HITS, SALSA), the normalized
-# power iterations (eigenvector, Fiedler, the spectral sweep), CC and the
-# triangle operators, which size their work from a measured count, on a
-# graph whose cleaned edge set is empty: each returns an empty result, none
-# raises
+# power iterations (eigenvector, Fiedler, the spectral sweep, OPIC's 1/n
+# cash), CC and the triangle operators, which size their work from a
+# measured count, on a graph whose cleaned edge set is empty: each returns
+# an empty result, none raises
 SELF_LOOPS_ONLY = {
     "scc": ("scc", lambda m, e: m.strongly_connected_components(e)[0]),
     "bowtie": ("scc", lambda m, e: m.bowtie_classes(e)),
@@ -85,6 +85,7 @@ SELF_LOOPS_ONLY = {
     "edge_embeddedness": ("triangles", lambda m, e: m.edge_embeddedness(e)),
     "k_truss": ("triangles", lambda m, e: m.k_truss(e, 3)[0]),
     "clique_percolation_k3": ("triangles", lambda m, e: m.clique_percolation_k3(e)),
+    "opic": ("pagerank", lambda m, e: m.opic(e)),
 }
 
 
@@ -94,3 +95,14 @@ def test_self_loops_only_input_gives_empty_result(spark, name):
     mod = importlib.import_module(f"credigraph_spark.graph.{mod_name}")
     e = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
     assert run(mod, e).count() == 0
+
+
+def test_heat_kernel_empty_seed_set(spark):
+    """No seed: no mass to diffuse (the 1/|S| start mass has no
+    denominator), so the result is empty."""
+    from credigraph_spark.graph.ppr import heat_kernel_scores
+
+    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    out = heat_kernel_scores(e, spark.createDataFrame([], "vid long"))
+    assert out.count() == 0
+    assert out.columns == ["vid", "score"]

@@ -222,6 +222,82 @@ def test_bfs_distances_goldens(spark):
     assert far == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
+def test_per_seed_distances_match_per_seed_bfs(spark):
+    """(seed, vid, dist) from EACH seed equals a separate Python BFS per
+    seed, directed and undirected, within the hop horizon; a seed absent
+    from the edges reaches only itself."""
+    from collections import deque
+
+    from credigraph_spark.graph import per_seed_distances
+
+    rng = random.Random(47)
+    edges = sorted({(rng.randrange(25), rng.randrange(25))
+                    for _ in range(45)})
+    seeds = [0, 3, 7, 99]
+    sdf = spark.createDataFrame([(s,) for s in seeds], ["vid"])
+
+    def bfs(seed, directed, max_hops):
+        nbrs: dict = {}
+        for a, b in edges:
+            nbrs.setdefault(a, set()).add(b)
+            if not directed:
+                nbrs.setdefault(b, set()).add(a)
+        dist, todo = {seed: 0}, deque([seed])
+        while todo:
+            u = todo.popleft()
+            if dist[u] == max_hops:
+                continue
+            for v in nbrs.get(u, ()):
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    todo.append(v)
+        return {(seed, v, d) for v, d in dist.items()}
+
+    for directed in (True, False):
+        got = {(r["seed"], r["vid"], r["dist"])
+               for r in per_seed_distances(edges_df(spark, edges), sdf,
+                                           max_hops=3,
+                                           directed=directed).collect()}
+        expect = set().union(*(bfs(s, directed, 3) for s in seeds))
+        assert got == expect, directed
+    assert {(99, 99, 0)} == {t for t in got if t[0] == 99}
+
+
+def test_ppr_batch_matches_python(spark):
+    """Batch PPR differential: every seed's walk restarts to that seed
+    alone, with its dangling mass (vertex 4 has no out-edge; seed 9 is
+    absent from the edges) restarted to the seed too."""
+    from credigraph_spark.graph import ppr_batch
+
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (2, 4), (1, 2), (5, 5)]
+    d, iters, seeds = 0.85, 4, [1, 3, 9]
+    got = {(r["seed"], r["vid"]): r["rank"]
+           for r in ppr_batch(
+               edges_df(spark, pairs),
+               spark.createDataFrame([(s,) for s in seeds], ["vid"]),
+               damping=d, max_iter=iters).collect()}
+
+    out: dict = {}
+    for a, b in set(pairs):
+        if a != b:
+            out.setdefault(a, []).append(b)
+    expect = {}
+    for s in seeds:
+        r = {s: 1.0}
+        for _ in range(iters):
+            nxt: dict = {s: 1.0 - d}
+            for u, x in r.items():
+                if u in out:
+                    for v in out[u]:
+                        nxt[v] = nxt.get(v, 0.0) + d * x / len(out[u])
+                else:
+                    nxt[s] += d * x
+            r = nxt
+        expect.update({(s, v): x for v, x in r.items()})
+    assert got.keys() == expect.keys()
+    assert all(abs(got[k] - expect[k]) < 1e-12 for k in expect), (got, expect)
+
+
 def test_personalized_pagerank_matches_python(spark):
     """Differential vs a direct dict implementation of the PPR recurrence
     (dangling mass restarts to the seed distribution)."""

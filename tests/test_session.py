@@ -5,6 +5,7 @@ checkpoint stats strip."""
 from __future__ import annotations
 
 import ast
+import hashlib
 import importlib
 import logging
 from pathlib import Path
@@ -40,6 +41,13 @@ EDGES7 = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4)]
 # a 41-vertex path: CC needs several pointer-jumping rounds, sssp's
 # frontier stays non-empty for 40 rounds
 PATH41 = [(i, i + 1) for i in range(40)]
+
+
+# a path whose md5 priorities (mis.py, seed 7) rise along it: each Luby
+# round settles only its two lowest active vertices, so MIS runs 12 rounds
+_BY_PRIORITY = sorted(range(24),
+                      key=lambda v: hashlib.md5(f"7:{v}".encode()).hexdigest())
+LUBY_PATH = list(zip(_BY_PRIORITY, _BY_PRIORITY[1:]))
 
 
 def _path(e):
@@ -84,6 +92,49 @@ LOOPS = {
                  lambda m, e, s, k: m.coreness(e, rounds_per_k=k)),
     "greedy_matching": ("credigraph_spark.graph.matching",
                         lambda m, e, s, k: m.greedy_matching(_path(e), rounds=k)),
+    "ppr_batch": ("credigraph_spark.graph.ppr",
+                  lambda m, e, s, k: m.ppr_batch(e, s.select("vid"), max_iter=k)),
+    "heat_kernel": ("credigraph_spark.graph.ppr",
+                    lambda m, e, s, k: m.heat_kernel_scores(e, s.select("vid"),
+                                                            n_terms=k)),
+    "opic": ("credigraph_spark.graph.pagerank",
+             lambda m, e, s, k: m.opic(e, rounds=k)),
+    "hitting_time": ("credigraph_spark.graph.nhop",
+                     lambda m, e, s, k: m.truncated_hitting_time(
+                         e, s.select("vid"), rounds=k)),
+    "bfs_path": ("credigraph_spark.graph.nhop",
+                 lambda m, e, s, k: m.bfs_distances(_path(e), s.select("vid"), k)),
+    "per_seed_path": ("credigraph_spark.graph.nhop",
+                      lambda m, e, s, k: m.per_seed_distances(
+                          _path(e), s.select("vid"), k)),
+    "nhop_path": ("credigraph_spark.graph.nhop",
+                  lambda m, e, s, k: m.n_hop_subgraph(_path(e), s.select("vid"), k)[0]),
+    "ic_influence": ("credigraph_spark.graph.spreading",
+                     lambda m, e, s, k: m.ic_influence(e, s.select("vid"), p=0.9,
+                                                       rounds=k)),
+    "deterministic_walks": ("credigraph_spark.graph.walks",
+                            lambda m, e, s, k: m.deterministic_walks(
+                                e, s.select("vid"), walk_length=k)),
+    "node2vec_walks": ("credigraph_spark.graph.walks",
+                       lambda m, e, s, k: m.node2vec_walks(
+                           e, s.select("vid"), walk_length=k, p=0.5, q=2.0)),
+    "dag_levels_path": ("credigraph_spark.graph.dag",
+                        lambda m, e, s, k: m.dag_levels(_path(e), max_rounds=k)[0]),
+    "mis": ("credigraph_spark.graph.mis",
+            lambda m, e, s, k: m.maximal_independent_set(
+                edges_df(e.sparkSession, LUBY_PATH), rounds=k)[0]),
+    "coloring": ("credigraph_spark.graph.coloring",
+                 lambda m, e, s, k: m.luby_coloring(e, n_colors=k)),
+    "betweenness_path": ("credigraph_spark.graph.betweenness",
+                         lambda m, e, s, k: m.betweenness_from_seeds(
+                             _path(e), s.select("vid"), max_hops=k)),
+    "weighted_betweenness": ("credigraph_spark.graph.betweenness",
+                             lambda m, e, s, k: m.weighted_betweenness_from_seeds(
+                                 e.withColumn("w", F.lit(1.0)), s.select("vid"),
+                                 max_rounds=k)),
+    "msf": ("credigraph_spark.graph.mst",
+            lambda m, e, s, k: m.boruvka_msf(_path(e).withColumn("w", F.col("src") % 3),
+                                             max_rounds=k)),
     # flat guards: these loops already release their superseded states
     "lpa": ("credigraph_spark.graph.lpa",
             lambda m, e, s, k: m.label_propagation(e, max_iter=k)[0]),
@@ -305,7 +356,8 @@ GRAPH_MODULES = sorted(p.stem for p in Path(loop_mod.__file__).parent.glob("*.py
                        if p.stem != "loop")
 # the modules whose loops run on the driver
 DRIVER = {"anf", "components", "katz", "lpa", "pagerank", "ppr", "spreading",
-          "sssp", "wl", "scc", "kcore", "louvain", "matching", "hits", "salsa"}
+          "sssp", "wl", "scc", "kcore", "louvain", "matching", "hits", "salsa",
+          "betweenness", "coloring", "dag", "mis", "mst", "nhop", "walks"}
 
 
 @pytest.mark.parametrize("name", GRAPH_MODULES)
