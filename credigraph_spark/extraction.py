@@ -12,6 +12,14 @@ Mirrors the reference's two Spark jobs re-expressed Spark-first:
   single-partition bottleneck; we keep its dense-sorted-ID semantics without
   ever collapsing to one partition).
 
+``build_graph`` does each piece of that work once: the extractor runs once
+per file (``explode_outer``, so the optimizer infers no ``size(refs) > 0``
+filter that would evaluate the extractor a second time below the
+projection), the named edges and the vertex table are each materialized
+once, the ranges of the ID assignment are sized from the named-edge count
+observed by the first materialization, and the distinct names are
+shuffled once (by range).
+
 Per-row invariant vs the reference: sha256(content) equality — computed
 JVM-side with ``F.sha2`` (codegen, no UDF).
 """
@@ -19,12 +27,17 @@ JVM-side with ``F.sha2`` (codegen, no UDF).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql.window import Window
 
 # One reference per line: `import|require|use org1234/lib000042`.
 REF_PATTERN = r"(?m)^(?:import|require|use)\s+([A-Za-z0-9_\-\.]+/[A-Za-z0-9_\-\.]+)\s*$"
+
+# monotonically_increasing_id's layout: the row's position in its partition
+# sits in the low 33 bits, the partition index above them.
+_POS_BITS = 33
+_POS_MASK = (1 << _POS_BITS) - 1
 
 
 @F.pandas_udf(ArrayType(StringType()))
@@ -57,7 +70,8 @@ def extract_edges_named(repos: DataFrame, langs: list[str] | None = None,
     surface, and the shape a real HTML/WAT parser plugs into) or "sql"
     (``regexp_extract_all`` — whole-stage codegen, zero Python workers;
     same results, same regex, strictly cheaper when the extraction IS a
-    regex; measured 2x faster and better-scaling on the extraction bench).
+    regex; ``build_graph`` with it measured 1.6x faster than with the
+    pandas UDF on bench.py's sf0.1 extraction leaves at local[4]).
     """
     df = repos
     if langs:
@@ -68,9 +82,12 @@ def extract_edges_named(repos: DataFrame, langs: list[str] | None = None,
         refs = _extract_refs(F.col("content"))
     else:
         raise ValueError(f"unknown extractor: {extractor}")
+    # explode_outer, not explode: for explode(refs) the optimizer infers a
+    # size(refs) > 0 filter and pushes it below the projection, where it
+    # evaluates the extractor a second time. The null row explode_outer
+    # emits for a file without references fails the filter below.
     edges = (
-        df.select(F.col("repo").alias("s"), refs.alias("refs"))
-        .select("s", F.explode("refs").alias("t"))
+        df.select(F.col("repo").alias("s"), F.explode_outer(refs).alias("t"))
         .where(F.col("t").isNotNull() & (F.length("t") > 0))
     )
     if dedup:
@@ -83,16 +100,16 @@ def assign_vertex_ids(edges_named: DataFrame, name_cols: tuple[str, str] = ("s",
     """Distinct endpoint union -> dense sorted IDs ``(name string, id long)``.
 
     Same contract as hostlinks_to_graph.py:112-157 (IDs dense, ordered by
-    name) but fully distributed:
+    name) but fully distributed, shuffling the distinct names once:
       1. range-partition distinct names (global sort order across partitions),
-      2. per-partition local rank (window keyed by partition id — each window
-         group IS one partition, so no single-task bottleneck),
+      2. per-partition local rank: sort within each range, then
+         ``monotonically_increasing_id`` (high bits: the partition index,
+         low 33 bits: the row's position in it),
       3. tiny per-partition counts -> cumulative offsets, broadcast-joined.
 
     ``num_ranges`` defaults to max(32, input partitions) so the per-range
     sort task count SCALES with the input instead of capping at a fixed 32
-    (at web scale a fixed default would hand each of 32 tasks ~|V|/32
-    names to sort).
+    (``build_graph`` passes a count sized from the measured edges instead).
     """
     s, t = name_cols
     if num_ranges is None:
@@ -103,11 +120,12 @@ def assign_vertex_ids(edges_named: DataFrame, name_cols: tuple[str, str] = ("s",
         .where(F.col("name").isNotNull() & (F.length("name") > 0))
         .distinct()  # A3: hostlinks_to_graph.py:113-116
     )
-    parts = names.repartitionByRange(num_ranges, "name").withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    local = parts.withColumn(
-        "_rank", F.row_number().over(Window.partitionBy("_pid").orderBy("name"))
+    local = (
+        names.repartitionByRange(num_ranges, "name")
+        .sortWithinPartitions("name")
+        .select("name", F.monotonically_increasing_id().alias("_mid"))
+        .select("name", F.shiftright("_mid", _POS_BITS).alias("_pid"),
+                F.col("_mid").bitwiseAND(_POS_MASK).alias("_pos"))
     )
     counts = local.groupBy("_pid").agg(F.count("*").alias("_cnt"))
     # offsets table is O(num_ranges) rows — broadcast it. Constant
@@ -118,7 +136,7 @@ def assign_vertex_ids(edges_named: DataFrame, name_cols: tuple[str, str] = ("s",
     offsets = counts.withColumn("_off", F.coalesce(F.sum("_cnt").over(w), F.lit(0)))
     ids = (
         local.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
-        .select("name", (F.col("_off") + F.col("_rank") - F.lit(1)).cast("long").alias("id"))
+        .select("name", (F.col("_off") + F.col("_pos")).cast("long").alias("id"))
     )
     return ids
 
@@ -146,16 +164,29 @@ def build_graph(repos: DataFrame, langs: list[str] | None = None,
                 extractor: str = "pandas") -> tuple[DataFrame, DataFrame]:
     """repos -> (vertices(name,id), edges(src,dst)) — the full M1 pipeline.
 
-    The named-edge table is materialized ONCE (eager localCheckpoint):
-    it feeds three consumers (the vertex-name distinct and both sides of
-    the ID join), each of which otherwise re-runs the extractor UDF +
-    explode + dedup over the corpus — measured 3x the extraction pass at
-    bench scale."""
-    from credigraph_spark.session import eager_checkpoint
+    Each piece of work runs once:
 
-    named = extract_edges_named(repos, langs=langs,
-                                extractor=extractor).transform(eager_checkpoint)
-    vertices = assign_vertex_ids(named, num_ranges=num_ranges)
+    * the named-edge table is materialized ONCE (eager localCheckpoint),
+      with the extractor evaluated once per file; it feeds three consumers
+      (the vertex-name distinct and both sides of the ID join), each of
+      which would otherwise re-run the extractor + explode + dedup;
+    * an Observation on that checkpoint counts the named edges, and
+      ``num_ranges=None`` means ranges sized from that count
+      (``adaptive_partitions``) — no extra job;
+    * the vertex table is materialized once, so the edge join and the
+      caller both read it and the ID assignment does not run again
+      inside the edge plan.
+
+    The returned edge table stays lazy."""
+    from credigraph_spark.session import adaptive_partitions, eager_checkpoint
+
+    obs = Observation("named_edges")
+    named = eager_checkpoint(
+        extract_edges_named(repos, langs=langs, extractor=extractor)
+        .observe(obs, F.count(F.lit(1)).alias("n")))
+    if num_ranges is None:
+        num_ranges = adaptive_partitions(obs.get["n"])
+    vertices = eager_checkpoint(assign_vertex_ids(named, num_ranges=num_ranges))
     edges = edges_to_ids(named, vertices)
     return vertices, edges
 
@@ -165,11 +196,11 @@ def extract_with_metrics(repos: DataFrame, langs: list[str] | None = None):
     analog of the reference's accumulator counters, sparkcc.py:174-183 /
     wat_extract_links.py:283-316 — records processed, links extracted —
     but collected through Spark's metrics channel, not a side effect).
+    The extraction is ``extract_edges_named``'s plan over the observed
+    input.
 
     Returns (edges_df, observation); read ``observation.get`` AFTER the
     first action on the returned DataFrame."""
-    from pyspark.sql import Observation
-
     obs = Observation("extraction_metrics")
     df = repos
     if langs:
@@ -179,13 +210,7 @@ def extract_with_metrics(repos: DataFrame, langs: list[str] | None = None):
         F.count(F.lit(1)).alias("records_processed"),
         F.sum(F.length("content")).alias("bytes_scanned"),
     )
-    edges = (
-        observed.select(F.col("repo").alias("s"), _extract_refs(F.col("content")).alias("refs"))
-        .select("s", F.explode("refs").alias("t"))
-        .where(F.col("t").isNotNull() & (F.length("t") > 0))
-        .dropDuplicates(["s", "t"])
-    )
-    return edges, obs
+    return extract_edges_named(observed), obs
 
 
 def extract_json_fields(df: DataFrame, json_col: str, schema: str,

@@ -12,6 +12,7 @@ from credigraph_spark.extraction import (
     build_graph,
     content_hashes,
     extract_edges_named,
+    extract_with_metrics,
 )
 
 SEED, N_REPOS, FILES = 42, 40, 2
@@ -82,8 +83,6 @@ def test_lang_filter_prunes_before_udf(spark):
 
 
 def test_extract_with_metrics_observation(spark):
-    from credigraph_spark.extraction import extract_with_metrics
-
     df = _repos_df(spark)
     edges, obs = extract_with_metrics(df)
     n = edges.count()
@@ -91,3 +90,51 @@ def test_extract_with_metrics_observation(spark):
     assert got["records_processed"] == N_REPOS * FILES
     assert got["bytes_scanned"] > 0
     assert n == len(corpus.expected_edges(SEED, N_REPOS, FILES))
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_extractor_evaluated_once_per_file(spark, tmp_path):
+    """For explode(refs) the optimizer infers a size(refs) > 0 filter and
+    pushes it below the projection, which evaluates the extractor twice;
+    every extraction entry point must evaluate it once. Parquet-backed: on
+    a local relation the sql extractor is constant-folded."""
+    path = str(tmp_path / "repos")
+    _repos_df(spark).write.parquet(path)
+    repos = spark.read.parquet(path)
+    metered, _ = extract_with_metrics(repos)
+    for df in (extract_edges_named(repos, extractor="pandas"), metered):
+        assert _optimized(df).count("ArrowEvalPython") == 1
+    sql = _optimized(extract_edges_named(repos, extractor="sql"))
+    assert sql.count("regexp_extract_all") == 1
+
+
+def test_edge_plan_reads_the_materialized_vertex_table(spark):
+    """The ID assignment (range repartition, offset window) runs once, when
+    build_graph materializes the vertex table, not again in the edge plan."""
+    _, edges = build_graph(_repos_df(spark))
+    plan = _optimized(edges)
+    assert "Window" not in plan
+    assert "RepartitionByExpression" not in plan
+
+
+def test_measured_ranges_match_fixed_ranges(spark):
+    """num_ranges=None (sized from the observed named-edge count: 4 ranges
+    on this fixture) gives the same IDs and edges as 7 fixed ranges."""
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    v_measured, e_measured = build_graph(_repos_df(spark))
+    v_fixed, e_fixed = build_graph(_repos_df(spark), num_ranges=7)
+    assert rows(v_measured) == rows(v_fixed)
+    assert rows(e_measured) == rows(e_fixed)
+
+
+def test_corpus_without_references_builds_an_empty_graph(spark):
+    pdf = corpus.repos_pdf(SEED, 6, 2)
+    pdf["content"] = "def main():\n    return 0\n"
+    vertices, edges = build_graph(spark.createDataFrame(pdf))
+    assert vertices.count() == 0
+    assert edges.count() == 0
